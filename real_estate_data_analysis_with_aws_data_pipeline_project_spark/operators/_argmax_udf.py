@@ -28,25 +28,16 @@ from pyspark.sql.functions import pandas_udf
 
 def make_nearest_seed_udf(seed_ids, seed_vecs, seed_nrms) -> "Column":
     ids = np.asarray(seed_ids, dtype=np.int64)  # sorted ascending
-    w = np.asarray(
-        [np.asarray(s, dtype=np.float32) for s in seed_vecs], dtype=np.float32
-    ).astype(np.float64)  # (k, dim)
+    w = _widen(seed_vecs)  # (k, dim)
     sn = np.asarray(seed_nrms, dtype=np.float64)  # (k,)
 
     @pandas_udf("long")
     def _nearest(vecs: pd.Series, nrms: pd.Series) -> pd.Series:
         if len(vecs) == 0:
             return pd.Series([], dtype="int64")
-        v = np.asarray(
-            [np.asarray(x, dtype=np.float32) for x in vecs], dtype=np.float32
-        ).astype(np.float64)  # (rows, dim)
-        acc = np.zeros((v.shape[0], w.shape[0]), dtype=np.float64)
-        for d in range(w.shape[1]):  # dim-order accumulation = fold order
-            acc += v[:, d : d + 1] * w[None, :, d]
-        n = np.asarray(nrms, dtype=np.float64)[:, None]
-        denom = n * sn[None, :]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where((n > 0) & (sn[None, :] > 0), acc / denom, 0.0)
+        cos = _cos_block(
+            _widen(vecs), np.asarray(nrms, dtype=np.float64), w, sn
+        )
         cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
         return pd.Series(ids[np.argmax(cos, axis=1)])
 
@@ -91,10 +82,7 @@ def make_range_pairs_udf(probe_ids, probe_vecs, probe_nrms, tau) -> "Column":
     near-miss pairs are re-judged exactly by the JVM round. Self-pairs
     are excluded by id, mirroring the join's <> condition."""
     q_ids = np.asarray(probe_ids, dtype=np.int64)
-    q_w = np.asarray(
-        [np.asarray(s, dtype=np.float32) for s in probe_vecs],
-        dtype=np.float32,
-    ).astype(np.float64)  # float32-sourced embeddings, widened like cast
+    q_w = _widen(probe_vecs)  # float32-sourced, widened like cast
     q_n = np.asarray(probe_nrms, dtype=np.float64)
     cut = tau - 1e-6
 
@@ -132,10 +120,7 @@ def make_blocked_pairs_udf(
     that evaluated the interpreted cosine fold twice per pair."""
     p_ids = np.asarray(probe_ids, dtype=np.int64)
     p_lab = np.asarray(probe_labels)
-    p_w = np.asarray(
-        [np.asarray(s, dtype=np.float32) for s in probe_vecs],
-        dtype=np.float32,
-    ).astype(np.float64)
+    p_w = _widen(probe_vecs)
     p_n = np.asarray(probe_nrms, dtype=np.float64)
     cut = tau - 1e-6
 

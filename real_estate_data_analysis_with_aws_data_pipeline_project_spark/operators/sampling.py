@@ -20,7 +20,7 @@ pre-aggregate with a salted two-level top-N).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.scalar import deterministic_order_key
@@ -56,11 +56,3 @@ def stratified_sample_seeded(
         .drop("rn")
     )
 
-
-def sample_fraction_by_key(
-    df: DataFrame, strata_col: str, fractions: dict, seed: int = 42
-) -> DataFrame:
-    """Approximate per-stratum fraction sampling (Bernoulli per row, no
-    shuffle at all) — the scale-friendly alternative when exact-N is
-    not required."""
-    return df.sampleBy(strata_col, fractions, seed)

@@ -115,23 +115,3 @@ def project_signs_pandas(col: str, planes: list[list[float]]) -> Column:
 
     return make_signs_udf(planes)(col)
 
-
-def sign_bucket(a: Column, n_dims: int) -> Column:
-    """Axis-aligned sign-LSH bucket: the sign bits of the first
-    n_dims coordinates as a bit string. For roughly isotropic
-    embeddings this partitions the space into 2^n_dims cosine-coherent
-    buckets — the cheap ANN path (an equi-join key, no shuffle of the
-    full cross product)."""
-    bits = [
-        F.when(F.element_at(a, i + 1) >= 0, F.lit("1")).otherwise(F.lit("0"))
-        for i in range(n_dims)
-    ]
-    return F.concat(*bits)
-
-
-def sign_bucket_sql(a: str, n_dims: int) -> str:
-    parts = " || ".join(
-        f"(CASE WHEN {a}[{i + 1}] >= 0 THEN '1' ELSE '0' END)"
-        for i in range(n_dims)
-    )
-    return f"({parts})"

@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from .functions.scalar import deterministic_order_key
 from .operators import text as X
+from .operators.rank_prefix import bucket_offsets
 from .queries_dedup import MINHASH_PAIRS_ORACLE, SHINGLES_SQL, cached_shingles
 from .registry import register
 from .sources.catalog import load_table
@@ -121,12 +122,7 @@ def corpus_pack_token_shards(spark, sf_dir):
     # Pass 1: per-range totals — a tiny (≤256 rows) aggregate; its
     # prefix offsets are computed on the driver (metadata-scale, like
     # AQE stats) and shipped back as a broadcast join.
-    totals = sized.groupBy("rng").agg(F.sum("n_tokens").alias("rng_tokens"))
-    offsets, running = [], 0
-    for row in sorted(totals.collect(), key=lambda r: r["rng"]):
-        offsets.append((row["rng"], running))
-        running += row["rng_tokens"]
-    off_df = spark.createDataFrame(offsets, "rng string, rng_offset bigint")
+    joined, _total = bucket_offsets(spark, sized, F.sum("n_tokens"))
 
     # Pass 2: per-range parallel cumsum + broadcast offset = global cumsum.
     w = (
@@ -134,10 +130,10 @@ def corpus_pack_token_shards(spark, sf_dir):
         .orderBy(F.col("ok"), F.col("doc_id"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    packed = sized.join(F.broadcast(off_df), "rng").withColumn(
+    packed = joined.withColumn(
         "shard",
         F.floor(
-            (F.col("rng_offset") + F.sum("n_tokens").over(w) - 1) / _SHARD_BUDGET
+            (F.col("off") + F.sum("n_tokens").over(w) - 1) / _SHARD_BUDGET
         ).cast("bigint"),
     )
     return packed.groupBy("shard").agg(
@@ -497,7 +493,6 @@ def corpus_weighted_doc_sample(spark, sf_dir):
 
 _CURATE_MIN_TOKENS = 10
 _CURATE_MAX_PUNCT = 0.3
-_CURATE_JACCARD = 0.5
 
 _CURATION_ORACLE = f"""
     WITH base AS (
@@ -1168,21 +1163,16 @@ def corpus_session_pack_shards(spark, sf_dir):
         ok.alias("ok"),
         F.substring(ok, 1, 2).alias("rng"),
     )
-    totals = keyed.groupBy("rng").agg(F.sum("n_events").alias("rng_events"))
-    offsets, running = [], 0
-    for row in sorted(totals.collect(), key=lambda r: r["rng"]):
-        offsets.append((row["rng"], running))
-        running += row["rng_events"]
-    off_df = spark.createDataFrame(offsets, "rng string, rng_offset bigint")
+    joined, _total = bucket_offsets(spark, keyed, F.sum("n_events"))
     w = (
         Window.partitionBy("rng")
         .orderBy("ok", "user_id", "start_us")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    packed = keyed.join(F.broadcast(off_df), "rng").withColumn(
+    packed = joined.withColumn(
         "shard",
         F.floor(
-            (F.col("rng_offset") + F.sum("n_events").over(w) - 1)
+            (F.col("off") + F.sum("n_events").over(w) - 1)
             / _SESSION_PACK_BUDGET
         ).cast("bigint"),
     )

@@ -11,6 +11,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .functions.scalar import hex_chunk_int_sql
+from .operators.rank_prefix import (
+    _bucket_order_stats,
+    _rng_bucketed,
+    bucket_offsets,
+    bucket_prefix_cells,
+)
 from .registry import register
 from .sources.catalog import load_table
 
@@ -6101,14 +6107,6 @@ def events_srm_daily_trace(spark, sf_dir):
 
 _QTE_PCTS = (25, 50, 75, 90)
 _WINS_CAP_PCT = 95
-# One home for the two-pass rank machinery since the r14 review
-# (operators/rank_prefix.py); re-exported here because the kernel
-# grew up in this module and historical imports target it.
-from .operators.rank_prefix import (  # noqa: E402
-    _SPEND_RANGES,
-    _rng_bucketed,
-    bucket_prefix_cells,
-)
 
 _USER_SPEND_CTE = f"""u AS (
         SELECT user_id,
@@ -6150,54 +6148,6 @@ def _user_spend_split(spark, sf_dir):
             "m",
         )
     )
-
-
-def _bucket_order_stats(spark, g, ranks_for):
-    """Exact k-th order statistics without a global window — the
-    equidepth two-pass pattern generalized to named rank targets.
-
-    ``g`` is (grp, m, user_id) with m ≥ 0; ``ranks_for`` is a
-    callable n_by -> {grp: [(tag, rank_1based)]}, invoked with the
-    per-group totals DERIVED FROM the pass-1 bucket counts (r13
-    review: a separate count aggregate was a redundant scan). Pass 1
-    aggregates counts per (grp, rng) bucket (≤ _SPEND_RANGES buckets
-    — metadata-scale, collected like corpus_global_shuffle's
-    offsets); the driver walks each group's bucket prefix to place
-    every target rank in its bucket with a residual; pass 2 ranks
-    WITHIN target buckets only (window fan-in = one bucket's
-    density) and keeps the residual-th row. Returns the
-    (grp, tag, m) DataFrame — one row per placed target — plus the
-    n_by dict."""
-    g = _rng_bucketed(g)
-    counts = g.groupBy("grp", "rng").count().collect()
-    by_grp: dict = {}
-    for r in counts:
-        by_grp.setdefault(r["grp"], []).append(
-            (int(r["rng"]), int(r["count"]))
-        )
-    n_by = {grp: sum(c for _, c in pairs) for grp, pairs in by_grp.items()}
-    ranks_by_grp = ranks_for(n_by)
-    targets = []
-    for grp, pairs in by_grp.items():
-        pairs.sort()
-        wanted = sorted(ranks_by_grp.get(grp, ()), key=lambda t: t[1])
-        prefix, i = 0, 0
-        for rng, cnt in pairs:
-            while i < len(wanted) and wanted[i][1] <= prefix + cnt:
-                targets.append((grp, rng, wanted[i][0], wanted[i][1] - prefix))
-                i += 1
-            prefix += cnt
-    tdf = spark.createDataFrame(
-        targets, schema="grp string, rng bigint, tag string, residual bigint"
-    )
-    wnd = Window.partitionBy("grp", "rng", "tag").orderBy("m", "user_id")
-    out = (
-        g.join(F.broadcast(tdf), ["grp", "rng"])
-        .withColumn("rn", F.row_number().over(wnd))
-        .where(F.col("rn") == F.col("residual"))
-        .select("grp", "tag", "m")
-    )
-    return out, n_by
 
 
 _QTE_ORACLE = f"""
@@ -6559,46 +6509,29 @@ _MWU_ORACLE = f"""
 """
 
 
-def _spend_rank_cells(spark, u):
-    """Compacted pooled spend distribution with exact prefix counts,
-    no global window: (m, na_m, nb_m, t, cb) where cb = pooled #users
-    with spend < m. Bucket totals (≤ _SPEND_RANGES rows) are collected
-    for a metadata-scale driver prefix (the equidepth convention);
-    within-bucket prefixes run in rng-partitioned windows whose
-    fan-in is one bucket's distinct-value density."""
-    cells = u.groupBy("m").agg(
-        F.sum(F.when(F.col("variant") == "a", 1).otherwise(0))
-        .cast("bigint")
-        .alias("na_m"),
-        F.sum(F.when(F.col("variant") == "b", 1).otherwise(0))
-        .cast("bigint")
-        .alias("nb_m"),
-        F.count("*").cast("bigint").alias("t"),
-    )
+def _spend_rank_cells(spark, cells):
+    """Pooled prefix counts over a compacted spend distribution, no
+    global window: ``cells`` is m-grain with ``t`` = #users at spend m
+    (plus any per-m cell columns); returns its columns plus cb =
+    pooled #users with spend < m. The bucket offsets come from the
+    shared ``bucket_offsets`` walk; within-bucket prefixes run in
+    rng-partitioned windows whose fan-in is one bucket's
+    distinct-value density."""
+    cols = cells.columns
     # distinct-value grain; feeds the max action, the bucket-total
     # collect, and the final job — checkpoint so the events scan +
-    # two aggregates run once (r13 review; survival_km convention)
-    cells = cells.localCheckpoint(eager=True)
-    cells = _rng_bucketed(cells)
-    bt = cells.groupBy("rng").agg(F.sum("t").alias("bt")).collect()
-    offsets, running = [], 0
-    for row in sorted(bt, key=lambda r: r["rng"]):
-        offsets.append((int(row["rng"]), running))
-        running += int(row["bt"])
-    off_df = spark.createDataFrame(offsets, schema="rng bigint, off bigint")
+    # aggregates run once (r13 review; survival_km convention)
+    cells = _rng_bucketed(cells.localCheckpoint(eager=True))
+    joined, _n = bucket_offsets(spark, cells, F.sum("t"))
     w = Window.partitionBy("rng").orderBy("m").rowsBetween(
         Window.unboundedPreceding, -1
     )
-    return (
-        cells.join(F.broadcast(off_df), "rng")
-        .withColumn(
-            "cb",
-            (
-                F.coalesce(F.sum("t").over(w), F.lit(0)) + F.col("off")
-            ).cast("bigint"),
-        )
-        .select("m", "na_m", "nb_m", "t", "cb")
-    )
+    return joined.withColumn(
+        "cb",
+        (F.coalesce(F.sum("t").over(w), F.lit(0)) + F.col("off")).cast(
+            "bigint"
+        ),
+    ).select(*cols, "cb")
 
 
 @register("events_mannwhitney_u", _MWU_ORACLE, headline=True)
@@ -6615,7 +6548,18 @@ def events_mannwhitney_u(spark, sf_dir):
     offsets) + rng-partitioned windows — no global window; the test
     statistic is a single-row reduction over five exact BIGINTs."""
     u = _user_spend_split(spark, sf_dir)
-    cum = _spend_rank_cells(spark, u)
+    cum = _spend_rank_cells(
+        spark,
+        u.groupBy("m").agg(
+            F.sum(F.when(F.col("variant") == "a", 1).otherwise(0))
+            .cast("bigint")
+            .alias("na_m"),
+            F.sum(F.when(F.col("variant") == "b", 1).otherwise(0))
+            .cast("bigint")
+            .alias("nb_m"),
+            F.count("*").cast("bigint").alias("t"),
+        ),
+    )
     s = cum.agg(
         F.sum("na_m").cast("bigint").alias("n_a"),
         F.sum("nb_m").cast("bigint").alias("n_b"),
@@ -9229,8 +9173,8 @@ def events_kruskal_wallis(spark, sf_dir):
     pooled prefix counts cb over the COMPACTED spend distribution via
     the two-pass bucket machinery (<= 4096 bucket totals collected
     for a metadata-scale driver prefix; within-bucket windows fan in
-    one bucket's value density — mirrors _spend_rank_cells, kept
-    inline so the pinned MWU/QTE paths stay untouched mid-window);
+    one bucket's value density — the _spend_rank_cells prefix shared
+    with the Mann–Whitney test);
     per-(value, cohort) counts join the m-grain prefix relation and
     collapse to ONE k-row cohort aggregate. The DuckDB oracle uses
     the naive unpartitioned window — the hash match proves the
@@ -9260,27 +9204,8 @@ def events_kruskal_wallis(spark, sf_dir):
     cg = ug.groupBy("m", "grp").agg(
         F.count("*").cast("bigint").alias("n_mg")
     )
-    cells = ug.groupBy("m").agg(F.count("*").cast("bigint").alias("t"))
-    cells = cells.localCheckpoint(eager=True)
-    cells = _rng_bucketed(cells)
-    bt = cells.groupBy("rng").agg(F.sum("t").alias("bt")).collect()
-    offsets, running = [], 0
-    for row in sorted(bt, key=lambda r: r["rng"]):
-        offsets.append((int(row["rng"]), running))
-        running += int(row["bt"])
-    off_df = spark.createDataFrame(offsets, schema="rng bigint, off bigint")
-    w = Window.partitionBy("rng").orderBy("m").rowsBetween(
-        Window.unboundedPreceding, -1
-    )
-    cum = (
-        cells.join(F.broadcast(off_df), "rng")
-        .withColumn(
-            "cb",
-            (
-                F.coalesce(F.sum("t").over(w), F.lit(0)) + F.col("off")
-            ).cast("bigint"),
-        )
-        .select("m", "t", "cb")
+    cum = _spend_rank_cells(
+        spark, ug.groupBy("m").agg(F.count("*").cast("bigint").alias("t"))
     )
     g = cg.join(cum, "m").groupBy("grp").agg(
         F.sum("n_mg").cast("bigint").alias("n_g"),

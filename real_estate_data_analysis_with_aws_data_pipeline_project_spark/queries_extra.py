@@ -1737,7 +1737,8 @@ def _cust_spend_prefix(spark, cust, fracs):
     base_cents, n, s); part_df carries (tag, part_cents) for the
     in-bucket partial (absent only when rank_k is 0 — a cut landing
     exactly on a bucket boundary sums that whole bucket as its
-    partial). Since the r14 review this is a one-cell
+    partial). n, s and rank_k are NULL when ``cust`` is empty, as
+    in the oracle. Since the r14 review this is a one-cell
     instantiation of the shared ``bucket_prefix_cells`` kernel
     (operators/rank_prefix.py) — the Qini query runs the same walk
     with a four-cell vector."""
@@ -1752,10 +1753,12 @@ def _cust_spend_prefix(spark, cust, fracs):
         [("cents", F.sum("m").cast("bigint"))],
         lambda n: {tag: (num * n) // den for tag, (num, den) in fracs.items()},
     )
-    s = totals[0]
+    # no customers: the oracle's totals are SUMs over an empty
+    # relation, so n, s and every rank cut are NULL, not 0
+    n, s = (n, totals[0]) if n else (None, None)
     tags_df = spark.createDataFrame(
         [
-            (tag, (num * n) // den, base[tag][0], n, s)
+            (tag, (num * n) // den if n else None, base[tag][0], n, s)
             for tag, (num, den) in fracs.items()
         ],
         "tag string, rank_k bigint, base_cents bigint, n bigint, s bigint",

@@ -26,7 +26,6 @@ _QF_MAX_TOKENS = 100_000
 _QF_MEAN_LEN_LO = 2.0
 _QF_MEAN_LEN_HI = 12.0
 _QF_MAX_PUNCT = 0.3
-_QF_MIN_STOPWORD_FRAC = 0.0  # this corpus has few 'the/and' tokens; gate >= 0
 
 _QF_ORACLE = f"""
     WITH sig AS (

@@ -325,7 +325,7 @@ def sketch_quantile_envelope(spark, sf_dir):
     correctly-rounded division back onto the stored grid);
     tests/test_r17.py asserts the recomputed doubles equal
     F.expr('percentile(...)') bit-for-bit before rounding."""
-    from .queries_events import _bucket_order_stats
+    from .operators.rank_prefix import _bucket_order_stats
     from .sources.catalog import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select("l_extendedprice")
@@ -347,6 +347,8 @@ def sketch_quantile_envelope(spark, sf_dir):
     ).localCheckpoint(eager=True)
 
     def _ranks(n_by):
+        if not n_by:
+            return {}
         n = n_by["all"]
         wanted = {}
         for q in _QS_QUANTILES:
@@ -358,6 +360,13 @@ def sketch_quantile_envelope(spark, sf_dir):
         return {"all": sorted(wanted.items(), key=lambda t: t[1])}
 
     os_, n_by = _bucket_order_stats(spark, g, _ranks)
+    if not n_by:
+        # empty lineitem: no exact quantiles (quantile_cont is NULL),
+        # and the rank guarantee holds vacuously
+        return spark.createDataFrame(
+            [(q, None, True) for q in _QS_QUANTILES],
+            "q double, exact_value double, within_rank_envelope boolean",
+        )
     n = n_by["all"]
     cents = {row["tag"]: int(row["m"]) for row in os_.collect()}
     exact_vals = []

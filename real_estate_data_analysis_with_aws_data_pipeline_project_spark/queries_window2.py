@@ -637,7 +637,6 @@ def features_time_decay_mean(spark, sf_dir):
 # --- GLOBAL equi-depth bins, two-pass (round 8) ------------------------------
 
 _GEQD_BINS = 16
-_GEQD_RANGES = 4096  # value-range buckets for the two-pass global rank
 
 _GEQD_ORACLE = f"""
     WITH o AS (
@@ -681,7 +680,7 @@ def features_global_equidepth_bins(spark, sf_dir):
     metadata-scale, the documented global-shuffle convention) and
     per-bucket rank windows whose fan-in is the value-density of one
     range. Integer ranks and cents end-to-end."""
-    from pyspark.sql import Window
+    from .operators.rank_prefix import _rng_bucketed, bucket_offsets
 
     # r17 (guide §5): the (orderkey, cents) projection feeds THREE
     # actions per invocation (max for the bucket width, the bucket
@@ -694,25 +693,14 @@ def features_global_equidepth_bins(spark, sf_dir):
         .cast("bigint")
         .alias("cents"),
     ).localCheckpoint(eager=True)
-    mx = o.agg(F.max("cents").alias("maxc")).first()["maxc"]
-    width = max(1, (int(mx) // _GEQD_RANGES) + 1)
-    o = o.withColumn("rng", F.expr(f"cents div {width}").cast("bigint"))
-    counts = (
-        o.groupBy("rng").agg(F.count("*").alias("c")).collect()
-    )  # ≤ _GEQD_RANGES rows — metadata-scale driver prefix, like
+    # ≤ 4096 bucket counts — metadata-scale driver prefix, like
     # corpus_global_shuffle's 256 offsets
-    offsets, running = [], 0
-    for row in sorted(counts, key=lambda r: r["rng"]):
-        offsets.append((int(row["rng"]), running))
-        running += row["c"]
-    n_total = running
-    off_df = spark.createDataFrame(
-        offsets, schema="rng bigint, off bigint"
+    joined, n_total = bucket_offsets(
+        spark, _rng_bucketed(o, "cents"), F.count("*")
     )
     w = Window.partitionBy("rng").orderBy("cents", "o_orderkey")
     ranked = (
-        o.join(F.broadcast(off_df), "rng")
-        .select(
+        joined.select(
             "cents",
             (F.row_number().over(w) + F.col("off")).alias("grank"),
         )
@@ -835,7 +823,6 @@ def features_woe_iv(spark, sf_dir):
 # the hex chunk with a 16-power polyfill (the sketch_count_min
 # pattern) to avoid from_hex/blob asymmetries.
 _FH_BUCKETS = 32
-_FH_FEATURES = ("seg", "nation")
 
 
 _FH_ORACLE = f"""
