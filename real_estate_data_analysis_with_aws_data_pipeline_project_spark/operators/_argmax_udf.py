@@ -1,23 +1,40 @@
-"""Arrow-batched nearest-seed argmax UDF (no ``from __future__ import
-annotations`` here: pandas_udf infers its eval type from REAL type
-hints, and the future-import would stringify them).
+"""Arrow-batched kernels over collected driver models (no ``from
+__future__ import annotations`` here: pandas_udf infers its eval type
+from REAL type hints, and the future-import would stringify them).
 
-Replaces the O(n×k) crossJoin→row_number argmax assignment with one
-vectorized kernel per Arrow batch. EXACT parity with the Catalyst
-fold / DuckDB list_sum pipeline is engineered, not hoped for:
+The collected-model path has two halves. On the driver,
+``collect_model`` turns a small model relation (seeds, probe sets,
+quantizer centroids, capped corpora) into one ascending-id list per
+column; ``session_cache.session_memo`` keeps models that outlive one
+call. On the workers, six ``pandas_udf`` kernels score each Arrow batch
+against the model shipped in their closure:
+
+- ``make_nearest_seed_udf``: rounded-cosine argmax over seeds
+  (semantic dedup);
+- ``make_two_level_nearest_udf``: coarse-cell probe, then argmax over
+  those cells' fine centroids (IVF assignment);
+- ``make_range_pairs_udf``: (probe, raw cosine) pairs above a
+  threshold (range search);
+- ``make_blocked_pairs_udf``: same-label, greater-id pairs above a
+  threshold (embedding-cosine dedup);
+- ``make_pq_encode_udf``: per-subspace nearest-codeword codes (PQ);
+- ``make_signs_udf``: random-hyperplane sign bits (sign-LSH).
+
+EXACT parity with the Catalyst fold / DuckDB list_sum pipeline is
+engineered, not hoped for:
 
 - float32 vectors widen to float64 exactly as elementwise
-  ``cast("double")`` does;
+  ``cast("double")`` does (``_widen``);
 - the dot products accumulate dimension-by-dimension across the whole
   batch — the identical left-to-right float64 addition chain as
   ``F.aggregate(zip_with(...))`` and DuckDB's generate_series
-  list_sum;
+  list_sum (``_dot_block``);
 - cosine = acc / (nrm * s_nrm) with the product formed first, the
   zero-norm guard mapping to 0.0 — the shared ``cosine``/
-  ``cosine_sql`` definition;
-- round(·, 6) half-away-from-zero on the scaled value, then argmax
-  over seed columns sorted ascending by seed_id — numpy's first-max
-  semantics reproduce the ``ORDER BY cos DESC, seed_id`` tiebreak.
+  ``cosine_sql`` definition (``_cos_block``);
+- ties resolve through model columns sorted ascending by id, so
+  numpy's first-max/first-min reproduces the oracles' ``ORDER BY
+  score, id`` tiebreaks.
 """
 
 import numpy as np
@@ -27,6 +44,10 @@ from pyspark.sql.functions import pandas_udf
 
 
 def make_nearest_seed_udf(seed_ids, seed_vecs, seed_nrms) -> "Column":
+    """Nearest seed per vector: round(cos, 6) half-away-from-zero on
+    the scaled value, then the first max over seeds sorted ascending by
+    seed_id — the oracle rounds before ranking (``ORDER BY cos DESC,
+    seed_id``)."""
     ids = np.asarray(seed_ids, dtype=np.int64)  # sorted ascending
     w = _widen(seed_vecs)  # (k, dim)
     sn = np.asarray(seed_nrms, dtype=np.float64)  # (k,)
@@ -51,19 +72,36 @@ def _cos_block(v, nrms, w, wn):
     IVF oracle's row_number ranks RAW cosines (only the emitted final
     cos_sim is rounded), unlike the semantic-dedup kernel above which
     mirrors an oracle that rounds before ranking."""
-    acc = np.zeros((v.shape[0], w.shape[0]), dtype=np.float64)
-    for d in range(w.shape[1]):  # dim-order accumulation = fold order
-        acc += v[:, d : d + 1] * w[None, :, d]
+    acc = _dot_block(v, w)
     n = nrms[:, None]
     denom = n * wn[None, :]
     with np.errstate(divide="ignore", invalid="ignore"):
         return np.where((n > 0) & (wn[None, :] > 0), acc / denom, 0.0)
 
 
+def _dot_block(v, w):
+    """Dot products (rows × model rows), accumulated dimension by
+    dimension: ``acc += v[dim] * w[dim]`` in dim order is exactly the
+    fold's ``(((0+x0)+x1)+...)`` float64 chain."""
+    acc = np.zeros((v.shape[0], w.shape[0]), dtype=np.float64)
+    for d in range(w.shape[1]):  # dim-order accumulation = fold order
+        acc += v[:, d : d + 1] * w[None, :, d]
+    return acc
+
+
 def _widen(vecs) -> np.ndarray:
     return np.asarray(
         [np.asarray(x, dtype=np.float32) for x in vecs], dtype=np.float32
     ).astype(np.float64)
+
+
+def _emit_pairs(model_ids, mask, cos) -> pd.Series:
+    """Per row, the (model id, RAW cosine) pairs its mask keeps."""
+    out = []
+    for r in range(mask.shape[0]):
+        cols = np.nonzero(mask[r])[0]
+        out.append([(int(model_ids[c]), float(cos[r, c])) for c in cols])
+    return pd.Series(out)
 
 
 def make_range_pairs_udf(probe_ids, probe_vecs, probe_nrms, tau) -> "Column":
@@ -95,13 +133,7 @@ def make_range_pairs_udf(probe_ids, probe_vecs, probe_nrms, tau) -> "Column":
         idv = np.asarray(ids, dtype=np.int64)
         cos = _cos_block(v, n, q_w, q_n)  # (rows, probes)
         mask = (cos >= cut) & (idv[:, None] != q_ids[None, :])
-        out = []
-        for r in range(len(v)):
-            cols = np.nonzero(mask[r])[0]
-            out.append(
-                [(int(q_ids[c]), float(cos[r, c])) for c in cols]
-            )
-        return pd.Series(out)
+        return _emit_pairs(q_ids, mask, cos)
 
     return _pairs
 
@@ -140,11 +172,7 @@ def make_blocked_pairs_udf(
             & (idv[:, None] < p_ids[None, :])
             & (lab[:, None] == p_lab[None, :])
         )
-        out = []
-        for r in range(len(v)):
-            cols = np.nonzero(mask[r])[0]
-            out.append([(int(p_ids[c]), float(cos[r, c])) for c in cols])
-        return pd.Series(out)
+        return _emit_pairs(p_ids, mask, cos)
 
     return _pairs
 
@@ -257,3 +285,28 @@ def make_two_level_nearest_udf(
         return pd.Series(best_cid)
 
     return _assign
+
+
+def make_signs_udf(planes) -> "Column":
+    """Sign-LSH bit string: one '1'/'0' per hyperplane for dot >= 0.
+    The planes are doubles and load as float64; the float32-sourced
+    vectors go through ``_widen``, so every bit matches the Catalyst
+    fold and DuckDB's list_dot_product."""
+    w = np.asarray(planes, dtype=np.float64)  # (n_planes, dim)
+
+    @pandas_udf("string")
+    def _signs(vecs: pd.Series) -> pd.Series:
+        if len(vecs) == 0:
+            return pd.Series([], dtype=object)
+        bits = np.where(_dot_block(_widen(vecs), w) >= 0, "1", "0")
+        return pd.Series(["".join(row) for row in bits])
+
+    return _signs
+
+
+def collect_model(df) -> list:
+    """Collect a model relation to the driver: rows sorted ascending by
+    the first column, returned as one list per column (empty lists
+    for an empty relation)."""
+    rows = sorted(df.collect(), key=lambda r: r[0])
+    return [[r[i] for r in rows] for i in range(len(df.columns))]

@@ -1,19 +1,25 @@
-"""Per-session persisted-relation cache (ADVICE r1 for shingles, r3 for
-the rest): queries that persist an intermediate relation consumed by
-multiple plan branches (simhash signatures, IVF centroids, PQ codebook,
-PageRank edges) must not re-``persist()`` a new copy on every
-invocation — bench's warm+timed double pass, the driver, and the test
-suite all call each query repeatedly, which otherwise leaks cached
-plans and triggers Spark's 'Asked to cache already cached data'
-re-cache churn.
+"""Per-session cache of relations and driver models (ADVICE r1 for
+shingles, r3 for the rest): queries that persist an intermediate
+relation consumed by multiple plan branches (simhash signatures, IVF
+centroids, PQ codebook, PageRank edges) must not re-``persist()`` a new
+copy on every invocation — bench's warm+timed double pass, the driver,
+and the test suite all call each query repeatedly, which otherwise
+leaks cached plans and triggers Spark's 'Asked to cache already cached
+data' re-cache churn.
 
-One cache keyed by ``(applicationId, name, sf_dir)``:
+Two layers over one store:
 
-- the same (name, sf_dir) within a session returns the already-persisted
-  DataFrame, so repeated invocations reuse one cache entry;
-- a new sf_dir (or a rebuilt session) for the same name evicts and
-  unpersists the stale entry, bounding cached storage to one live
-  relation per name.
+- ``session_memo`` is the keyed memo. It holds any value — persisted
+  DataFrames, and also the driver models that embedding operators
+  collect once and ship in a kernel's closure (IVF quantizer, semantic
+  seeds). Its key is ``(applicationId, name, sf_dir, fingerprint)``:
+  the same (name, sf_dir, file contents) within a session returns the
+  stored value; a new sf_dir, regenerated files or a rebuilt session
+  for the same name evicts the stale entry (unpersisting a DataFrame),
+  bounding the store to one live value per name.
+- ``session_cached`` is the persist/checkpoint step on top: it memoizes
+  the builder's relation materialized by ``persist()`` or an eager
+  ``localCheckpoint``.
 
 At warehouse scale the same role is played by materialized intermediate
 tables; locally this keeps executor storage bounded across a 173-query
@@ -23,10 +29,11 @@ suite run.
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-_CACHE: dict[tuple, DataFrame] = {}
+_CACHE: dict[tuple, Any] = {}
 
 
 def path_fingerprint(path: str) -> tuple[int, int]:
@@ -67,6 +74,36 @@ def _sf_fingerprint(sf_dir: str) -> tuple[int, int]:
     return mtime, size
 
 
+def session_memo(
+    spark: SparkSession,
+    name: str,
+    sf_dir: str,
+    builder: Callable[[], Any],
+) -> Any:
+    """Return the value stored for (name, sf_dir) in this session,
+    building it with ``builder`` on first use. Stale entries — a dead
+    session's, or this name's under another sf_dir or fingerprint — are
+    evicted first; evicted DataFrames are unpersisted."""
+    app = spark.sparkContext.applicationId
+    key = (app, name, sf_dir, _sf_fingerprint(sf_dir))
+    if key not in _CACHE:
+        stale = [
+            k
+            for k in _CACHE
+            if k[0] != app  # dead session's entries
+            or (k[1] == name and k != key)  # same name, other sf_dir
+        ]
+        for k in stale:
+            old = _CACHE.pop(k)
+            if isinstance(old, DataFrame):
+                try:
+                    old.unpersist()
+                except Exception:
+                    pass  # stopped session — nothing to release
+        _CACHE[key] = builder()
+    return _CACHE[key]
+
+
 def session_cached(
     spark: SparkSession,
     name: str,
@@ -91,25 +128,9 @@ def session_cached(
     persist remains right for relations whose consumers are few and
     heavy (the columnar cache reads faster and survives executor
     loss at warehouse scale)."""
-    app = spark.sparkContext.applicationId
-    key = (app, name, sf_dir, _sf_fingerprint(sf_dir))
-    df = _CACHE.get(key)
-    if df is None:
-        stale = [
-            k
-            for k in _CACHE
-            if k[0] != app  # dead session's entries
-            or (k[1] == name and k != key)  # same relation, other sf_dir
-        ]
-        for k in stale:
-            try:
-                _CACHE.pop(k).unpersist()
-            except Exception:
-                _CACHE.pop(k, None)  # stopped session — nothing to release
+
+    def materialize() -> DataFrame:
         built = builder()
-        df = (
-            built.localCheckpoint(eager=True) if checkpoint
-            else built.persist()
-        )
-        _CACHE[key] = df
-    return df
+        return built.localCheckpoint(eager=True) if checkpoint else built.persist()
+
+    return session_memo(spark, name, sf_dir, materialize)

@@ -56,6 +56,20 @@ def _daily_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _type_day_counts(
+    spark: SparkSession, sf_dir: str, alias: str = "c"
+) -> DataFrame:
+    """(event_type, day, <alias>) per-type daily event counts — the
+    calendar-bounded input of the CUSUM, trend, ACF, Fano, volume-
+    anomaly, EWMA, Holt, seasonal and weekday-strength queries; the
+    batch twin of ``streaming.jobs.psi_cube_day_totals``."""
+    return (
+        _events(spark, sf_dir)
+        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
+        .agg(F.count("*").cast("bigint").alias(alias))
+    )
+
+
 @register(
     "events_tumbling_window",
     """
@@ -1452,11 +1466,7 @@ def events_cusum_changepoint(spark, sf_dir):
     event stream."""
     from pyspark.sql import Window
 
-    ev = load_table(spark, sf_dir, "events")
-    dc = (
-        ev.groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
+    dc = _type_day_counts(spark, sf_dir)
     t = dc.groupBy("event_type").agg(
         F.sum("c").cast("bigint").alias("total"),
         F.count("*").cast("bigint").alias("nd"),
@@ -1580,12 +1590,7 @@ def events_trend_slope(spark, sf_dir):
 
     Scale: one map-side-combined daily aggregation; the regression
     runs on the (type, day) relation — calendar-bounded."""
-    ev = load_table(spark, sf_dir, "events")
-    dc = (
-        ev.groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.count("*").cast("bigint").alias("y"))
-    )
-    return trend_slope_from_day_counts(dc)
+    return trend_slope_from_day_counts(_type_day_counts(spark, sf_dir, alias="y"))
 
 
 def trend_slope_from_day_counts(dc):
@@ -1913,11 +1918,7 @@ def events_autocorrelation(spark, sf_dir):
     Scale: one map-side-combined daily aggregation over events; the
     lag window and the moment aggregation run on the (type, day)
     relation — calendar-bounded, never the event stream."""
-    ev = load_table(spark, sf_dir, "events")
-    dc = ev.groupBy(
-        "event_type", F.date_trunc("day", F.col("ts")).alias("day")
-    ).agg(F.count("*").cast("bigint").alias("c"))
-    return acf_from_day_counts(dc)
+    return acf_from_day_counts(_type_day_counts(spark, sf_dir))
 
 
 def acf_from_day_counts(dc):
@@ -2317,12 +2318,7 @@ def events_burstiness_fano(spark, sf_dir):
     one tiny moment aggregate over it; the variance/mean rational is
     exact int64 algebra with a single quantized IEEE division — see
     the module comment for the determinism contract."""
-    dc = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    return fano_from_day_counts(dc)
+    return fano_from_day_counts(_type_day_counts(spark, sf_dir))
 
 
 @register("streaming_fano_burstiness", _FANO_ORACLE)
@@ -2624,12 +2620,7 @@ def dq_volume_anomaly(spark, sf_dir):
     Scale: one map-side-combined daily aggregation over events, then
     a trailing ROWS window PARTITIONED by event type over the
     calendar-bounded day series. Output is (type × day) rows."""
-    dc = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    return volume_anomaly_from_day_counts(dc)
+    return volume_anomaly_from_day_counts(_type_day_counts(spark, sf_dir))
 
 
 def volume_anomaly_from_day_counts(dc):
@@ -2863,12 +2854,7 @@ def events_ewma_volume_forecast(spark, sf_dir):
     a type-partitioned lag window over the metadata-scale day series;
     num/den are fixed-order integer additions, never float
     aggregates. Output is (type × day) rows."""
-    dc = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    return ewma_forecast_from_day_counts(dc)
+    return ewma_forecast_from_day_counts(_type_day_counts(spark, sf_dir))
 
 
 @register("streaming_ewma_volume_forecast", _EWMA_ORACLE)
@@ -3072,12 +3058,7 @@ def events_holt_volume_forecast(spark, sf_dir):
     a type-partitioned lag window over the metadata-scale day series;
     the forecast numerator is a fixed-order int64 expression, never a
     float aggregate. Output is (type × day) rows."""
-    dc = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    return holt_forecast_from_day_counts(dc)
+    return holt_forecast_from_day_counts(_type_day_counts(spark, sf_dir))
 
 
 @register("streaming_holt_volume_forecast", _HOLT_ORACLE)
@@ -3177,12 +3158,7 @@ def events_seasonal_volume_anomaly(spark, sf_dir):
     day series — the partition key gains a 7-way fan-out over the
     uniform rule's, which only helps balance. Output is (type × day)
     rows."""
-    dc = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    return seasonal_anomaly_from_day_counts(dc)
+    return seasonal_anomaly_from_day_counts(_type_day_counts(spark, sf_dir))
 
 
 def seasonal_anomaly_from_day_counts(dc):
@@ -3964,12 +3940,7 @@ def events_dow_strength(spark, sf_dir):
 
     Scale: one map-side-combined daily aggregation over events; the
     ANOVA algebra runs on the (type × 7) and |types|-row relations."""
-    dc = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type", F.date_trunc("day", F.col("ts")).alias("day"))
-        .agg(F.count("*").cast("bigint").alias("c"))
-    )
-    return dow_strength_from_day_counts(dc)
+    return dow_strength_from_day_counts(_type_day_counts(spark, sf_dir))
 
 
 @register("streaming_dow_strength", _DOW_STRENGTH_ORACLE)

@@ -215,6 +215,19 @@ def cached_tf_projection(spark, sf_dir: str) -> DataFrame:
     )
 
 
+
+def cached_dual_scored(spark, sf_dir: str) -> DataFrame:
+    """Session-persisted ``_dual_scored`` relation (doc_id, bm25, qlm,
+    rel) over ``cached_tf_projection``: one corpus scoring read by the
+    ranking evaluators, the PRF candidates and the probe-set
+    queries."""
+    return session_cached(
+        spark,
+        "retrieval_dual_scored",
+        sf_dir,
+        lambda: _dual_scored(cached_tf_projection(spark, sf_dir)),
+    )
+
 def _bm25_scored(f: DataFrame) -> DataFrame:
     """(doc_id, bm25) for every document, from a tf projection
     (callers pass ``cached_tf_projection`` so the scoring row side
@@ -1511,14 +1524,7 @@ def retrieval_ndcg_eval(spark, sf_dir):
     three top-k branches (and the tau evaluator, which shares it)
     tokenize the corpus ONCE instead of once per branch (r9 review;
     the pagerank session_cached precedent)."""
-    scored = session_cached(
-        spark,
-        "retrieval_dual_scored",
-        sf_dir,
-        lambda: _dual_scored(
-            cached_tf_projection(spark, sf_dir)
-        ),
-    )
+    scored = cached_dual_scored(spark, sf_dir)
     w_bm = Window.orderBy(F.desc("bm25"), "doc_id")
     w_ql = Window.orderBy(F.desc("qlm"), "doc_id")
     w_rel = Window.orderBy(F.desc("rel"), "doc_id")
@@ -1646,14 +1652,7 @@ def retrieval_rank_correlation(spark, sf_dir):
     corpus size. Shares the session-persisted dual-scored relation
     with retrieval_ndcg_eval (one corpus tokenization serves both
     evaluators; r9 review)."""
-    scored = session_cached(
-        spark,
-        "retrieval_dual_scored",
-        sf_dir,
-        lambda: _dual_scored(
-            cached_tf_projection(spark, sf_dir)
-        ),
-    )
+    scored = cached_dual_scored(spark, sf_dir)
     bmtop = (
         scored.orderBy(F.desc("bm25"), "doc_id")
         .limit(_TAU_K)
@@ -1819,14 +1818,7 @@ def retrieval_rbo_overlap(spark, sf_dir):
     session-persisted dual-scored relation (shared with NDCG/tau —
     one corpus tokenization serves all three evaluators); everything
     after runs on ≤ k rows."""
-    scored = session_cached(
-        spark,
-        "retrieval_dual_scored",
-        sf_dir,
-        lambda: _dual_scored(
-            cached_tf_projection(spark, sf_dir)
-        ),
-    )
+    scored = cached_dual_scored(spark, sf_dir)
     bmtop = (
         scored.orderBy(F.desc("bm25"), "doc_id")
         .limit(_RBO_K)
@@ -1973,14 +1965,7 @@ def retrieval_mrr_eval(spark, sf_dir):
     broadcast aggregate. Shares the session-persisted dual-scored
     relation with the NDCG and tau evaluators (one corpus
     tokenization serves all three)."""
-    scored = session_cached(
-        spark,
-        "retrieval_dual_scored",
-        sf_dir,
-        lambda: _dual_scored(
-            cached_tf_projection(spark, sf_dir)
-        ),
-    )
+    scored = cached_dual_scored(spark, sf_dir)
     w_bm = Window.orderBy(F.desc("bm25"), "doc_id")
     w_ql = Window.orderBy(F.desc("qlm"), "doc_id")
     bmtop = (
@@ -2517,14 +2502,7 @@ def _prf_candidates(spark, sf_dir) -> DataFrame:
     """(tok, tf_topk, df_topk) over the BM25 top-10 document pool,
     original query terms excluded — the RM1 candidate relation shared
     by retrieval_prf_expansion and retrieval_rm3_interpolated."""
-    scored = session_cached(
-        spark,
-        "retrieval_dual_scored",
-        sf_dir,
-        lambda: _dual_scored(
-            cached_tf_projection(spark, sf_dir)
-        ),
-    )
+    scored = cached_dual_scored(spark, sf_dir)
     top = scored.orderBy(F.desc("bm25"), "doc_id").limit(_PRF_K_DOCS).select(
         "doc_id"
     )
@@ -2916,14 +2894,7 @@ def retrieval_contamination_eval(spark, sf_dir):
     by the eval split's shingle count (inverted-index semi-overlap,
     the corpus_decontamination shape restricted to a constant-size
     probe set — never pairwise, never fact-scale)."""
-    scored = session_cached(
-        spark,
-        "retrieval_dual_scored",
-        sf_dir,
-        lambda: _dual_scored(
-            cached_tf_projection(spark, sf_dir)
-        ),
-    )
+    scored = cached_dual_scored(spark, sf_dir)
     topk = (
         scored.orderBy(F.desc("bm25"), "doc_id")
         .limit(_CONTAM_K)
@@ -3122,14 +3093,7 @@ def retrieval_map_eval(spark, sf_dir):
     the rank and cumulative-relevance windows run over <= 10
     limit-bounded rows each (counted waiver); the relevant-set count
     is a 1-row broadcast aggregate."""
-    scored = session_cached(
-        spark,
-        "retrieval_dual_scored",
-        sf_dir,
-        lambda: _dual_scored(
-            cached_tf_projection(spark, sf_dir)
-        ),
-    )
+    scored = cached_dual_scored(spark, sf_dir)
     rel_min = F.lit(_MRR_REL_MIN)
 
     def _ap(score_col, tag):

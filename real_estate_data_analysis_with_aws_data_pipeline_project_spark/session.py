@@ -10,6 +10,9 @@ both local testing and a large cluster:
   coalescing anyway)
 - UTC session timezone, so results agree with the DuckDB oracle
 - Arrow enabled for any pandas-UDF path
+- the package's parent directory on the Python workers' PYTHONPATH, so
+  pandas/Python UDFs defined in the package import on the workers
+  whatever the driver's working directory
 """
 
 from __future__ import annotations
@@ -49,7 +52,11 @@ def get_spark(
         # nanos timestamp type — read as long, catalog converts to µs
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    key = "spark.executorEnv.PYTHONPATH"
+    conf[key] = os.pathsep.join(p for p in (pkg_parent, conf.get(key)) if p)
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

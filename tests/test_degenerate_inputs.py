@@ -1,7 +1,9 @@
-"""Rank-family queries on an input with one table emptied must match
-the DuckDB oracle: the two-pass rank kernel's driver walk sees zero
-buckets, and NULL-vs-0 totals, empty bucket lists and missing groups
-all surface here rather than on the populated tables."""
+"""Rank-family and collected-model queries on an input with one table
+emptied must match the DuckDB oracle: the two-pass rank kernel's driver
+walk sees zero buckets, the collected driver models (seeds, probe sets,
+quantizers, codebooks) come back empty, and NULL-vs-0 totals, empty
+bucket lists and missing groups all surface here rather than on the
+populated tables."""
 
 from __future__ import annotations
 
@@ -27,6 +29,16 @@ EMPTIED = {
         "events_qini_uplift_deciles",
     ],
     "documents": ["corpus_pack_token_shards"],
+    "embeddings": [
+        "similarity_range_search",
+        "dedup_embedding_cosine",
+        "similarity_ivf_topk",
+        "similarity_pq_topk",
+        "dedup_semantic_clusters",
+        "dedup_semantic_keep_manifest",
+        "similarity_ann_lsh",
+        "similarity_ann_recall_audit",
+    ],
 }
 
 

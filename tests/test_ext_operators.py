@@ -1221,16 +1221,22 @@ def test_bitmap_distinct_across_buckets(spark, tmp_path):
 
 
 def test_semantic_seed_cache_eviction_survives_stale_entry(spark, sf_dir):
-    """ADVICE r5 (high): the eviction loop must NOT rebind the seed
-    count ``k`` — with a pre-seeded stale fingerprint for the same
-    (session, sf_dir), the buggy version crashed on ``.limit(k)`` with
-    ``k`` holding a cache-key tuple the first time testdata was
-    regenerated within a session."""
+    """ADVICE r5 (high): eviction must NOT rebind the seed count ``k``
+    — with a pre-seeded stale fingerprint for the same (session,
+    sf_dir), the buggy version crashed on ``.limit(k)`` with ``k``
+    holding a cache-key tuple the first time testdata was regenerated
+    within a session. The seeds live in the shared session memo."""
     from pyspark.sql import functions as F
 
     from real_estate_data_analysis_with_aws_data_pipeline_project_spark import (
         queries_similarity as qs,
     )
+    from real_estate_data_analysis_with_aws_data_pipeline_project_spark.operators import (
+        session_cache,
+    )
+
+    def live():
+        return [k for k in session_cache._CACHE if k[1] == "semantic_seeds"]
 
     v = (
         qs._vecs(spark, sf_dir)
@@ -1238,42 +1244,63 @@ def test_semantic_seed_cache_eviction_survives_stale_entry(spark, sf_dir):
         .withColumn("nrm", F.lit(1.0))
     )
     app = spark.sparkContext.applicationId
-    stale_key = (app, sf_dir, 0, 0)  # superseded fingerprint
-    qs._SEM_SEED_CACHE.clear()
-    qs._SEM_SEED_CACHE[stale_key] = [("stale", [0.0], 1.0)]
+    stale_key = (app, "semantic_seeds", sf_dir, (0, 0))  # superseded
+    for k in live():
+        session_cache._CACHE.pop(k)
+    session_cache._CACHE[stale_key] = [["stale"], [[0.0]], [1.0]]
     try:
         rows = qs._semantic_seed_rows(spark, sf_dir, v, 4)
-        assert len(rows) == 4
-        assert stale_key not in qs._SEM_SEED_CACHE  # evicted
-        assert len(qs._SEM_SEED_CACHE) == 1  # exactly the fresh entry
+        seed_ids, _, _ = rows
+        assert len(seed_ids) == 4
+        assert stale_key not in session_cache._CACHE  # evicted
+        assert len(live()) == 1  # exactly the fresh entry
         again = qs._semantic_seed_rows(spark, sf_dir, v, 4)
         assert again is rows  # served from cache on the second call
     finally:
-        qs._SEM_SEED_CACHE.clear()
+        # the k=4, unit-norm seeds must not serve later queries
+        for k in live():
+            session_cache._CACHE.pop(k)
 
 
 def test_ivf_model_cache_evicts_stale_fingerprint(spark, sf_dir):
-    """Twin of the semantic-seed eviction test for _IVF_MODEL_CACHE
-    (ADVICE r5 low): a superseded fingerprint entry for the same
-    (session, sf_dir) is evicted, leaving exactly one live model."""
-    from real_estate_data_analysis_with_aws_data_pipeline_project_spark import (
-        queries_similarity as qs,
-    )
+    """Twin of the semantic-seed eviction test for the IVF quantizer
+    model in the shared session memo (ADVICE r5 low): a superseded
+    fingerprint entry for the same (session, sf_dir) is evicted,
+    leaving exactly one live model."""
     from real_estate_data_analysis_with_aws_data_pipeline_project_spark.api import (
         QUERIES,
+    )
+    from real_estate_data_analysis_with_aws_data_pipeline_project_spark.operators import (
+        session_cache,
     )
 
     app = spark.sparkContext.applicationId
     # eviction runs only on a cache MISS: drop any model an earlier
     # test already built for this (session, sf_dir) so the query
     # rebuilds and exercises the eviction path
-    qs._IVF_MODEL_CACHE.clear()
-    stale_key = (app, sf_dir, 0, 0)
-    qs._IVF_MODEL_CACHE[stale_key] = ("stale",)
+    for k in [k for k in session_cache._CACHE if k[1] == "ivf_model"]:
+        session_cache._CACHE.pop(k)
+    stale_key = (app, "ivf_model", sf_dir, (0, 0))
+    session_cache._CACHE[stale_key] = ("stale",)
     QUERIES["similarity_ivf_topk"].fn(spark, sf_dir).collect()
-    assert stale_key not in qs._IVF_MODEL_CACHE
-    live = [k for k in qs._IVF_MODEL_CACHE if k[:2] == (app, sf_dir)]
+    assert stale_key not in session_cache._CACHE
+    live = [
+        k for k in session_cache._CACHE if k[:3] == (app, "ivf_model", sf_dir)
+    ]
     assert len(live) == 1
+
+
+def test_collect_model_sorts_by_first_column_and_handles_empty(spark):
+    """The driver-model collect returns one list per column, rows in
+    ascending first-column order (the kernels' first-max tiebreak
+    relies on it), and empty lists for an empty relation."""
+    from real_estate_data_analysis_with_aws_data_pipeline_project_spark.operators._argmax_udf import (
+        collect_model,
+    )
+
+    df = spark.createDataFrame([(3, "c"), (1, "a"), (2, "b")], "id long, s string")
+    assert collect_model(df) == [[1, 2, 3], ["a", "b", "c"]]
+    assert collect_model(df.limit(0)) == [[], []]
 
 
 def test_path_fingerprint_recurses_into_part_directories(tmp_path):
