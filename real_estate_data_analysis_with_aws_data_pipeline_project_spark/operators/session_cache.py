@@ -10,13 +10,15 @@ data' re-cache churn.
 Two layers over one store:
 
 - ``session_memo`` is the keyed memo. It holds any value — persisted
-  DataFrames, and also the driver models that embedding operators
-  collect once and ship in a kernel's closure (IVF quantizer, semantic
-  seeds). Its key is ``(applicationId, name, sf_dir, fingerprint)``:
-  the same (name, sf_dir, file contents) within a session returns the
-  stored value; a new sf_dir, regenerated files or a rebuilt session
-  for the same name evicts the stale entry (unpersisting a DataFrame),
-  bounding the store to one live value per name.
+  DataFrames, the driver models that embedding operators collect once
+  and ship in a kernel's closure (IVF quantizer, semantic seeds), and
+  the catalog's inferred table schemas (``catalog.table_schema``, one
+  ``{table: schema}`` dict per sf_dir). Its key is
+  ``(applicationId, name, sf_dir, fingerprint)``: the same (name,
+  sf_dir, file contents) within a session returns the stored value; a
+  new sf_dir, regenerated files or a rebuilt session for the same name
+  evicts the stale entry (unpersisting a DataFrame), bounding the store
+  to one live value per name.
 - ``session_cached`` is the persist/checkpoint step on top: it memoizes
   the builder's relation materialized by ``persist()`` or an eager
   ``localCheckpoint``.

@@ -822,34 +822,41 @@ _SUBSTR_ORACLE = f"""
 
 
 def substr_window_hashes(toks: "F.Column | str" = "toks") -> "F.Column":
-    """64-bit window id per _SUBSTR_K-token window (1-based window i
+    """128-bit window id per _SUBSTR_K-token window (1-based window i
     covers tokens [i, i+K-1]); empty array for docs shorter than one
     window. Shared by the repeated-substring detector and the span
     remediator so the two agree on window identity.
 
-    r17 (guide §2.3, shuffle fewer bytes): the id is
-    xxhash64(token-slice array) — an 8-byte BIGINT — where it used to
-    be md5(space-joined string), a 32-char hex STRING. The hash value
-    never reaches any output; it exists only to GROUP equal windows,
-    and two windows are equal iff their token arrays are equal
-    (tokens contain no spaces, so the oracle's space-joined md5
-    grouping induces the identical partition of windows — both
-    engines' groupings coincide with true window equality whenever
-    their hashes are injective on the realized windows, which the
-    cross-engine hash match verifies per run; a 64-bit birthday
-    collision needs ~2^32 distinct windows to become likely). The
-    switch cuts the exploded relation's shuffle key from ~48 bytes to
-    8 and drops ~4 md5 digests per token from the map side: the
-    detector/remediator core measured 1.19 s -> 0.95 s at sf0.1 on
-    the key switch alone."""
+    The id is a 16-byte struct of two independently seeded xxhash64s
+    of the token-slice array — ``xxhash64(slice)`` and
+    ``xxhash64(1, slice)``. The hash value never reaches any output; it
+    exists only to GROUP equal windows, and two windows are equal iff
+    their token arrays are equal (tokens contain no spaces, so the
+    oracle's space-joined md5 grouping induces the identical partition
+    of windows — both engines' groupings coincide with true window
+    equality whenever their hashes are injective on the realized
+    windows, which the cross-engine hash match verifies per run). One
+    64-bit hash makes a birthday collision likely near 2^32 distinct
+    windows, well inside a 100 TB corpus; two push that to ~2^64. The
+    key stays a third of the width of an md5 hex STRING (~48 bytes),
+    and hashing skips the ~4 md5 digests per token that string costs
+    on the map side. Each window is sliced once and the slice hashed
+    twice: lambda bodies run interpreted, so a second slice costs about
+    as much as a second hash (sf0.1, 4 cores, median of 8:
+    dedup_repeated_substrings 2.4 s with two slices vs 2.1 s with one)."""
     t = F.col(toks) if isinstance(toks, str) else toks
     return F.when(
         F.size(t) >= _SUBSTR_K,
         F.transform(
-            F.sequence(F.lit(1), F.size(t) - (_SUBSTR_K - 1)),
-            lambda i: F.xxhash64(F.slice(t, i, _SUBSTR_K)),
+            F.transform(
+                F.sequence(F.lit(1), F.size(t) - (_SUBSTR_K - 1)),
+                lambda i: F.slice(t, i, _SUBSTR_K),
+            ),
+            lambda w: F.struct(
+                F.xxhash64(w).alias("h1"), F.xxhash64(F.lit(1), w).alias("h2")
+            ),
         ),
-    ).otherwise(F.array().cast("array<bigint>"))
+    ).otherwise(F.array().cast("array<struct<h1:bigint,h2:bigint>>"))
 
 
 @register("dedup_repeated_substrings", _SUBSTR_ORACLE)
@@ -1052,8 +1059,8 @@ def dedup_span_remediate(spark, sf_dir):
     detection, instead of dropping whole near-dup docs.
 
     Shares window identity with dedup_repeated_substrings via
-    substr_window_hashes (a 64-bit xxhash64 window id since r17 —
-    see that helper for the narrower-shuffle-key rationale). Plan
+    substr_window_hashes (a 128-bit two-xxhash64 window id — see that
+    helper for the shuffle-key and collision rationale). Plan
     (r16 explode-once shape, r17 agg→window): explode windows WITH
     positions ONCE → a window min/max over the hash partitioning
     decides dup-ness in place (min(doc_id) != max(doc_id) ⟺

@@ -8,6 +8,12 @@ over the same data as the DataFrame surface.
 Parquet is the canonical at-rest format here (columnar, predicate
 pushdown, column pruning) — the scalable replacement for the
 reference's CSV/JSON S3 objects (``real_estate_etl_job.py:34,49-54``).
+
+Like the reference's registered ``Schema.json``, each table's schema is
+inferred once per session and file fingerprint (``table_schema``) and
+every later read is pinned to it: ``spark.read.parquet`` without a
+schema launches a schema-inference Spark job per call, so a read here
+launches no job at all once the table has been seen.
 """
 
 from __future__ import annotations
@@ -15,6 +21,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..operators.session_cache import session_memo
 
 TABLES = (
     "region",
@@ -49,30 +59,50 @@ def table_rows(sf_dir: str, name: str) -> int:
     return pq.ParquetFile(table_path(sf_dir, name)).metadata.num_rows
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar scan; Catalyst pushes filters/projections into it."""
+def table_schema(spark: SparkSession, sf_dir: str, name: str) -> T.StructType:
+    """Spark's own inferred schema of table ``name`` — the one
+    ``spark.read.parquet`` would infer, so the ``nanosAsLong`` and NTZ
+    timestamp readings are exactly Spark's. Inferred on first use and
+    kept for the session in one ``session_memo`` entry per sf_dir (a
+    ``{table: schema}`` dict), whose file fingerprint key drops every
+    schema of the dir when any of its tables is rewritten."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    df = spark.read.parquet(table_path(sf_dir, name))
-    if name == "events":
-        # Normalize ts to TimestampType (LTZ) whatever the parquet
-        # writer produced across testdata generations:
-        #  - TIMESTAMP(NANOS): read as long nanos
-        #    (spark.sql.legacy.parquet.nanosAsLong), floor-div to µs —
-        #    the data carries whole-µs values so nothing is lost (and
-        #    it matches DuckDB's ns→µs truncation);
-        #  - TIMESTAMP(MICROS, isAdjustedToUTC=false): inferred as
-        #    TIMESTAMP_NTZ — cast to LTZ, value-preserving because the
-        #    engine pins the session timezone to UTC (registry confs).
-        # Watermarks and window functions require the LTZ type.
-        from pyspark.sql import functions as F
-        from pyspark.sql import types as T
+    schemas = session_memo(spark, f"catalog.table_schema:{sf_dir}", sf_dir, dict)
+    if name not in schemas:
+        schemas[name] = spark.read.parquet(table_path(sf_dir, name)).schema
+    return schemas[name]
 
-        if isinstance(df.schema["ts"].dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        elif isinstance(df.schema["ts"].dataType, T.TimestampNTZType):
-            df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
+
+def normalize_events_ts(df: DataFrame, raw_schema: T.StructType) -> DataFrame:
+    """Normalize events.ts to TimestampType (LTZ) whatever the parquet
+    writer produced across testdata generations (``raw_schema`` is the
+    table's inferred schema):
+
+    - TIMESTAMP(NANOS): read as long nanos
+      (spark.sql.legacy.parquet.nanosAsLong), floor-div to µs — the
+      data carries whole-µs values so nothing is lost (and it matches
+      DuckDB's ns→µs truncation);
+    - TIMESTAMP(MICROS, isAdjustedToUTC=false): inferred as
+      TIMESTAMP_NTZ — cast to LTZ, value-preserving because the engine
+      pins the session timezone to UTC (registry confs).
+
+    Watermarks and window functions require the LTZ type."""
+    ts = raw_schema["ts"].dataType
+    if isinstance(ts, T.LongType):
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    if isinstance(ts, T.TimestampNTZType):
+        return df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Columnar scan; Catalyst pushes filters/projections into it. The
+    read is pinned to ``table_schema``, so it launches no Spark job once
+    the table's schema is known in this session."""
+    schema = table_schema(spark, sf_dir, name)
+    df = spark.read.schema(schema).parquet(table_path(sf_dir, name))
+    return normalize_events_ts(df, schema) if name == "events" else df
 
 
 def register_views(spark: SparkSession, sf_dir: str, tables=TABLES) -> None:
@@ -171,8 +201,6 @@ def canonical_spark_type(dt) -> str:
     """Spark DataType → the contract's canonical vocabulary (NTZ and
     LTZ timestamps both canonicalize to 'timestamp', matching the
     load_table normalization)."""
-    from pyspark.sql import types as T
-
     if isinstance(dt, T.LongType):
         return "bigint"
     if isinstance(dt, T.IntegerType):

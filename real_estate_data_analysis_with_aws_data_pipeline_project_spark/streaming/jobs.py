@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..sources.catalog import table_path
+from ..sources.catalog import normalize_events_ts, table_path, table_schema
 
 # Session gap, defined ONCE (ADVICE r5): the streaming job builds the
 # duration string from it and the oracle SQL in queries_multimodal
@@ -39,10 +39,11 @@ SESSION_GAP_US = SESSION_GAP_MINUTES * 60 * 1_000_000
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table. Schema comes from a
-    batch read (streams cannot infer); the nanos→µs ts conversion
-    mirrors the catalog's."""
-    raw_schema = spark.read.parquet(table_path(sf_dir, "events")).schema
+    """File-source stream over the events table. Streams cannot infer
+    a schema; the raw schema is the catalog's ``table_schema`` (inferred
+    once per session, so building the stream launches no Spark job) and
+    ts is normalized by the catalog's own ``normalize_events_ts``."""
+    raw_schema = table_schema(spark, sf_dir, "events")
     # The file stream source requires a DIRECTORY path. Single-file
     # layout (current testdata): stream sf_dir with a glob selecting
     # just the events file. Directory layout (if a future generation
@@ -59,13 +60,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("pathGlobFilter", "events.parquet")
             .parquet(sf_dir)
         )
-    if isinstance(raw_schema["ts"].dataType, T.LongType):
-        stream = stream.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    elif isinstance(raw_schema["ts"].dataType, T.TimestampNTZType):
-        # µs-NTZ testdata generation: watermarks need LTZ; the session
-        # timezone is pinned UTC so the cast is value-preserving.
-        stream = stream.withColumn("ts", F.col("ts").cast(T.TimestampType()))
-    return stream
+    return normalize_events_ts(stream, raw_schema)
 
 
 def _run_to_memory(result: DataFrame, name: str, output_mode: str) -> None:
