@@ -1,5 +1,6 @@
 """Two-pass value-range rank kernel — the one owner of the bucket
-width, the per-bucket offset prefix and the rank-cut placement.
+width, the per-bucket offset prefix, the rank-cut placement and the
+per-tag assembly.
 
 Pattern (the features_global_equidepth_bins lineage): pass 1
 aggregates per value-range bucket ``rng`` (≤ ``_SPEND_RANGES`` rows,
@@ -8,6 +9,14 @@ and pass 2 windows only inside buckets (fan-in = one bucket's
 density). No global sort or window at any size; heavy ties
 concentrate their bucket (documented caveat shared by every rank
 query).
+
+Every driver-built relation here (offsets, cut targets, per-tag
+bases) is a ``session.local_frame`` ``LocalRelation``: broadcasting
+it launches no Spark job. Pass 2's window is partitioned by the
+cut's functional key — ``tag`` (``(grp, tag)`` for order
+statistics): ``_place_cuts`` places each tag in exactly one bucket,
+so the tag determines ``rng`` and the per-tag aggregate after the
+window reuses the window's exchange.
 
 Helpers and their instantiations:
 
@@ -28,6 +37,10 @@ Helpers and their instantiations:
   agg_lorenz_deciles and agg_palma_ratio (via
   ``queries_extra._cust_spend_prefix``), agg_concentration_curve,
   events_qini_uplift_deciles.
+- ``assemble_tags`` — the per-tag assembly of those four queries: the
+  driver's per-tag rows left-joined to the broadcast boundary-bucket
+  partials, on one partition, so the callers' final sort or
+  aggregate needs no exchange.
 - ``_bucket_order_stats`` — exact per-group k-th order statistics:
   events_quantile_treatment_effect, events_winsorized_lift,
   sketch_quantile_envelope.
@@ -37,6 +50,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ..session import local_frame
 
 _SPEND_RANGES = 4096  # value-range buckets for the two-pass rank
 
@@ -70,7 +85,7 @@ def bucket_offsets(spark, g, weight):
     ):
         offsets.append((row["rng"], running))
         running += int(row["w"])
-    off_df = spark.createDataFrame(offsets, f"rng {rng_type}, off bigint")
+    off_df = local_frame(spark, offsets, f"rng {rng_type}, off bigint")
     return g.join(F.broadcast(off_df), "rng"), running
 
 
@@ -134,10 +149,12 @@ def bucket_prefix_cells(spark, g, cell_aggs, ranks_for, order=("m", "key")):
     n = sum(p[1] for p in pairs)
     totals = [sum(p[i + 2] for p in pairs) for i in range(len(names))]
     targets, base = _place_cuts(pairs, ranks_for(n).items(), len(names))
-    tdf = spark.createDataFrame(
-        targets, "rng bigint, tag string, residual bigint"
-    )
-    w = Window.partitionBy("rng", "tag").orderBy(*order)
+    tags = [t for _rng, t, _res in targets]
+    assert len(set(tags)) == len(tags), "a tag has two cuts"
+    tdf = local_frame(spark, targets, "rng bigint, tag string, residual bigint")
+    # one cut per tag: the tag determines rng, so the tag-keyed window's
+    # exchange also serves the per-tag aggregate below
+    w = Window.partitionBy("tag").orderBy(*order)
     part = (
         g.join(F.broadcast(tdf), "rng")
         .withColumn("rn", F.row_number().over(w))
@@ -146,6 +163,20 @@ def bucket_prefix_cells(spark, g, cell_aggs, ranks_for, order=("m", "key")):
         .agg(*[a.alias(f"p_{n}") for n, a in cell_aggs])
     )
     return part, base, n, totals
+
+
+def assemble_tags(spark, rows, schema, part):
+    """The per-tag assembly of a ``bucket_prefix_cells`` result:
+    ``rows`` (the driver's per-tag bases, ``schema`` leading with
+    ``tag``) left-joined to the broadcast ``part``, so a tag without
+    a part row (m = 0) keeps NULL partials. The result holds at most
+    one row per tag and sits on one partition: a caller's ``orderBy``
+    or ``groupBy`` on it plans no exchange."""
+    return (
+        local_frame(spark, rows, schema)
+        .join(F.broadcast(part), "tag", "left")
+        .coalesce(1)
+    )
 
 
 def _bucket_order_stats(spark, g, ranks_for):
@@ -175,10 +206,13 @@ def _bucket_order_stats(spark, g, ranks_for):
         for grp, pairs in by_grp.items()
         for t in _place_cuts(sorted(pairs), ranks_by_grp.get(grp, ()))[0]
     ]
-    tdf = spark.createDataFrame(
-        targets, schema="grp string, rng bigint, tag string, residual bigint"
+    keys = [(grp, tag) for grp, _rng, tag, _res in targets]
+    assert len(set(keys)) == len(keys), "a (grp, tag) has two cuts"
+    tdf = local_frame(
+        spark, targets, "grp string, rng bigint, tag string, residual bigint"
     )
-    wnd = Window.partitionBy("grp", "rng", "tag").orderBy("m", "user_id")
+    # (grp, tag) determines rng: one cut per tag within a group
+    wnd = Window.partitionBy("grp", "tag").orderBy("m", "user_id")
     return (
         g.join(F.broadcast(tdf), ["grp", "rng"])
         .withColumn("rn", F.row_number().over(wnd))

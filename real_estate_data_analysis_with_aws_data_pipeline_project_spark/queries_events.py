@@ -14,10 +14,12 @@ from .functions.scalar import hex_chunk_int_sql
 from .operators.rank_prefix import (
     _bucket_order_stats,
     _rng_bucketed,
+    assemble_tags,
     bucket_offsets,
     bucket_prefix_cells,
 )
 from .registry import register
+from .session import local_frame
 from .sources.catalog import load_table
 
 
@@ -8121,8 +8123,9 @@ def events_qini_uplift_deciles(spark, sf_dir):
         # the oracle's d CROSS JOIN r yields no rows on an empty user
         # relation — match it (r14 review: the driver-built decile
         # grid must not invent rows the oracle cannot see)
-        return spark.createDataFrame([], out_schema)
-    tags_df = spark.createDataFrame(
+        return local_frame(spark, [], out_schema)
+    cells = assemble_tags(
+        spark,
         [
             (
                 f"d{dec}",
@@ -8136,8 +8139,8 @@ def events_qini_uplift_deciles(spark, sf_dir):
         "tag string, decile bigint, k bigint, b_nt bigint, b_ct bigint,"
         " b_nc bigint, b_cc bigint, t_nt bigint, t_ct bigint,"
         " t_nc bigint, t_cc bigint",
-    )
-    cells = tags_df.join(part, "tag", "left").select(
+        part,
+    ).select(
         "decile",
         F.col("k").alias("top_k_users"),
         (F.col("t_nt") - F.col("b_nt") - F.coalesce("p_n_t", F.lit(0)))

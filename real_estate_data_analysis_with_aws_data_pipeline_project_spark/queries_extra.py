@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 
 from .operators import text as X
 from .registry import register
+from .session import local_frame
 from .sources.catalog import load_table
 
 
@@ -392,7 +393,7 @@ def sample_fraction_envelope(spark, sf_dir):
     n_sample = li.sample(fraction=p, seed=42).count()
     sigma = math.sqrt(p * (1 - p) * n_total)
     ok = abs(n_sample - p * n_total) <= 5 * sigma
-    return spark.createDataFrame([(ok,)], "within_5_sigma boolean")
+    return local_frame(spark, [(ok,)], "within_5_sigma boolean")
 
 
 @register(
@@ -1731,18 +1732,21 @@ _LORENZ_DECILES = (10, 20, 30, 40, 50, 60, 70, 80, 90)
 
 
 def _cust_spend_prefix(spark, cust, fracs):
-    """(tags_df, part_df): exact prefix spend at rank cuts
-    k = (num·n) div den of the (x, o_custkey) order over ``cust``.
-    ``fracs`` maps tag -> (num, den). tags_df carries (tag, rank_k,
-    base_cents, n, s); part_df carries (tag, part_cents) for the
-    in-bucket partial (absent only when rank_k is 0 — a cut landing
-    exactly on a bucket boundary sums that whole bucket as its
-    partial). n, s and rank_k are NULL when ``cust`` is empty, as
-    in the oracle. Since the r14 review this is a one-cell
-    instantiation of the shared ``bucket_prefix_cells`` kernel
-    (operators/rank_prefix.py) — the Qini query runs the same walk
-    with a four-cell vector."""
-    from .operators.rank_prefix import _rng_bucketed, bucket_prefix_cells
+    """Exact prefix spend at rank cuts k = (num·n) div den of the
+    (x, o_custkey) order over ``cust``, one row per tag on one
+    partition: (tag, rank_k, base_cents, n, s, part_cents).
+    ``fracs`` maps tag -> (num, den). part_cents is the in-bucket
+    partial, NULL only when rank_k is 0 — a cut landing exactly on a
+    bucket boundary sums that whole bucket as its partial. n, s and
+    rank_k are NULL when ``cust`` is empty, as in the oracle. Since
+    the r14 review this is a one-cell instantiation of the shared
+    ``bucket_prefix_cells`` kernel (operators/rank_prefix.py) — the
+    Qini query runs the same walk with a four-cell vector."""
+    from .operators.rank_prefix import (
+        _rng_bucketed,
+        assemble_tags,
+        bucket_prefix_cells,
+    )
 
     g = _rng_bucketed(
         cust.select(F.col("o_custkey").alias("key"), F.col("x").alias("m"))
@@ -1756,15 +1760,14 @@ def _cust_spend_prefix(spark, cust, fracs):
     # no customers: the oracle's totals are SUMs over an empty
     # relation, so n, s and every rank cut are NULL, not 0
     n, s = (n, totals[0]) if n else (None, None)
-    tags_df = spark.createDataFrame(
+    return assemble_tags(
+        spark,
         [
             (tag, (num * n) // den if n else None, base[tag][0], n, s)
             for tag, (num, den) in fracs.items()
         ],
         "tag string, rank_k bigint, base_cents bigint, n bigint, s bigint",
-    )
-    return tags_df, part.select(
-        "tag", F.col("p_cents").alias("part_cents")
+        part.select("tag", F.col("p_cents").alias("part_cents")),
     )
 
 
@@ -1811,11 +1814,10 @@ def agg_lorenz_deciles(spark, sf_dir):
     only inside the ≤ 9 rank-cut buckets, fan-in one bucket's
     density. No global sort at any size."""
     cust, _nat, _tot = _theil_base(spark, sf_dir)
-    tags_df, part = _cust_spend_prefix(
-        spark, cust, {f"p{p}": (p, 100) for p in _LORENZ_DECILES}
-    )
     return (
-        tags_df.join(part, "tag", "left")
+        _cust_spend_prefix(
+            spark, cust, {f"p{p}": (p, 100) for p in _LORENZ_DECILES}
+        )
         .select(
             F.expr("CAST(substring(tag, 2) AS BIGINT)").alias("decile_pct"),
             F.col("rank_k"),
@@ -1878,10 +1880,9 @@ def agg_palma_ratio(spark, sf_dir):
     Scale: identical to agg_lorenz_deciles with two rank cuts instead
     of nine."""
     cust, _nat, _tot = _theil_base(spark, sf_dir)
-    tags_df, part = _cust_spend_prefix(
+    cum = _cust_spend_prefix(
         spark, cust, {"k40": (40, 100), "k90": (90, 100)}
-    )
-    cum = tags_df.join(part, "tag", "left").select(
+    ).select(
         "tag",
         "n",
         "s",
@@ -1978,7 +1979,11 @@ def agg_concentration_curve(spark, sf_dir):
     low-count buckets (most customers place few orders) — the
     documented rank-kernel caveat, bounded by the frequency
     distribution's spread."""
-    from .operators.rank_prefix import _rng_bucketed, bucket_prefix_cells
+    from .operators.rank_prefix import (
+        _rng_bucketed,
+        assemble_tags,
+        bucket_prefix_cells,
+    )
     from .operators.session_cache import session_cached
 
     cents = F.expr("CAST(floor(o_totalprice * 100e0 + 0.5e0) AS BIGINT)")
@@ -2009,14 +2014,15 @@ def agg_concentration_curve(spark, sf_dir):
         lambda n: {f"p{p}": (p * n) // 100 for p in _LORENZ_DECILES},
     )
     s = totals[0]
-    tags_df = spark.createDataFrame(
-        [(f"p{p}", p, (p * n) // 100, base[f"p{p}"][0], n, s)
-         for p in _LORENZ_DECILES],
-        "tag string, decile_pct bigint, rank_k bigint, base_cents bigint,"
-        " n bigint, s bigint",
-    )
     return (
-        tags_df.join(part, "tag", "left")
+        assemble_tags(
+            spark,
+            [(f"p{p}", p, (p * n) // 100, base[f"p{p}"][0], n, s)
+             for p in _LORENZ_DECILES],
+            "tag string, decile_pct bigint, rank_k bigint,"
+            " base_cents bigint, n bigint, s bigint",
+            part,
+        )
         .select(
             "decile_pct",
             "rank_k",
@@ -2720,6 +2726,79 @@ _IPF_ORACLE = f"""
 """
 
 
+def _ipf_rake(cube):
+    """The driver-side IPF walk over the (seg, pri, in_sample, count)
+    cube: ``_IPF_ROUNDS`` row+column scaling steps with the identical
+    quantized update ``floor(((w·t)·1e6)/s + 0.5)`` and IEEE op order
+    as ``_ipf_step_sql``. A weight is NULL (``None``) once its axis
+    sum is 0, and NULL keeps SQL semantics afterwards: it is skipped
+    in every axis sum and the cell stays NULL. Returns the sorted
+    ``[(seg, pri, n, w)]`` in-sample cells and the max relative
+    margin gap in micro units (NULL when no margin is nonzero)."""
+    import math
+
+    cells: dict = {}  # (seg, pri) -> [n, w_micro]
+    rm: dict = {}  # seg -> t
+    cm: dict = {}  # pri -> t
+    for seg, pri, in_sample, c in cube:
+        rm[seg] = rm.get(seg, 0) + int(c)
+        cm[pri] = cm.get(pri, 0) + int(c)
+        if in_sample:
+            cells[(seg, pri)] = [int(c), 1000000]
+
+    def _sums(axis_of):
+        # SQL sum(n * w): NULL weights drop out; an all-NULL axis has
+        # no sum (NULL), which the gap reads as 0 like coalesce
+        s: dict = {}
+        for (seg, pri), (n, w) in cells.items():
+            if w is not None:
+                ax = axis_of(seg, pri)
+                s[ax] = s.get(ax, 0) + n * w
+        return s
+
+    def _step(axis_of, margin):
+        s = _sums(axis_of)
+        for (seg, pri), cell in cells.items():
+            ax = axis_of(seg, pri)
+            if cell[1] is None or not s.get(ax):
+                cell[1] = None
+            else:
+                cell[1] = int(
+                    math.floor(
+                        ((float(cell[1]) * float(margin[ax])) * 1e6)
+                        / float(s[ax])
+                        + 0.5
+                    )
+                )
+
+    for _ in range(_IPF_ROUNDS):
+        _step(lambda seg, pri: seg, rm)
+        _step(lambda seg, pri: pri, cm)
+
+    def _gaps(axis_of, margin):
+        # margins LEAD (r16 review): an axis value absent from the
+        # half-sample has no fitted row and must surface its 100% gap
+        s = _sums(axis_of)
+        return [
+            int(
+                math.floor(
+                    abs(float(s.get(ax, 0)) / 1e6 - float(t))
+                    / float(t)
+                    * 1e6
+                    + 0.5
+                )
+            )
+            for ax, t in margin.items()
+            if t != 0
+        ]
+
+    gaps = _gaps(lambda seg, pri: seg, rm) + _gaps(lambda seg, pri: pri, cm)
+    return (
+        [(seg, pri, n, w) for (seg, pri), (n, w) in sorted(cells.items())],
+        max(gaps) if gaps else None,
+    )
+
+
 @register("features_ipf_raking", _IPF_ORACLE)
 def features_ipf_raking(spark, sf_dir):
     """IPF (raking) calibration weights for the hash-split half-sample
@@ -2742,8 +2821,6 @@ def features_ipf_raking(spark, sf_dir):
     jobs over a 25-row grid — ~3.1 s of pure job latency at sf0.1 for
     arithmetic on 25 cells; nothing downstream scales with the fact
     table either way.""".format(r=_IPF_ROUNDS)
-    import math
-
     from .functions.scalar import split_is_a
 
     o = (
@@ -2761,86 +2838,15 @@ def features_ipf_raking(spark, sf_dir):
         )
     )
     # one fact scan, one aggregate: the (seg, pri, in_sample) cube
-    cube = (
+    cells, max_gap = _ipf_rake(
         o.groupBy("seg", "pri", "in_sample")
         .agg(F.count("*").cast("bigint").alias("c"))
         .collect()
     )
-    cells: dict = {}  # (seg, pri) -> [n, w_micro]
-    rm: dict = {}  # seg -> t
-    cm: dict = {}  # pri -> t
-    for r in cube:
-        key = (r["seg"], r["pri"])
-        rm[r["seg"]] = rm.get(r["seg"], 0) + int(r["c"])
-        cm[r["pri"]] = cm.get(r["pri"], 0) + int(r["c"])
-        if r["in_sample"]:
-            cells[key] = [int(r["c"]), 1000000]
-
-    def _step(axis_of, margin):
-        # s per axis value, then the exact quantized update — the
-        # identical ((w_d * t) * 1e6) / s IEEE chain as the SQL expr
-        s: dict = {}
-        for (seg, pri), (n, w) in cells.items():
-            ax = axis_of(seg, pri)
-            s[ax] = s.get(ax, 0) + n * w
-        for (seg, pri), cell in cells.items():
-            ax = axis_of(seg, pri)
-            if s[ax] == 0:
-                cell[1] = None
-            else:
-                cell[1] = int(
-                    math.floor(
-                        ((float(cell[1]) * float(margin[ax])) * 1e6)
-                        / float(s[ax])
-                        + 0.5
-                    )
-                )
-
-    for _ in range(_IPF_ROUNDS):
-        _step(lambda seg, pri: seg, rm)
-        _step(lambda seg, pri: pri, cm)
-
-    def _gaps(axis_of, margin):
-        # margins LEAD (r16 review): an axis value absent from the
-        # half-sample has no fitted row and must surface its 100% gap
-        s: dict = {}
-        for (seg, pri), (n, w) in cells.items():
-            ax = axis_of(seg, pri)
-            s[ax] = s.get(ax, 0) + n * w
-        out = []
-        for ax, t in margin.items():
-            sv = s.get(ax, 0)
-            out.append(
-                int(
-                    math.floor(
-                        abs(float(sv) / 1e6 - float(t))
-                        / float(t)
-                        * 1e6
-                        + 0.5
-                    )
-                )
-                if t != 0
-                else None
-            )
-        return out
-
-    gap_vals = [
-        g
-        for g in _gaps(lambda seg, pri: seg, rm)
-        + _gaps(lambda seg, pri: pri, cm)
-        if g is not None
-    ]
-    max_gap = max(gap_vals) if gap_vals else None
-    fin = spark.createDataFrame(
-        [
-            (seg, pri, n, w)
-            for (seg, pri), (n, w) in sorted(cells.items())
-        ],
-        "seg string, pri string, n bigint, w bigint",
+    fin = local_frame(
+        spark, cells, "seg string, pri string, n bigint, w bigint"
     )
-    gaps = spark.createDataFrame(
-        [(max_gap,)], "max_margin_gap_micro bigint"
-    )
+    gaps = local_frame(spark, [(max_gap,)], "max_margin_gap_micro bigint")
     return (
         fin.crossJoin(F.broadcast(gaps))
         .select(

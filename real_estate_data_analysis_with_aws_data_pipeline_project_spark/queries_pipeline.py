@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from .functions.scalar import hex_chunk_int_sql
 from .registry import register
+from .session import local_frame
 from .sources.catalog import load_table
 from .sources.readers import read_binary_files, read_csv, read_json, read_orc
 from .sources.rest import fetch_rest_source, normalize_census_records
@@ -984,13 +985,15 @@ def dq_schema_drift(spark, sf_dir):
     for t in SCHEMA_CONTRACT:
         for f in load_table(spark, sf_dir, t).schema.fields:
             actual_rows.append((t, f.name, canonical_spark_type(f.dataType)))
-    actual = spark.createDataFrame(
+    actual = local_frame(
+        spark,
         actual_rows, "table_name string, column_name string, actual_type string"
     )
     contract_rows = [
         (t, c, ty) for t, cols in SCHEMA_CONTRACT.items() for c, ty in cols
     ]
-    contract = spark.createDataFrame(
+    contract = local_frame(
+        spark,
         contract_rows,
         "table_name string, column_name string, expected_type string",
     )

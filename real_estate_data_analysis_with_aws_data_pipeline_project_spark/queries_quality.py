@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from .operators import text as X
 from .queries_dedup import MINHASH_PAIRS_ORACLE, SHINGLES_SQL, cached_shingles
 from .registry import register
+from .session import local_frame
 from .sources.catalog import load_table
 
 # --- heuristic quality filter (C4/Gopher-style gates) -----------------------
@@ -2175,7 +2176,8 @@ def dq_benford_chi2_gate(spark, sf_dir):
         .groupBy("digit")
         .agg(F.count("*").cast("bigint").alias("obs_count"))
     )
-    grid = spark.createDataFrame(
+    grid = local_frame(
+        spark,
         [(d, p) for d, p in _BENFORD_P.items()], "digit bigint, p double"
     )
     dense = grid.join(obs, "digit", "left").select(
@@ -2340,7 +2342,8 @@ def q_streaming_benford_gate(spark, sf_dir):
         .groupBy("event_type")
         .agg(F.sum("c").cast("bigint").alias("n_excluded"))
     )
-    grid_digits = spark.createDataFrame(
+    grid_digits = local_frame(
+        spark,
         [(d, p) for d, p in _BENFORD_P.items()], "digit bigint, p double"
     )
     grid = final.select("event_type").distinct().crossJoin(

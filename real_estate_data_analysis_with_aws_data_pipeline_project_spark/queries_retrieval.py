@@ -38,6 +38,7 @@ from .operators.session_cache import session_cached
 from .operators import text as X
 from .queries_dedup import SHINGLES_SQL, cached_shingles
 from .registry import register
+from .session import local_frame
 from .sources.catalog import load_table
 
 # BM25 constants (classic Robertson values; decimal literals parse to
@@ -3300,7 +3301,8 @@ def graph_kcore(spark, sf_dir):
         .join(F.broadcast(a2), "s2", "left_semi")
         .count()
     )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 _KCORE_K,

@@ -23,6 +23,7 @@ from .operators._argmax_udf import (
 )
 from .operators.session_cache import session_cached, session_memo
 from .registry import register
+from .session import local_frame
 from .sources.catalog import load_table
 
 _N_QUERIES = 10  # vec_id < 10 are the query vectors
@@ -2904,7 +2905,8 @@ def embedding_kmeans_lloyd(spark, sf_dir):
     run once across the three consuming passes."""
     q, _cents0, cents1, _upd = _kmeans_fit(spark, sf_dir)
     if q is None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "cluster_id int, n_members long, inertia double"
         )
     m = F.expr(_kmeans_argmin_expr(cents1))
@@ -3010,7 +3012,7 @@ def embedding_cluster_quality(spark, sf_dir):
         # mirror the oracle's empty-input shape: the ungrouped nt
         # aggregate over zero sizes rows still emits one row —
         # k_clusters 0, everything else NULL
-        return spark.createDataFrame([(None, 0, None, None, None)], schema)
+        return local_frame(spark, [(None, 0, None, None, None)], schema)
     m = F.expr(_kmeans_argmin_expr(cents1))
     per = (
         q.select(m.getField("d").alias("d2"), m.getField("c").alias("cid"))
@@ -3051,7 +3053,7 @@ def embedding_cluster_quality(spark, sf_dir):
         _m.floor(ssw / 1e6 + 0.5) / 1e6,
         ch,
     )
-    return spark.createDataFrame([row], schema)
+    return local_frame(spark, [row], schema)
 
 
 # --- cluster purity / NMI vs labels (round 15) ----------------------------------
@@ -3151,7 +3153,8 @@ def embedding_cluster_purity(spark, sf_dir):
     the corpus."""
     q, _c0, cents1, _upd = _kmeans_fit(spark, sf_dir)
     if q is None:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             "n_vectors long, k_clusters long, n_labels long,"
             " purity double, mutual_info_bits double, nmi double",

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from .operators import text as X
 from .registry import register
+from .session import local_frame
 from .sources.catalog import load_table
 
 _CMS_DEPTH = 3  # hash rows (salts)
@@ -85,7 +86,8 @@ def sketch_count_min_tokens(spark, sf_dir):
         load_table(spark, sf_dir, "documents")
         .select(F.explode(X.tokens()).alias("token"))
     )
-    probes = spark.createDataFrame(
+    probes = local_frame(
+        spark,
         [(t,) for t in _PROBE_TOKENS], "token string"
     )
     truth = toks.groupBy("token").agg(F.count("*").alias("true_count"))
@@ -363,7 +365,8 @@ def sketch_quantile_envelope(spark, sf_dir):
     if not n_by:
         # empty lineitem: no exact quantiles (quantile_cont is NULL),
         # and the rank guarantee holds vacuously
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(q, None, True) for q in _QS_QUANTILES],
             "q double, exact_value double, within_rank_envelope boolean",
         )

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 from .functions.scalar import hex_chunk_int_sql
 from .functions.scalar import entropy_term_micro_sql
 from .registry import register
+from .session import local_frame
 from .sources.catalog import load_table
 
 
@@ -1636,7 +1637,8 @@ def features_pca_quality_axis(spark, sf_dir):
         # mirror the oracle's empty-input shape: v0's 4 dims survive
         # to the final SELECT with zeroed correlations (NaN variances
         # fail the > 0 guard), NULL eigenvalue/share, n_docs 0
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [(f, 0.0, None, None, 0) for f in _PCA_FEATURES], schema
         )
 
@@ -1699,7 +1701,7 @@ def features_pca_quality_axis(spark, sf_dir):
         )
         for j in range(d)
     ]
-    return spark.createDataFrame(rows, schema)
+    return local_frame(spark, rows, schema)
 
 
 # --- feature scaling parameter table (round 10) -------------------------------

@@ -13,13 +13,22 @@ both local testing and a large cluster:
 - the package's parent directory on the Python workers' PYTHONPATH, so
   pandas/Python UDFs defined in the package import on the workers
   whatever the driver's working directory
+
+``local_frame(spark, rows, schema)`` is the one owner of driver-built
+relations (rank cuts, per-tag bases, metadata-scale result rows). It
+ships the rows as an Arrow table typed from the ``StructType``, so the
+plan is a ``LocalRelation``: a broadcast or scan of it launches no
+Spark job and pickles no row, and the planner sees its real size.
+``spark.createDataFrame(list, ddl)`` instead plans a ``LogicalRDD``,
+whose broadcast runs a job and whose size the planner cannot see.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def default_cpus() -> int:
@@ -61,3 +70,28 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(
+    spark: SparkSession, rows, schema: StructType | str
+) -> DataFrame:
+    """A ``LocalRelation`` holding ``rows`` (tuples in ``schema``
+    field order; ``None`` is SQL NULL) typed by ``schema``, a
+    ``StructType`` or a DDL string. The result's schema is exactly
+    ``schema``; an empty ``rows`` gives an empty relation."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows, strict=True)) if rows else [()] * len(arrow)
+    if len(cols) != len(arrow):
+        raise ValueError(
+            f"rows have {len(cols)} fields, schema has {len(arrow)}"
+        )
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, schema)

@@ -259,16 +259,22 @@ def _user_stats_fn(key, pdfs: Iterator[pd.DataFrame], state):
 def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exactly-once dedup: the events stream unioned with
     itself (every record arrives twice — the at-least-once delivery
-    regime) is deduplicated on event_id with a watermark bounding the
-    dedup state, then counted per event type. The result equals the
-    batch per-type counts of the original stream, so this streaming
-    job is fully ORACLE-checked, not just rows-only. State is
-    O(events within watermark), the scale-safe configuration for
-    at-least-once sources."""
+    regime) is deduplicated on event_id within the watermark, then
+    counted per event type. The result equals the batch per-type
+    counts of the original stream, so this streaming job is fully
+    ORACLE-checked, not just rows-only.
+
+    ``dropDuplicatesWithinWatermark`` keeps each event_id's state only
+    until the watermark passes its first event time plus the 10-minute
+    delay, so state is O(events within watermark), the scale-safe
+    configuration for at-least-once sources. A plain
+    ``dropDuplicates(["event_id"])`` keeps every key forever: the
+    watermark evicts its state only when the event-time column is a
+    dedup key."""
     doubled = _events_stream(spark, sf_dir).union(_events_stream(spark, sf_dir))
     deduped = (
         doubled.withWatermark("ts", "10 minutes")
-        .dropDuplicates(["event_id"])
+        .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "event_type")
     )
     _run_to_memory(deduped, "stream_dedup_events", "append")
