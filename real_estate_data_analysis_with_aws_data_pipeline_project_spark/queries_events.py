@@ -967,7 +967,7 @@ def dod_growth_from_day_counts(d):
 def streaming_dod_growth(spark, sf_dir):
     """Structured Streaming: the TWELFTH report off the ONE streamed
     sufficient statistic — the PSI tier's (day, bucket) count cube in
-    ValueState sums over buckets to the per-day totals the
+    state sums over buckets to the per-day totals the
     day-over-day report lags (the cube's day key is already the
     'yyyy-MM-dd' string grain), so the growth monitor shares the fold
     that already serves PSI, JSD, day-of-week, Fano, the ACF, mix
@@ -1514,9 +1514,8 @@ def events_cusum_changepoint(spark, sf_dir):
 @register("streaming_cusum_changepoint", _CUSUM_ORACLE)
 def q_streaming_cusum_changepoint(spark, sf_dir):
     """Structured Streaming: the CUSUM change-point as a stateful
-    streaming tier (ValueState of the calendar-bounded day-count map;
-    transformWithStateInPandas with an applyInPandasWithState
-    fallback). The offline statistic needs the series total, so the
+    streaming tier (the calendar-bounded day-count map held in
+    applyInPandasWithState state). The offline statistic needs the series total, so the
     stream folds its SUFFICIENT statistic — per-day counts — and
     recomputes the integer-exact argmax on each update; after the last
     batch the map equals the batch day counts, so the max-seq row per
@@ -1636,7 +1635,7 @@ def trend_slope_from_day_counts(dc):
 def streaming_trend_slope(spark, sf_dir):
     """Structured Streaming: the ELEVENTH report off the ONE streamed
     sufficient statistic — the PSI tier's (day, bucket) count cube in
-    ValueState sums over buckets to the per-day totals the OLS trend
+    state sums over buckets to the per-day totals the OLS trend
     regresses on (the day index is a rank over the cube's day keys),
     so the trend monitor shares the fold that already serves PSI,
     JSD, day-of-week, Fano, the ACF, mix entropy, weekday strength,
@@ -1983,7 +1982,7 @@ def acf_from_day_counts(dc):
 def streaming_autocorrelation(spark, sf_dir):
     """Structured Streaming: the FIFTH report off the ONE streamed
     sufficient statistic — the PSI tier's (day, bucket) count cube in
-    ValueState sums over buckets to the per-day totals, which are
+    state sums over buckets to the per-day totals, which are
     exactly the daily count series the lag-1/lag-7 autocorrelation
     needs, so the seasonality probe joins PSI, JSD, day-of-week, and
     Fano on the same fold. No new state schema, no new Python in the
@@ -2327,7 +2326,7 @@ def events_burstiness_fano(spark, sf_dir):
 def streaming_fano_burstiness(spark, sf_dir):
     """Structured Streaming: the FOURTH report off the ONE streamed
     sufficient statistic — the PSI tier's (day, bucket) count cube in
-    ValueState sums over buckets to the per-day totals, which are
+    state sums over buckets to the per-day totals, which are
     exactly the calendar-bounded day-count series the Fano factor
     needs, so the burstiness monitor comes out of the same fold that
     already serves PSI, JSD, and day-of-week seasonality (VERDICT r9
@@ -2461,7 +2460,7 @@ def dow_from_day_counts(day_tot):
 def streaming_dow_seasonality(spark, sf_dir):
     """Structured Streaming: the THIRD report off the ONE streamed
     sufficient statistic — the PSI tier's (day, bucket) count cube in
-    ValueState also contains the per-day totals (sum over buckets),
+    state also contains the per-day totals (sum over buckets),
     and ISO day-of-week is a pure function of the day string, so the
     weekly seasonality profile + uniform-week chi² come out of the
     same fold that already serves PSI and JSD. No new state schema,
@@ -2470,19 +2469,12 @@ def streaming_dow_seasonality(spark, sf_dir):
     This is the pattern argument in one line: stream ONE complete
     sufficient statistic, derive every downstream report in exact
     Catalyst expressions."""
-    from .streaming.jobs import streaming_psi_cube
+    from .streaming.jobs import psi_cube_day_totals
 
-    cube = streaming_psi_cube(spark, sf_dir)
-    mw = Window.partitionBy("event_type")
-    day_tot = (
-        cube.withColumn("max_seq", F.max("seq").over(mw))
-        .where(F.col("seq") == F.col("max_seq"))
-        .groupBy("event_type", "day")
-        .agg(F.sum("c").cast("bigint").alias("n"))
-        # metadata-scale (type x calendar); consumed in two branches
-        .localCheckpoint(eager=True)
+    # metadata-scale (type x calendar); consumed in two branches
+    return dow_from_day_counts(
+        psi_cube_day_totals(spark, sf_dir, alias="n", checkpoint=True)
     )
-    return dow_from_day_counts(day_tot)
 
 
 # --- per-user concentration: Gini coefficient (round 10) --------------------
@@ -2680,7 +2672,7 @@ def volume_anomaly_from_day_counts(dc):
 def streaming_volume_anomaly(spark, sf_dir):
     """Structured Streaming: the SIXTH report off the ONE streamed
     sufficient statistic — the PSI tier's (day, bucket) count cube in
-    ValueState sums over buckets to the per-day totals the trailing-
+    state sums over buckets to the per-day totals the trailing-
     7-active-day volume alarm runs on, so the feed's first-line anomaly
     monitor shares the fold that already serves PSI, JSD, day-of-week,
     Fano, and the ACF. No new state schema, no new Python in the
@@ -2863,7 +2855,7 @@ def events_ewma_volume_forecast(spark, sf_dir):
 def streaming_ewma_volume_forecast(spark, sf_dir):
     """Structured Streaming: the NINTH report off the ONE streamed
     sufficient statistic — the PSI tier's (day, bucket) count cube in
-    ValueState sums over buckets to the per-day totals the EWMA
+    state sums over buckets to the per-day totals the EWMA
     forecast runs on, so the recency-weighted volume monitor shares
     the fold that already serves PSI, JSD, day-of-week, Fano, the
     ACF, mix entropy, weekday strength, and the uniform volume
@@ -3067,7 +3059,7 @@ def events_holt_volume_forecast(spark, sf_dir):
 def streaming_holt_volume_forecast(spark, sf_dir):
     """Structured Streaming: the THIRTEENTH report off the ONE
     streamed sufficient statistic — the PSI tier's (day, bucket)
-    count cube in ValueState sums over buckets to the per-day totals
+    count cube in state sums over buckets to the per-day totals
     the Holt trend forecast runs on, so the trend-aware volume
     monitor shares the fold that already serves PSI, JSD, day-of-week,
     Fano, the ACF, mix entropy, weekday strength, the uniform and
@@ -3238,7 +3230,7 @@ def seasonal_anomaly_from_day_counts(dc):
 def streaming_seasonal_volume_anomaly(spark, sf_dir):
     """Structured Streaming: the TENTH report off the ONE streamed
     sufficient statistic — the PSI tier's (day, bucket) count cube in
-    ValueState sums over buckets to the per-day totals the
+    state sums over buckets to the per-day totals the
     same-weekday alarm runs on (the ISO weekday is a pure function of
     the cube's day key), so the seasonal monitor shares the fold that
     already serves PSI, JSD, day-of-week, Fano, the ACF, mix entropy,
@@ -3557,7 +3549,7 @@ def events_type_entropy_daily(spark, sf_dir):
 def streaming_type_entropy(spark, sf_dir):
     """Structured Streaming: the SEVENTH report off the ONE streamed
     sufficient statistic — the PSI tier's (day, bucket) count cube in
-    ValueState sums over buckets to per-type day totals; grouping
+    state sums over buckets to per-type day totals; grouping
     those ACROSS types per day gives the daily mix entropy, so the
     composition monitor shares the fold that already serves PSI, JSD,
     day-of-week, Fano, ACF, and the volume alarm. No new state
@@ -3949,7 +3941,7 @@ def events_dow_strength(spark, sf_dir):
 def streaming_dow_strength(spark, sf_dir):
     """Structured Streaming: the EIGHTH report off the ONE streamed
     sufficient statistic — the PSI tier's (day, bucket) cube in
-    ValueState sums to per-type day totals, which carry everything
+    state sums to per-type day totals, which carry everything
     the weekday-effect eta² needs, via the batch twin's shared
     ``dow_strength_from_day_counts`` expressions. Bit-identical to
     the batch query with its full oracle; no new state schema, no new
@@ -8621,7 +8613,7 @@ def events_volume_binseg(spark, sf_dir):
 def streaming_volume_binseg(spark, sf_dir):
     """Structured Streaming: the FOURTEENTH report off the ONE
     streamed sufficient statistic — the PSI tier's per-type
-    (day, bucket) count cube in ValueState sums across buckets AND
+    (day, bucket) count cube in state sums across buckets AND
     types to the corpus-wide daily volume the depth-2
     binary-segmentation monitor runs on, so multi-changepoint
     detection joins PSI, JSD, CUSUM-per-type, the volume alarms, the

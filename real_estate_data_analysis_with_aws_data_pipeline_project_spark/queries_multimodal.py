@@ -398,9 +398,9 @@ def q_streaming_click_purchase_join(spark, sf_dir):
     """,
 )
 def q_streaming_user_activity_tws(spark, sf_dir):
-    """Structured Streaming: transformWithStateInPandas (Spark 4.1
-    arbitrary-state API) per-user activity profile — ValueState +
-    MapState over a RocksDB state store. Counts and integer max only,
+    """Structured Streaming: per-user activity profile folded with
+    applyInPandasWithState (one (count, max ts, distinct types) state
+    row per user). Counts and integer max only,
     so the availableNow output carries a full DuckDB oracle."""
     return streaming_user_activity_tws(spark, sf_dir)
 

@@ -11,7 +11,7 @@ groupBy shapes whose shuffle is O(tokens or shingles), never O(pairs).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators import text as X
@@ -977,33 +977,18 @@ def quality_psi_drift(spark, sf_dir):
 def q_streaming_psi_drift(spark, sf_dir):
     """Structured Streaming: PSI drift as a stateful streaming tier.
     The stream folds the (day, bucket) count cube per event type
-    (streaming/jobs.streaming_psi_cube — ValueState bounded by
+    (streaming/jobs.streaming_psi_cube — state bounded by
     calendar x buckets); this query keeps each key's max-seq cube
     emission and runs psi_from_cube over it — the SAME Spark
     expressions as the batch twin on the SAME exact integer cube, so
     it carries the batch twin's full oracle with zero Python float
     arithmetic in the streaming loop."""
-    from .streaming.jobs import streaming_psi_cube
+    from .streaming.jobs import latest_cube, streaming_psi_cube
 
-    cube = streaming_psi_cube(spark, sf_dir)
-    # max-seq per key via max() over a key window (the CUSUM tier's
-    # row_number shape; a self-join on the memory-sink view trips a
-    # conflicting-attribute resolution quirk). The sink relation is
-    # metadata-scale: |types| x updates x days x buckets.
-    mw = Window.partitionBy("event_type")
-    final = (
-        cube.withColumn("max_seq", F.max("seq").over(mw))
-        .where(F.col("seq") == F.col("max_seq"))
-        .select("event_type", "day", "bucket", "c")
-        # break the memory-sink lineage: psi_from_cube self-joins this
-        # relation three ways, and plans rooted at the SAME MemoryPlan
-        # view hit a conflicting-attribute INTERNAL_ERROR instead of
-        # attribute dedup. The checkpoint materializes the cube — safe
-        # by construction, it is the calendar x bucket x type
-        # sufficient statistic, never the event stream.
-        .localCheckpoint(eager=True)
+    # psi_from_cube self-joins the cube three ways: checkpointed
+    return psi_from_cube(
+        latest_cube(streaming_psi_cube(spark, sf_dir), checkpoint=True)
     )
-    return psi_from_cube(final)
 
 
 # --- train/serve quantile-alignment audit (round 7, second batch) -----------
@@ -1708,24 +1693,17 @@ def streaming_jsd_drift(spark, sf_dir):
     """Structured Streaming: JSD drift as a stateful streaming tier —
     and a demonstration that ONE streamed sufficient statistic serves
     a whole family: the (day, bucket) count cube the PSI tier folds in
-    ValueState (streaming/jobs.streaming_psi_cube) is also JSD's
+    state (streaming/jobs.streaming_psi_cube) is also JSD's
     complete statistic, so this query reuses that exact fold and only
     swaps the report expressions (jsd_from_cube vs psi_from_cube). No
     new state schema, no new Python in the loop; the report is
     bit-identical to the batch twin and carries its full oracle."""
-    from .streaming.jobs import streaming_psi_cube
+    from .streaming.jobs import latest_cube, streaming_psi_cube
 
-    cube = streaming_psi_cube(spark, sf_dir)
-    mw = Window.partitionBy("event_type")
-    final = (
-        cube.withColumn("max_seq", F.max("seq").over(mw))
-        .where(F.col("seq") == F.col("max_seq"))
-        .select("event_type", "day", "bucket", "c")
-        # break the memory-sink lineage before the three-branch
-        # consumption (conflicting-attribute quirk — see the PSI tier)
-        .localCheckpoint(eager=True)
+    # three-branch consumption: checkpointed (see latest_cube)
+    return jsd_from_cube(
+        latest_cube(streaming_psi_cube(spark, sf_dir), checkpoint=True)
     )
-    return jsd_from_cube(final)
 
 
 # --- cross-table financial reconciliation audit (round 9, late batch) -------
@@ -2230,8 +2208,8 @@ def dq_benford_chi2_gate(spark, sf_dir):
 # The dq_benford_chi2_gate statistic run CONTINUOUSLY on the event
 # stream's value column, per event type — the transaction-amount
 # drift monitor a fraud desk keeps open. The stream folds the
-# per-type (day, leading-digit) count cube in ValueState
-# (streaming/jobs.streaming_benford_cube — the SAME processor and
+# per-type (day, leading-digit) count cube in state
+# (streaming/jobs.streaming_benford_cube — the SAME fold and
 # state schema as the PSI tier, bucket = leading digit of the value
 # cents, state bounded by calendar × 10 groups, the smallest cube of
 # any tier); this query keeps each key's max-seq cube emission and
@@ -2319,19 +2297,10 @@ def q_streaming_benford_gate(spark, sf_dir):
     sink relation is |types| × updates × that cube — metadata-scale;
     the gate arithmetic runs on the ≤ 9-row-per-type densified grid
     with a broadcast digit table."""
-    from .streaming.jobs import streaming_benford_cube
+    from .streaming.jobs import latest_cube, streaming_benford_cube
 
-    cube = streaming_benford_cube(spark, sf_dir)
-    mw = Window.partitionBy("event_type")
-    final = (
-        cube.withColumn("max_seq", F.max("seq").over(mw))
-        .where(F.col("seq") == F.col("max_seq"))
-        .select("event_type", "bucket", "c")
-        # break the memory-sink lineage before the multi-branch
-        # grid/excl joins (the streaming_psi_drift convention);
-        # type × calendar × 10 groups — metadata-scale
-        .localCheckpoint(eager=True)
-    )
+    # multi-branch grid/excl joins: checkpointed (see latest_cube)
+    final = latest_cube(streaming_benford_cube(spark, sf_dir), checkpoint=True)
     digits = (
         final.where(F.col("bucket").isNotNull())
         .groupBy("event_type", F.col("bucket").alias("digit"))

@@ -1163,9 +1163,8 @@ _SKMV_ORACLE = f"""
 @register("streaming_kmv_distinct", _SKMV_ORACLE)
 def q_streaming_kmv_distinct(spark, sf_dir):
     """Structured Streaming: the KMV bottom-k distinct sketch as a
-    stateful streaming aggregate (ValueState of the ≤ k smallest md5
-    hashes per event type; transformWithStateInPandas with an
-    applyInPandasWithState fallback). Because the sketch is a
+    stateful streaming aggregate (applyInPandasWithState state of the
+    ≤ k smallest md5 hashes per event type). Because the sketch is a
     deterministic function of the key SET, the streamed fold equals
     the batch sketch exactly — full oracle, not an envelope. kth_hash
     only ever decreases across updates, so min() per key reads the

@@ -8,7 +8,8 @@ shapes as queries_events.py through readStream → writeStream:
 - watermark for late data,
 - tumbling-window aggregation,
 - session windows,
-- applyInPandasWithState custom stateful operator.
+- applyInPandasWithState, the one custom stateful operator: every
+  arbitrary-state tier folds through ``_fold_state``.
 
 Each job drives a memory-sink query to completion synchronously
 (processAllAvailable) and returns the result as a DataFrame — so the
@@ -63,34 +64,28 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return normalize_events_ts(stream, raw_schema)
 
 
-def _run_to_memory(result: DataFrame, name: str, output_mode: str) -> None:
-    """Drive the streaming query to completion into a memory sink.
+# Shuffle width of every streaming query. Each stateful operator keeps
+# one state store (directory, commit files, task) per shuffle partition,
+# and every tier here folds a DIMENSION-bounded state (event types ×
+# windows/buckets — thousands of keys at most), so the batch engine's
+# width paid 32 state stores' worth of per-batch commit overhead for
+# tiny state: the PSI tier measured 3.9 s at 32 partitions vs 1.8 s at 4.
+_STATE_PARTITIONS = "8"
 
-    r17 (guide §2.2/§5): stateful streaming operators allocate one
-    state-store instance (directory, commit files, task) per shuffle
-    partition, and every tier here folds a DIMENSION-bounded state
-    (event types × windows/buckets — thousands of keys at most), so
-    running them at the batch engine's shuffle width paid 32 state
-    stores' worth of per-batch commit overhead for tiny state: the
-    PSI tier measured 3.9 s at 32 partitions vs 1.8 s at 4. The
-    state width is its own knob (``spark.graft.streaming.statePartitions``
-    conf or ``$SPARK_GRAFT_STREAM_PARTITIONS``, default 8 — sized to
-    the state's key cardinality, NOT the input's core count; raise it
-    in production when per-key state across 8 partitions no longer
-    fits an executor). The batch shuffle width is restored after the
-    stream stops, so only the streaming query plans at the narrower
-    width; results are partitioning-independent aggregates either
-    way."""
-    import os
 
+def _run_to_memory(result: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Drive the streaming query to completion into the memory sink
+    ``name`` and return that table.
+
+    The query plans at ``_STATE_PARTITIONS``, sized to the state's key
+    cardinality rather than the input's core count; the batch shuffle
+    width is restored afterwards, also when ``start()`` fails, so only
+    the streaming query plans at the narrower width. Results are
+    partitioning-independent aggregates either way."""
     spark = result.sparkSession
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    n_state = spark.conf.get(
-        "spark.graft.streaming.statePartitions",
-        os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"),
-    )
     try:
-        spark.conf.set("spark.sql.shuffle.partitions", n_state)
+        spark.conf.set("spark.sql.shuffle.partitions", _STATE_PARTITIONS)
         q = (
             result.writeStream.outputMode(output_mode)
             .format("memory")
@@ -102,6 +97,7 @@ def _run_to_memory(result: DataFrame, name: str, output_mode: str) -> None:
         q.stop()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+    return spark.table(name)
 
 
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -121,8 +117,7 @@ def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
-    _run_to_memory(agg, "stream_tumbling", "complete")
-    return spark.table("stream_tumbling")
+    return _run_to_memory(agg, "stream_tumbling", "complete")
 
 
 def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -156,8 +151,7 @@ def streaming_ohlc_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    _run_to_memory(agg, "stream_ohlc", "complete")
-    return spark.table("stream_ohlc")
+    return _run_to_memory(agg, "stream_ohlc", "complete")
 
 
 # Burst threshold, defined ONCE (the SESSION_GAP rule): the batch
@@ -193,8 +187,7 @@ def streaming_rate_limit_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_in_window",
         )
     )
-    _run_to_memory(agg, "stream_rate_limit", "complete")
-    return spark.table("stream_rate_limit")
+    return _run_to_memory(agg, "stream_rate_limit", "complete")
 
 
 def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,8 +205,7 @@ def streaming_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_events",
         )
     )
-    _run_to_memory(agg, "stream_sessions", "complete")
-    return spark.table("stream_sessions")
+    return _run_to_memory(agg, "stream_sessions", "complete")
 
 
 _STATE_SCHEMA = T.StructType(
@@ -277,9 +269,8 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "event_type")
     )
-    _run_to_memory(deduped, "stream_dedup_events", "append")
     return (
-        spark.table("stream_dedup_events")
+        _run_to_memory(deduped, "stream_dedup_events", "append")
         .groupBy("event_type")
         .agg(F.count("*").alias("n_unique_events"))
     )
@@ -333,8 +324,23 @@ def streaming_click_purchase_join(
         .cast("bigint")
         .alias("gap_seconds"),
     )
-    _run_to_memory(joined, "stream_click_purchase", "append")
-    return spark.table("stream_click_purchase")
+    return _run_to_memory(joined, "stream_click_purchase", "append")
+
+
+def _fold_state(src: DataFrame, key: str, fn, out_schema, state_schema) -> DataFrame:
+    """The one spelling of the stateful operator: group ``src`` by
+    ``key`` and fold each group's rows into its per-key state with
+    ``fn(key, pdfs, state)`` (applyInPandasWithState, update mode, no
+    timeout). Every stateful tier attaches through here. A deployment
+    that wants RocksDB state sets
+    ``spark.sql.streaming.stateStore.providerClass`` itself."""
+    return src.groupBy(key).applyInPandasWithState(
+        fn,
+        outputStructType=out_schema,
+        stateStructType=state_schema,
+        outputMode="update",
+        timeoutConf="NoTimeout",
+    )
 
 
 def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -342,19 +348,14 @@ def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     count/sum/max per user) — the custom-stateful-operator surface.
     Arrow-batched; state is a compact 3-field tuple per user, so state
     size is O(users), not O(events)."""
-    result = (
-        _events_stream(spark, sf_dir)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _user_stats_fn,
-            outputStructType=_STATEFUL_OUT_SCHEMA,
-            stateStructType=_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
+    result = _fold_state(
+        _events_stream(spark, sf_dir),
+        "user_id",
+        _user_stats_fn,
+        _STATEFUL_OUT_SCHEMA,
+        _STATE_SCHEMA,
     )
-    _run_to_memory(result, "stream_user_stats", "update")
-    return spark.table("stream_user_stats").select(
+    return _run_to_memory(result, "stream_user_stats", "update").select(
         "user_id",
         "n_events",
         F.round("total_value", 2).alias("total_value"),
@@ -362,96 +363,10 @@ def streaming_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-class _UserActivityProcessor:
-    """StatefulProcessor for transformWithStateInPandas (Spark 4.1
-    arbitrary-state API, successor to applyInPandasWithState): per-user
-    running profile held in two typed state variables — a ValueState
-    (event count + max event time) and a MapState (per-event-type
-    counts). State is O(users × event types); the RocksDB state store
-    the operator requires spills it off-heap, which is what makes the
-    100 TB keyspace story work on real clusters."""
-
-    def init(self, handle) -> None:
-        self._agg = handle.getValueState("agg", "n BIGINT, mx BIGINT")
-        self._types = handle.getMapState("types", "t STRING", "c BIGINT")
-
-    def handleInputRows(self, key, rows, timerValues):
-        n, mx = (self._agg.get() or (0, None)) if self._agg.exists() else (0, None)
-        batch_types: dict[str, int] = {}
-        for pdf in rows:
-            n += len(pdf)
-            m = int(pdf["ts_us"].max())
-            mx = m if mx is None else max(mx, m)
-            for t, c in pdf["event_type"].value_counts().items():
-                batch_types[t] = batch_types.get(t, 0) + int(c)
-        for t, c in batch_types.items():
-            prev = (
-                self._types.getValue((t,))[0]
-                if self._types.containsKey((t,))
-                else 0
-            )
-            self._types.updateValue((t,), (prev + c,))
-        self._agg.update((n, mx))
-        n_types = sum(1 for _ in self._types.keys())
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_event_types": [n_types],
-                "n_events": [n],
-                "max_ts_us": [mx],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-_TWS_OUT_SCHEMA = (
-    "user_id BIGINT, n_event_types BIGINT, n_events BIGINT, max_ts_us BIGINT"
-)
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-)
-
-
-def _run_with_rocksdb(spark: SparkSession, result: DataFrame, name: str) -> None:
-    """Drive an update-mode transformWithState sink under the RocksDB
-    state-store provider, restoring the prior provider setting
-    afterwards. Shared by every TWS tier (user-activity, KMV, CUSUM,
-    PSI) — the set/try/finally/restore dance was previously
-    copy-pasted per tier (r9 review)."""
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
-        _run_to_memory(result, name, "update")
-    finally:
-        if prev is None:
-            spark.conf.unset(conf_key)
-        else:
-            spark.conf.set(conf_key, prev)
-
-
-def _tws_protocol_available() -> bool:
-    """transformWithState's Python state server speaks protobuf
-    (pyspark.sql.streaming.proto.StateMessage_pb2); without the
-    ``protobuf`` package the driver worker crashes at init. Gate on
-    the import so environments without it take the
-    applyInPandasWithState fallback with identical semantics."""
-    import importlib.util
-
-    try:
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:  # no 'google' namespace package at all
-        return False
-
-
-def _user_activity_fallback_fn(key, pdfs: Iterator[pd.DataFrame], state):
-    """applyInPandasWithState twin of _UserActivityProcessor: same
-    per-user profile, state as one (n, mx, distinct-types array) row."""
-    n, mx, types = (
-        state.get if state.exists else (0, None, [])
-    )
+def _user_activity_fn(key, pdfs: Iterator[pd.DataFrame], state):
+    """Per-user activity fold; state is one (n, mx, distinct-types
+    array) row."""
+    n, mx, types = state.get if state.exists else (0, None, [])
     seen = set(types)
     for pdf in pdfs:
         n += len(pdf)
@@ -470,53 +385,29 @@ def _user_activity_fallback_fn(key, pdfs: Iterator[pd.DataFrame], state):
 
 
 def streaming_user_activity_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """transformWithStateInPandas job: per-user distinct-event-type
-    count, total events, and last event time. Counts and max over
+    """Per-user distinct-event-type count, total events and last event
+    time, folded with applyInPandasWithState. Counts and max over
     integers — exact across engines, so unlike the float-summing
-    applyInPandasWithState twin this one carries a full DuckDB oracle.
-
-    Where the TWS protobuf protocol isn't available (this container
-    ships no ``protobuf``), the job runs the same semantics through
-    applyInPandasWithState — output and oracle identical; only the
-    state layout differs (typed ValueState+MapState vs one struct)."""
-    result, tws = user_activity_transform(spark, sf_dir)
-    if tws:
-        _run_with_rocksdb(spark, result, "stream_user_activity_tws")
-    else:
-        _run_to_memory(result, "stream_user_activity_tws", "update")
-    return spark.table("stream_user_activity_tws")
+    streaming_stateful_user_stats this one carries a full DuckDB
+    oracle. The ``_tws`` suffix is the registered query's name."""
+    return _run_to_memory(
+        user_activity_transform(spark, sf_dir), "stream_user_activity_tws", "update"
+    )
 
 
-def user_activity_transform(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, bool]:
-    """(unstarted transformed stream, uses_tws) — the per-user
-    activity fold WITHOUT a sink (the psi_cube_transform pattern,
-    r11), so the restart-recovery test can drive the production
-    transform — the ValueState+MapState layout on the TWS path —
-    through its own checkpointed sink."""
+def user_activity_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The unstarted per-user activity fold, WITHOUT a sink (the
+    psi_cube_transform pattern), so the restart-recovery test can drive
+    the production transform through its own checkpointed sink."""
     src = _events_stream(spark, sf_dir).select(
         "user_id", "event_type", F.unix_micros("ts").alias("ts_us")
     )
-    if _tws_protocol_available():
-        return (
-            src.groupBy("user_id").transformWithStateInPandas(
-                statefulProcessor=_UserActivityProcessor(),
-                outputStructType=_TWS_OUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            ),
-            True,
-        )
-    return (
-        src.groupBy("user_id").applyInPandasWithState(
-            _user_activity_fallback_fn,
-            outputStructType=_TWS_OUT_SCHEMA,
-            stateStructType="n BIGINT, mx BIGINT, types ARRAY<STRING>",
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        ),
-        False,
+    return _fold_state(
+        src,
+        "user_id",
+        _user_activity_fn,
+        "user_id BIGINT, n_event_types BIGINT, n_events BIGINT, max_ts_us BIGINT",
+        "n BIGINT, mx BIGINT, types ARRAY<STRING>",
     )
 
 
@@ -553,8 +444,7 @@ def streaming_window_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.element_at("qs", 2).alias("p90_approx"),
         )
     )
-    _run_to_memory(agg, "stream_window_quantiles", "complete")
-    return spark.table("stream_window_quantiles")
+    return _run_to_memory(agg, "stream_window_quantiles", "complete")
 
 
 # --- streaming KMV bottom-k distinct tier (round 8) -------------------------
@@ -568,69 +458,28 @@ def streaming_window_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # store never sees the user set, only its bottom-k).
 
 
-class _KMVProcessor:
-    """StatefulProcessor: ValueState holding the sorted bottom-k hash
-    array; each batch merges its hashes and re-truncates to k."""
-
-    def __init__(self, k: int) -> None:
-        self._k = k
-
-    def init(self, handle) -> None:
-        self._sk = handle.getValueState("sk", "hs ARRAY<STRING>")
-
-    def handleInputRows(self, key, rows, timerValues):
-        cur = list(self._sk.get()[0]) if self._sk.exists() else []
-        s = set(cur)
-        for pdf in rows:
-            s.update(pdf["h"].tolist())
-        merged = sorted(s)[: self._k]
-        self._sk.update((merged,))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "kth_hash": [
-                    merged[self._k - 1] if len(merged) >= self._k else None
-                ],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-_KMV_OUT_SCHEMA = "event_type STRING, kth_hash STRING"
-
-
 def streaming_kmv_distinct(
     spark: SparkSession, sf_dir: str, k: int
 ) -> DataFrame:
-    """Streaming KMV distinct tier (ROADMAP second-draft #2): per
-    event type, fold the stream's md5 key hashes into a bottom-k
-    ValueState and emit the running k-th smallest hash — the sketch's
-    whole state in one bounded array. The registered query
-    (sketch family) turns the final kth hash into the (k−1)/u
-    estimate with the exact arithmetic of the batch twin.
+    """Streaming KMV distinct tier: per event type, fold the stream's
+    md5 key hashes into a bottom-k state array and emit the running
+    k-th smallest hash — the sketch's whole state in one bounded
+    array. The registered query (sketch family) turns the final kth
+    hash into the (k−1)/u estimate with the exact arithmetic of the
+    batch twin.
 
     kth_hash is NON-INCREASING across updates (bottom-k only ever
     shrinks), so the final sketch is min(kth_hash) per key even if
-    availableNow splits the source into several batches. Falls back to
-    applyInPandasWithState where the TWS protobuf protocol is absent,
-    same semantics (one struct holding the array)."""
-    result, tws = kmv_transform(spark, sf_dir, k)
-    if tws:
-        _run_with_rocksdb(spark, result, "stream_kmv_distinct")
-    else:
-        _run_to_memory(result, "stream_kmv_distinct", "update")
-    return spark.table("stream_kmv_distinct")
+    availableNow splits the source into several batches."""
+    return _run_to_memory(
+        kmv_transform(spark, sf_dir, k), "stream_kmv_distinct", "update"
+    )
 
 
-def kmv_transform(
-    spark: SparkSession, sf_dir: str, k: int
-) -> tuple[DataFrame, bool]:
-    """(unstarted transformed stream, uses_tws) — the bottom-k fold
-    WITHOUT a sink (the psi_cube_transform pattern, r11), so the
-    restart-recovery test can drive the production transform through
-    its own checkpointed sink."""
+def kmv_transform(spark: SparkSession, sf_dir: str, k: int) -> DataFrame:
+    """The unstarted bottom-k fold, WITHOUT a sink (the
+    psi_cube_transform pattern), so the restart-recovery test can drive
+    the production transform through its own checkpointed sink."""
     src = _events_stream(spark, sf_dir).select(
         "event_type",
         F.md5(
@@ -639,20 +488,9 @@ def kmv_transform(
             )
         ).alias("h"),
     )
-    if _tws_protocol_available():
-        return (
-            src.groupBy("event_type").transformWithStateInPandas(
-                statefulProcessor=_KMVProcessor(k),
-                outputStructType=_KMV_OUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            ),
-            True,
-        )
 
-    def _kmv_fallback_fn(key, pdfs: Iterator[pd.DataFrame], state):
-        cur = list(state.get[0]) if state.exists else []
-        s = set(cur)
+    def _kmv_fn(key, pdfs: Iterator[pd.DataFrame], state):
+        s = set(state.get[0]) if state.exists else set()
         for pdf in pdfs:
             s.update(pdf["h"].tolist())
         merged = sorted(s)[:k]
@@ -660,21 +498,16 @@ def kmv_transform(
         yield pd.DataFrame(
             {
                 "event_type": [key[0]],
-                "kth_hash": [
-                    merged[k - 1] if len(merged) >= k else None
-                ],
+                "kth_hash": [merged[k - 1] if len(merged) >= k else None],
             }
         )
 
-    return (
-        src.groupBy("event_type").applyInPandasWithState(
-            _kmv_fallback_fn,
-            outputStructType=_KMV_OUT_SCHEMA,
-            stateStructType="hs ARRAY<STRING>",
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        ),
-        False,
+    return _fold_state(
+        src,
+        "event_type",
+        _kmv_fn,
+        "event_type STRING, kth_hash STRING",
+        "hs ARRAY<STRING>",
     )
 
 
@@ -717,17 +550,17 @@ def _cusum_peak(days: list, cnts: list):
     return nd, best_day, best_s
 
 
-def _cusum_fold(state_get, exists: bool, pdfs) -> tuple:
-    """Shared fold body for both stateful APIs (the _psi_fold pattern,
-    r9 review): merge the batch's day counts into the state map, bump
-    seq, and return the new (days, cnts, seq) state tuple. NULL days
-    (NULL ts) are counted as their own group — value_counts' default
-    dropna would silently drop rows the batch twin counts."""
-    if exists:
-        days, cnts, seq = state_get
-        m = dict(zip(days, (int(c) for c in cnts)))
-    else:
+def _cusum_fold(prev, pdfs) -> tuple:
+    """Merge the batch's day counts into the state map ``prev`` (a
+    (days, cnts, seq) state tuple, or None for a new key), bump seq,
+    and return the new state tuple. NULL days (NULL ts) are counted as
+    their own group — value_counts' default dropna would silently drop
+    rows the batch twin counts."""
+    if prev is None:
         m, seq = {}, 0
+    else:
+        days, cnts, seq = prev
+        m = dict(zip(days, (int(c) for c in cnts)))
     for pdf in pdfs:
         for d, c in pdf["day"].value_counts(dropna=False).items():
             d = None if pd.isna(d) else d
@@ -737,46 +570,10 @@ def _cusum_fold(state_get, exists: bool, pdfs) -> tuple:
     return days, [m[d] for d in days], seq
 
 
-_CUSUM_OUT_SCHEMA = (
-    "event_type STRING, seq BIGINT, n_days BIGINT, "
-    "change_day STRING, snum BIGINT"
-)
-_CUSUM_STATE_SCHEMA = "days ARRAY<STRING>, cnts ARRAY<LONG>, seq BIGINT"
-
-
-class _CUSUMProcessor:
-    """StatefulProcessor: ValueState holding the sorted (day, count)
-    arrays + update sequence; each batch merges day counts and emits
-    the recomputed change-point."""
-
-    def init(self, handle) -> None:
-        self._st = handle.getValueState("st", _CUSUM_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        st = self._st.get() if self._st.exists() else None
-        days, cnts, seq = _cusum_fold(st, st is not None, rows)
-        self._st.update((days, cnts, seq))
-        nd, day, snum = _cusum_peak(days, cnts)
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]],
-                "seq": [seq],
-                "n_days": [nd],
-                "change_day": [day],
-                "snum": [snum],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def _cusum_fallback_fn(key, pdfs: Iterator[pd.DataFrame], state):
-    """applyInPandasWithState spelling of the CUSUM fold (no-protobuf
-    environments) — same ``_cusum_fold``/``_cusum_peak`` body as the
-    TWS processor."""
-    st = state.get if state.exists else None
-    days, cnts, seq = _cusum_fold(st, st is not None, pdfs)
+def _cusum_fn(key, pdfs: Iterator[pd.DataFrame], state):
+    """Fold the batch into the key's day-count map and emit the
+    recomputed change-point."""
+    days, cnts, seq = _cusum_fold(state.get if state.exists else None, pdfs)
     state.update((days, cnts, seq))
     nd, day, snum = _cusum_peak(days, cnts)
     yield pd.DataFrame(
@@ -790,91 +587,64 @@ def _cusum_fallback_fn(key, pdfs: Iterator[pd.DataFrame], state):
     )
 
 
-def cusum_transform(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, bool]:
-    """(unstarted transformed stream, uses_tws) — the CUSUM fold
-    WITHOUT a sink (the psi_cube_transform pattern, r11), so the
-    restart-recovery test can drive the production transform through
-    its own checkpointed sink."""
+def cusum_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The unstarted CUSUM fold, WITHOUT a sink (the psi_cube_transform
+    pattern), so the restart-recovery test can drive the production
+    transform through its own checkpointed sink."""
     src = _events_stream(spark, sf_dir).select(
         "event_type",
         F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias(
             "day"
         ),
     )
-    if _tws_protocol_available():
-        return (
-            src.groupBy("event_type").transformWithStateInPandas(
-                statefulProcessor=_CUSUMProcessor(),
-                outputStructType=_CUSUM_OUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            ),
-            True,
-        )
-    return (
-        src.groupBy("event_type").applyInPandasWithState(
-            _cusum_fallback_fn,
-            outputStructType=_CUSUM_OUT_SCHEMA,
-            stateStructType=_CUSUM_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        ),
-        False,
+    return _fold_state(
+        src,
+        "event_type",
+        _cusum_fn,
+        "event_type STRING, seq BIGINT, n_days BIGINT, "
+        "change_day STRING, snum BIGINT",
+        "days ARRAY<STRING>, cnts ARRAY<LONG>, seq BIGINT",
     )
 
 
 def streaming_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming CUSUM change-point tier (ROADMAP r9 candidate #1):
-    per event type, fold the stream into a calendar-bounded day-count
-    map in ValueState and emit the recomputed integer-exact CUSUM
-    argmax on every update. transformWithStateInPandas with an
-    applyInPandasWithState fallback, like the KMV tier. The registered
-    query (queries_events.py) keeps each key's max-seq row and applies
-    the batch twin's exact display arithmetic, so it carries the batch
-    twin's full oracle."""
-    result, tws = cusum_transform(spark, sf_dir)
-    if tws:
-        _run_with_rocksdb(spark, result, "stream_cusum_changepoint")
-    else:
-        _run_to_memory(result, "stream_cusum_changepoint", "update")
-    return spark.table("stream_cusum_changepoint")
+    """Streaming CUSUM change-point tier: per event type, fold the
+    stream into a calendar-bounded day-count map held in
+    applyInPandasWithState and emit the recomputed integer-exact CUSUM
+    argmax on every update. The registered query (queries_events.py)
+    keeps each key's max-seq row and applies the batch twin's exact
+    display arithmetic, so it carries the batch twin's full oracle."""
+    return _run_to_memory(
+        cusum_transform(spark, sf_dir), "stream_cusum_changepoint", "update"
+    )
 
 
 # --- streaming PSI drift tier (round 9) --------------------------------------
 #
 # PSI vs the pooled reference is, like CUSUM, a two-pass statistic —
 # but its SUFFICIENT statistic streams: the (day, bucket) count cube
-# per event type (calendar x fixed-bucket bounded). The processor only
-# FOLDS the cube; the PSI arithmetic stays in the registered query's
-# Spark expressions (queries_quality.psi_from_cube), so the streamed
-# report is bit-identical to the batch twin with no Python float
-# rounding in the loop at all.
+# per event type (calendar x fixed-bucket bounded). The stateful
+# operator only FOLDS the cube; the PSI arithmetic stays in the
+# registered query's Spark expressions (queries_quality.psi_from_cube),
+# so the streamed report is bit-identical to the batch twin with no
+# Python float rounding in the loop at all.
 
 
-_PSI_TIER_OUT_SCHEMA = (
-    "event_type STRING, seq BIGINT, day STRING, bucket BIGINT, c BIGINT"
-)
-_PSI_TIER_STATE_SCHEMA = (
-    "days ARRAY<STRING>, buckets ARRAY<LONG>, cnts ARRAY<LONG>, seq BIGINT"
-)
-
-
-def _psi_fold(state_get, exists: bool, pdfs) -> tuple:
-    """Shared fold body for both stateful APIs: merge the batch's
-    (day, bucket) counts into the state cube, bump seq, and return the
-    new state tuple. NULL days/buckets (NULL ts/value) are kept as
-    their own groups — pandas groupby's default dropna would silently
-    drop rows the batch twin's groupBy counts (r9 review)."""
-    if exists:
-        days, buckets, cnts, seq = state_get
+def _psi_fold(prev, pdfs) -> tuple:
+    """Merge the batch's (day, bucket) counts into the state cube
+    ``prev`` (a (days, buckets, cnts, seq) state tuple, or None for a
+    new key), bump seq, and return the new state tuple. NULL
+    days/buckets (NULL ts/value) are kept as their own groups — pandas
+    groupby's default dropna would silently drop rows the batch twin's
+    groupBy counts."""
+    if prev is None:
+        m, seq = {}, 0
+    else:
+        days, buckets, cnts, seq = prev
         m = {
             (d, None if b is None else int(b)): int(c)
             for d, b, c in zip(days, buckets, cnts)
         }
-    else:
-        m, seq = {}, 0
     for pdf in pdfs:
         grp = pdf.groupby(["day", "bucket"], dropna=False).size()
         for (d, b), c in grp.items():
@@ -893,37 +663,10 @@ def _psi_fold(state_get, exists: bool, pdfs) -> tuple:
     )
 
 
-class _PSIProcessor:
-    """StatefulProcessor: ValueState holding the (day, bucket, count)
-    cube arrays + update sequence; each batch merges and re-emits the
-    whole (bounded) cube."""
-
-    def init(self, handle) -> None:
-        self._st = handle.getValueState("st", _PSI_TIER_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        st = self._st.get() if self._st.exists() else None
-        days, buckets, cnts, seq = _psi_fold(st, st is not None, rows)
-        self._st.update((days, buckets, cnts, seq))
-        yield pd.DataFrame(
-            {
-                "event_type": [key[0]] * len(days),
-                "seq": [seq] * len(days),
-                "day": days,
-                "bucket": buckets,
-                "c": cnts,
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def _psi_fallback_fn(key, pdfs: Iterator[pd.DataFrame], state):
-    """applyInPandasWithState spelling of the PSI fold (no-protobuf
-    environments) — same ``_psi_fold`` body as the TWS processor."""
-    st = state.get if state.exists else None
-    days, buckets, cnts, seq = _psi_fold(st, st is not None, pdfs)
+def _psi_fn(key, pdfs: Iterator[pd.DataFrame], state):
+    """Fold the batch into the key's cube and re-emit the whole
+    (bounded) cube with the update's sequence number."""
+    days, buckets, cnts, seq = _psi_fold(state.get if state.exists else None, pdfs)
     state.update((days, buckets, cnts, seq))
     yield pd.DataFrame(
         {
@@ -936,53 +679,35 @@ def _psi_fallback_fn(key, pdfs: Iterator[pd.DataFrame], state):
     )
 
 
-def _day_bucket_cube_attach(src: DataFrame) -> tuple[DataFrame, bool]:
-    """Attach the (day, bucket) cube fold to a prepared
-    (event_type, day, bucket) stream — ONE definition of the
-    TWS/fallback branch shared by every cube-shaped tier (r14: the
-    Benford digit cube reuses the PSI fold verbatim; the bucket
-    column is opaque to the processor)."""
-    if _tws_protocol_available():
-        return (
-            src.groupBy("event_type").transformWithStateInPandas(
-                statefulProcessor=_PSIProcessor(),
-                outputStructType=_PSI_TIER_OUT_SCHEMA,
-                outputMode="Update",
-                timeMode="None",
-            ),
-            True,
-        )
-    return (
-        src.groupBy("event_type").applyInPandasWithState(
-            _psi_fallback_fn,
-            outputStructType=_PSI_TIER_OUT_SCHEMA,
-            stateStructType=_PSI_TIER_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        ),
-        False,
-    )
-
-
-def psi_cube_transform(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, bool]:
-    """(unstarted transformed stream, uses_tws) — the PSI cube fold
-    WITHOUT a sink, so callers can attach their own (the registered
-    query runs it to a memory table; the restart-recovery test runs
-    it twice through one checkpointLocation). Split out in r11 so the
-    recovery path of the state every derived tier shares is testable
-    against the production transform, not a re-implementation."""
-    from ..queries_quality import psi_bucket_col
-
+def _day_bucket_cube(spark: SparkSession, sf_dir: str, bucket) -> DataFrame:
+    """The unstarted (day, bucket) cube fold per event type, WITHOUT a
+    sink, so callers can attach their own (the registered queries run
+    it to a memory table; the restart-recovery tests run it twice
+    through one checkpointLocation). ONE definition shared by every
+    cube-shaped tier: the bucket column is opaque to the fold."""
     src = _events_stream(spark, sf_dir).select(
         "event_type",
         F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias(
             "day"
         ),
-        psi_bucket_col().alias("bucket"),
+        bucket.alias("bucket"),
     )
-    return _day_bucket_cube_attach(src)
+    return _fold_state(
+        src,
+        "event_type",
+        _psi_fn,
+        "event_type STRING, seq BIGINT, day STRING, bucket BIGINT, c BIGINT",
+        "days ARRAY<STRING>, buckets ARRAY<LONG>, cnts ARRAY<LONG>, seq BIGINT",
+    )
+
+
+def psi_cube_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The unstarted PSI cube fold (bucket = ``psi_bucket_col``): the
+    state every derived PSI-cube tier shares, testable for restart
+    recovery against the production transform."""
+    from ..queries_quality import psi_bucket_col
+
+    return _day_bucket_cube(spark, sf_dir, psi_bucket_col())
 
 
 def benford_digit_col():
@@ -1001,56 +726,59 @@ def benford_digit_col():
     )
 
 
-def benford_cube_transform(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, bool]:
-    """(unstarted transformed stream, uses_tws) — the Benford
-    leading-digit cube: the SAME day-bucket fold as the PSI tier
-    (shared processor, shared state schema, shared restart story)
+def benford_cube_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The unstarted Benford leading-digit cube: the SAME day-bucket
+    fold as the PSI tier (shared fold, state schema and restart story)
     with bucket = leading digit of the event value's cents. State per
     key is calendar × (9 digits + the NULL/sub-cent group) — bounded
     by construction, the smallest cube of any tier."""
-    src = _events_stream(spark, sf_dir).select(
-        "event_type",
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias(
-            "day"
-        ),
-        benford_digit_col().alias("bucket"),
-    )
-    return _day_bucket_cube_attach(src)
+    return _day_bucket_cube(spark, sf_dir, benford_digit_col())
 
 
 def streaming_benford_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming Benford tier (round 14): fold the stream into the
-    per-type (day, leading-digit) count cube in ValueState and
-    re-emit with a sequence number — TWS with the
-    applyInPandasWithState fallback, exactly like the PSI cube it
-    shares its processor with. The registered gate query keeps each
-    key's max-seq cube and runs the dq_benford_chi2_gate statistic
+    per-type (day, leading-digit) count cube and re-emit it with a
+    sequence number, exactly like the PSI cube it shares its fold
+    with. The registered gate query keeps each key's latest cube
+    (``latest_cube``) and runs the dq_benford_chi2_gate statistic
     over it."""
-    result, tws = benford_cube_transform(spark, sf_dir)
-    if tws:
-        _run_with_rocksdb(spark, result, "stream_benford_cube")
-    else:
-        _run_to_memory(result, "stream_benford_cube", "update")
-    return spark.table("stream_benford_cube")
+    return _run_to_memory(
+        benford_cube_transform(spark, sf_dir), "stream_benford_cube", "update"
+    )
 
 
 def streaming_psi_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming PSI tier (ROADMAP r10 candidate #2, landed r9): per
-    event type, fold the stream into the calendar-bounded
-    (day, bucket) count cube in ValueState and re-emit the cube on
-    every update with a sequence number. transformWithStateInPandas
-    with an applyInPandasWithState fallback, like the KMV and CUSUM
-    tiers. The registered query keeps each key's max-seq cube and runs
-    psi_from_cube over it — the batch twin's exact expressions on the
-    exact batch cube."""
-    result, tws = psi_cube_transform(spark, sf_dir)
-    if tws:
-        _run_with_rocksdb(spark, result, "stream_psi_cube")
-    else:
-        _run_to_memory(result, "stream_psi_cube", "update")
-    return spark.table("stream_psi_cube")
+    """Streaming PSI tier: per event type, fold the stream into the
+    calendar-bounded (day, bucket) count cube and re-emit the cube on
+    every update with a sequence number. The registered query keeps
+    each key's latest cube (``latest_cube``) and runs psi_from_cube
+    over it — the batch twin's exact expressions on the exact batch
+    cube."""
+    return _run_to_memory(
+        psi_cube_transform(spark, sf_dir), "stream_psi_cube", "update"
+    )
+
+
+def latest_cube(cube: DataFrame, checkpoint: bool = False) -> DataFrame:
+    """(event_type, day, bucket, c) of each key's max-seq emission in
+    a streamed cube sink — the fold's final state. One definition of
+    the latest-cube selection. max() over a key window, not a
+    self-join: a self-join on the memory-sink view trips a
+    conflicting-attribute resolution quirk. ``checkpoint=True``
+    localCheckpoints the result for reports that consume it in several
+    plan branches: plans rooted at the SAME memory-sink view hit a
+    conflicting-attribute INTERNAL_ERROR instead of attribute dedup.
+    The cube is type × calendar × bucket — metadata-scale, never the
+    event stream."""
+    from pyspark.sql import Window
+
+    mw = Window.partitionBy("event_type")
+    out = (
+        cube.withColumn("max_seq", F.max("seq").over(mw))
+        .where(F.col("seq") == F.col("max_seq"))
+        .select("event_type", "day", "bucket", "c")
+    )
+    return out.localCheckpoint(eager=True) if checkpoint else out
 
 
 def psi_cube_day_totals(
@@ -1064,23 +792,14 @@ def psi_cube_day_totals(
     the shared front half of every derived streaming tier (Fano, ACF,
     volume anomaly, mix entropy, weekday strength, EWMA forecast,
     seasonal anomaly, OLS trend, day-over-day growth, Holt trend
-    forecast):
-    keep each key's
-    max-seq cube emission and sum its buckets per (event_type, day).
-    One definition of the latest-cube selection (r10 review: eight
-    hand copies had accumulated). ``checkpoint=True`` localCheckpoints
-    the metadata-scale result for reports that consume it in multiple
-    branches (the dow-tier precedent; also required where the
-    un-checkpointed multi-branch self-join fails analysis with
-    conflicting cube references)."""
-    from pyspark.sql import Window
-
-    cube = streaming_psi_cube(spark, sf_dir)
-    mw = Window.partitionBy("event_type")
+    forecast, day-of-week seasonality): sum the latest cube's buckets
+    per (event_type, day). ``checkpoint=True`` localCheckpoints the
+    metadata-scale result for reports that consume it in multiple
+    branches (also required where the un-checkpointed multi-branch
+    self-join fails analysis with conflicting cube references)."""
     day_col = F.to_date("day").alias("day") if day_as_date else F.col("day")
     out = (
-        cube.withColumn("max_seq", F.max("seq").over(mw))
-        .where(F.col("seq") == F.col("max_seq"))
+        latest_cube(streaming_psi_cube(spark, sf_dir))
         .groupBy("event_type", day_col)
         .agg(F.sum("c").cast("bigint").alias(alias))
     )

@@ -1,7 +1,8 @@
 """The catalog's schema owner: each table's schema is inferred once per
 session and file fingerprint (``catalog.table_schema``), and every read
 after that is pinned to it, so a ``load_table`` or an events stream
-build launches no Spark job."""
+build launches no Spark job. A ratchet holds the benchmark's warm
+build calls to their measured job counts."""
 
 from __future__ import annotations
 
@@ -11,6 +12,8 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from perfbench.workloads import ANALYTICS
+from real_estate_data_analysis_with_aws_data_pipeline_project_spark.api import QUERIES
 from real_estate_data_analysis_with_aws_data_pipeline_project_spark.sources.catalog import (
     TABLES,
     load_table,
@@ -30,6 +33,17 @@ def _jobs_launched(spark, group: str, fn) -> int:
         return len(sc.statusTracker().getJobIdsForGroup(group))
     finally:
         sc.setJobGroup("", "")
+
+
+# Spark jobs launched by a warm build call (the query function, no
+# action) of each analytics_warm query at sf0.001, local[4]. Only the
+# rank kernel's driver walk is left; the catalog reads launch none.
+WARM_BUILD_JOBS = {
+    "agg_lorenz_deciles": 4,
+    "graph_jaccard_similarity": 0,
+    "tpch_q5_local_supplier_volume": 0,
+    "flagship_enriched_sample": 0,
+}
 
 
 def _value_hash(df) -> tuple:
@@ -114,3 +128,17 @@ def test_pinned_read_equals_inferred_read(spark, sf_dir):
             plain = normalize_events_ts(plain, plain.schema)
         assert pinned.schema == plain.schema, name
         assert _value_hash(pinned) == _value_hash(plain), name
+
+
+def test_analytics_warm_build_jobs_ratchet(spark, sf_dir):
+    """A warm build call of each analytics_warm query launches no more
+    Spark jobs than ``WARM_BUILD_JOBS`` records: a rise fails here
+    before it shows in the benchmark's ``queries.build_jobs``."""
+    assert set(WARM_BUILD_JOBS) == set(ANALYTICS)
+    for name, most in WARM_BUILD_JOBS.items():
+        fn = QUERIES[name].fn
+        fn(spark, sf_dir)  # cold call: fills schemas and session caches
+        jobs = _jobs_launched(
+            spark, f"warm_build_{name}", lambda: fn(spark, sf_dir)
+        )
+        assert jobs <= most, f"warm build of {name!r} launched {jobs} jobs"

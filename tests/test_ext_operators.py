@@ -683,7 +683,7 @@ def test_streaming_interval_join_matches_batch(spark, sf_dir):
 
 
 def test_streaming_tws_matches_batch(spark, sf_dir):
-    """transformWithStateInPandas (Spark 4.1): the per-user activity
+    """applyInPandasWithState per-user activity
     profile (distinct event types, event count, max event time) must
     equal the batch aggregation — integer-exact, no float channel."""
     from real_estate_data_analysis_with_aws_data_pipeline_project_spark.sources.catalog import (

@@ -542,10 +542,10 @@ def test_psi_fold_batching_invariance(rows, split):
             }
         )
 
-    once = _psi_fold(None, False, [pdf(rows)]) if rows else None
+    once = _psi_fold(None, [pdf(rows)]) if rows else None
     a, b = rows[:split], rows[split:]
-    st1 = _psi_fold(None, False, [pdf(a)] if a else [])
-    st2 = _psi_fold(st1, True, [pdf(b)] if b else [])
+    st1 = _psi_fold(None, [pdf(a)] if a else [])
+    st2 = _psi_fold(st1, [pdf(b)] if b else [])
     if rows:
         assert st2[:3] == once[:3]
         # seq counts the folds: 1 for the single fold, 2 for the split
@@ -573,10 +573,10 @@ def test_cusum_fold_batching_invariance(days, split):
         return pd.DataFrame({"day": pd.array(chunk, dtype="object")})
 
     if days:
-        once = _cusum_fold(None, False, [pdf(days)])
+        once = _cusum_fold(None, [pdf(days)])
     a, b = days[:split], days[split:]
-    st1 = _cusum_fold(None, False, [pdf(a)] if a else [])
-    st2 = _cusum_fold(st1, True, [pdf(b)] if b else [])
+    st1 = _cusum_fold(None, [pdf(a)] if a else [])
+    st2 = _cusum_fold(st1, [pdf(b)] if b else [])
     if days:
         assert st2[:2] == once[:2]
         assert once[2] == 1 and st2[2] == 2

@@ -1215,36 +1215,19 @@ def _split_events_dir(tmp_path, name):
     return d, ev, p1, t0, t1
 
 
-def _run_checkpointed(spark, transform_pair, ckpt, emitted):
+def _run_checkpointed(spark, result, ckpt, emitted):
     """Drive an unstarted stateful transform through a checkpointed
-    foreachBatch sink (the production RocksDB provider on the TWS
-    path, via the SAME constant jobs.py uses)."""
-    from real_estate_data_analysis_with_aws_data_pipeline_project_spark.streaming.jobs import (
-        _ROCKSDB_PROVIDER,
-    )
-
-    result, tws = transform_pair
-    conf_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(conf_key, None)
-    if tws:
-        spark.conf.set(conf_key, _ROCKSDB_PROVIDER)
-    try:
-        q = (
-            result.writeStream.foreachBatch(
-                lambda df, _bid: emitted.extend(df.collect())
-            )
-            .option("checkpointLocation", ckpt)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
+    foreachBatch sink."""
+    q = (
+        result.writeStream.foreachBatch(
+            lambda df, _bid: emitted.extend(df.collect())
         )
-        q.awaitTermination()
-    finally:
-        if tws:
-            if prev is None:
-                spark.conf.unset(conf_key)
-            else:
-                spark.conf.set(conf_key, prev)
+        .option("checkpointLocation", ckpt)
+        .outputMode("update")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def _cube_restart_roundtrip(spark, tmp_path, dirname, transform_fn, bucket_col):
@@ -1435,8 +1418,8 @@ def test_kmv_state_recovers_across_restart(spark, tmp_path):
 
 def test_user_activity_state_recovers_across_restart(spark, tmp_path):
     """Fourth state surface under the restart gate — the per-user
-    activity profile (ValueState + MapState on the TWS path, one
-    struct on the fallback): run-2 keys are exactly the second
+    activity profile (one (count, max ts, distinct types) state row
+    per user): run-2 keys are exactly the second
     half's users, and each run-2 emission equals the batch profile
     over that user's FULL events."""
     from collections import defaultdict

@@ -331,9 +331,9 @@ def test_streaming_fold_merge_law_across_batches():
     chunk2 = pd.DataFrame(
         {"day": ["d2", "d3", "d1"], "bucket": [0, 2, 1]}
     )
-    st1 = _psi_fold(None, False, [chunk1])
-    st2 = _psi_fold(st1[:4], True, [chunk2])
-    once = _psi_fold(None, False, [chunk1, chunk2])
+    st1 = _psi_fold(None, [chunk1])
+    st2 = _psi_fold(st1[:4], [chunk2])
+    once = _psi_fold(None, [chunk1, chunk2])
     assert st2[:3] == once[:3]  # same cube regardless of batching
     assert st2[3] == 2 and once[3] == 1  # seq counts updates
 
@@ -362,21 +362,19 @@ def test_streaming_folds_keep_null_groups():
     )
 
     days, cnts, seq = _cusum_fold(
-        None, False, [pd.DataFrame({"day": ["d1", None, None]})]
+        None, [pd.DataFrame({"day": ["d1", None, None]})]
     )
     assert days == [None, "d1"]  # None first = Spark nulls-first ASC
     assert cnts == [2, 1] and seq == 1
 
     d, b, c, seq = _psi_fold(
         None,
-        False,
         [pd.DataFrame({"day": ["d1", "d1", None], "bucket": [0, None, 3]})],
     )
     assert list(zip(d, b, c)) == [(None, 3, 1), ("d1", None, 1), ("d1", 0, 1)]
     # round-trip through state keeps the None groups intact
     d2, b2, c2, seq2 = _psi_fold(
         (d, b, c, seq),
-        True,
         [pd.DataFrame({"day": ["d1"], "bucket": [None]})],
     )
     assert (d2, b2, c2, seq2) == ([None, "d1", "d1"], [3, None, 0], [1, 2, 1], 2)
