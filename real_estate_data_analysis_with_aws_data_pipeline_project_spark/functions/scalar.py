@@ -15,6 +15,15 @@ Reference parity:
   reproducible across engines) → ``deterministic_order_key``: md5 of
   the primary key, identical in Spark and any ANSI-SQL oracle, stable
   under any partitioning/cluster size.
+
+SQL-text owners, valid in both Spark and DuckDB, so each cross-engine
+rule has one spelling:
+- ``micro_units_sql`` / ``micro6_sql``: THE micro-unit rounding rule,
+  ``floor(x·1e6 + 0.5)`` as BIGINT micro-units and the same printed at
+  6 dp. Every Spark-side quantization calls them;
+  ``entropy_term_micro_sql`` builds the Shannon term from them.
+- ``split_a_sql`` (twin of ``split_is_a``): the md5 hash-split rule.
+- ``hex_chunk_int_sql``: the md5-hex → integer decode.
 """
 
 from __future__ import annotations
@@ -110,22 +119,34 @@ def hex_chunk_int_sql(h: str, width: int, fn: str = "strpos") -> str:
     ) + ")"
 
 
+def micro_units_sql(x: str) -> str:
+    """``x`` quantized to BIGINT micro-units, ``floor(x·1e6 + 0.5)``,
+    as SQL text valid in both Spark and DuckDB — THE cross-engine
+    rounding rule. ``round(x, 6)`` on a double is itself a
+    cross-engine channel (Spark rounds HALF_UP on the shortest decimal
+    repr, DuckDB rounds the binary value), while floor of an
+    exactly-rounded IEEE product is deterministic everywhere except a
+    measure-zero boundary. ``x`` is spliced as is, so an ``x`` whose
+    top-level operator binds looser than ``*`` (binary ``+``/``-``)
+    must come parenthesized. The result is NULL when ``x`` is NULL;
+    it fits int64 for ``|x| < 9.2e12``."""
+    return f"CAST(floor({x} * 1000000e0 + 0.5e0) AS BIGINT)"
+
+
+def micro6_sql(x: str) -> str:
+    """``x`` in micro-units (``micro_units_sql``) printed at 6 decimal
+    places: the DOUBLE every oracle-hashed micro-unit column carries."""
+    return f"round({micro_units_sql(x)} / 1000000e0, 6)"
+
+
 def entropy_term_micro_sql(n: str, tot: str) -> str:
     """-p·log2(p) integerized to BIGINT micro units (p = n/tot) — ONE
     definition of the Shannon term for every entropy query in either
     engine (r10 review: four hand copies had accumulated; moved here
     from queries_events in r15 so any query module can use it without
-    importing another query module). The libm log2 is quantized with
-    floor(x·1e6 + 0.5) rather than round(x, 6): round-on-double is
-    itself a cross-engine channel (Spark HALF_UP on the shortest
-    decimal repr vs DuckDB rounding the binary value — the exact
-    1-micro class the first sf0.001 entropy sweep caught), while
-    floor of an exactly-rounded IEEE product is deterministic
-    everywhere except the same measure-zero boundary, with no second
-    rounding rule in play."""
+    importing another query module). Both the libm log2 and the term
+    are quantized by ``micro_units_sql``, not round(x, 6) (the exact
+    1-micro class the first sf0.001 entropy sweep caught)."""
     p = f"(CAST({n} AS DOUBLE) / {tot})"
-    lg = (
-        f"(CAST(floor(log2({p}) * 1000000e0 + 0.5e0) AS BIGINT)"
-        " / 1000000e0)"
-    )
-    return f"CAST(floor(-{p} * {lg} * 1000000e0 + 0.5e0) AS BIGINT)"
+    lg = f"({micro_units_sql(f'log2({p})')} / 1000000e0)"
+    return micro_units_sql(f"-{p} * {lg}")

@@ -8,8 +8,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.scalar import deterministic_order_key
+from .functions.scalar import deterministic_order_key, micro6_sql, micro_units_sql
 from .operators import text as X
+from .operators.events import sessionize
 from .operators.rank_prefix import bucket_offsets
 from .queries_dedup import MINHASH_PAIRS_ORACLE, SHINGLES_SQL, cached_shingles
 from .registry import register
@@ -1121,30 +1122,7 @@ def corpus_session_pack_shards(spark, sf_dir):
     hash-range cumsum — a 256-range parallel window plus driver-side
     prefix offsets over a 256-row aggregate — so no single-partition
     window ever sees the session relation."""
-    ev = load_table(spark, sf_dir, "events")
-    uw = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    m = ev.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.lag("ts").over(uw).alias("prev_ts"),
-    ).withColumn(
-        "new_s",
-        F.when(
-            F.col("prev_ts").isNull()
-            | (
-                F.unix_micros("ts") - F.unix_micros("prev_ts")
-                >= _PACK_GAP_US
-            ),
-            1,
-        ).otherwise(0),
-    )
-    s = m.withColumn(
-        "sid",
-        F.sum("new_s").over(
-            uw.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    s = sessionize(load_table(spark, sf_dir, "events"), _PACK_GAP_US)
     sess = s.groupBy("user_id", "sid").agg(
         F.count("*").cast("bigint").alias("n_events"),
         F.unix_micros(F.min("ts")).cast("bigint").alias("start_us"),
@@ -1517,9 +1495,9 @@ def corpus_ht_token_estimate(spark, sf_dir):
             F.expr(
                 f"CASE WHEN {_WSAMPLE_TARGET} * wt >= total_w THEN"
                 " CAST(y * 1000000 AS BIGINT)"
-                " ELSE CAST(floor(CAST(y AS DOUBLE) * total_w"
-                f" / ({_WSAMPLE_TARGET} * wt)"
-                " * 1000000e0 + 0.5e0) AS BIGINT) END"
+                " ELSE " + micro_units_sql(
+                    f"CAST(y AS DOUBLE) * total_w / ({_WSAMPLE_TARGET} * wt)"
+                ) + " END"
             ).alias("t_micro"),
         )
     )
@@ -1536,10 +1514,9 @@ def corpus_ht_token_estimate(spark, sf_dir):
             F.col("total_y").alias("exact_total_tokens"),
             F.expr("round(st / 1000000e0, 6)").alias("ht_estimate"),
             F.expr(
-                "CASE WHEN total_y > 0 THEN"
-                " round(CAST(floor(abs(CAST(st AS DOUBLE) / 1000000e0"
-                " - total_y) / total_y * 1000000e0 + 0.5e0) AS BIGINT)"
-                " / 1000000e0, 6) END"
+                "CASE WHEN total_y > 0 THEN "
+                + micro6_sql("abs(CAST(st AS DOUBLE) / 1000000e0 - total_y) / total_y")
+                + " END"
             ).alias("rel_error"),
         )
     )
@@ -1580,10 +1557,9 @@ def _dsir_bucket_sql(fn: str) -> str:
     return f"({hex_chunk_int_sql('md5(token)', 8, fn=fn)} % {_DSIR_BUCKETS})"
 
 
-_DSIR_LW_SQL = (
-    f"CAST(floor((ln(ct + 1e0) - ln(nt + {_DSIR_BUCKETS}e0)"
+_DSIR_LW_SQL = micro_units_sql(
+    f"(ln(ct + 1e0) - ln(nt + {_DSIR_BUCKETS}e0)"
     f" - ln(cr + 1e0) + ln(nr + {_DSIR_BUCKETS}e0))"
-    " * 1000000e0 + 0.5e0) AS BIGINT)"
 )
 
 _DSIR_ORACLE = f"""

@@ -341,6 +341,31 @@ def minhash_band_keys_from_sigs(mh: "DataFrame") -> "DataFrame":
     ).select("doc_id", F.posexplode("bands").alias("band_idx", "band_val"))
 
 
+def _band_candidates(bands: "DataFrame") -> "DataFrame":
+    """Distinct (doc_a, doc_b) pairs, doc_a < doc_b, sharing at least
+    one (band_idx, band_val) bucket: the banded LSH candidate set."""
+    a, b = bands.alias("a"), bands.alias("b")
+    return (
+        a.join(
+            b,
+            (F.col("a.band_idx") == F.col("b.band_idx"))
+            & (F.col("a.band_val") == F.col("b.band_val"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        )
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
+
+
+def _sa_sb_jaccard() -> F.Column:
+    """Exact shingle Jaccard |A∩B| / |A∪B| between the shingle
+    relations aliased ``sa`` and ``sb``."""
+    common = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
+    return common.cast("double") / (
+        F.size(F.col("sa.sh")) + F.size(F.col("sb.sh")) - common
+    ).cast("double")
+
+
 def minhash_verified_pairs(spark, sf_dir) -> "DataFrame":
     """The verified near-dup pair relation (doc_a < doc_b, jaccard ≥
     threshold) — the body of dedup_minhash_lsh, factored in r7 so the
@@ -353,22 +378,9 @@ def minhash_verified_pairs(spark, sf_dir) -> "DataFrame":
     # (ADVICE r1).
     sh = cached_shingles(spark, sf_dir)
     bands = minhash_band_keys_from_sigs(cached_minhash_signatures(spark, sf_dir))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _band_candidates(bands)
     sa, sb = sh.alias("sa"), sh.alias("sb")
-    common = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
-    jac = common.cast("double") / (
-        F.size(F.col("sa.sh")) + F.size(F.col("sb.sh")) - common
-    ).cast("double")
+    jac = _sa_sb_jaccard()
     return (
         cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))
         .join(sb, F.col("doc_b") == F.col("sb.doc_id"))
@@ -451,10 +463,7 @@ def incremental_minhash_pairs(spark, sf_dir) -> "DataFrame":
         .distinct()
     )
     sa, sb = sh.alias("sa"), sh.alias("sb")
-    common = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
-    jac = common.cast("double") / (
-        F.size(F.col("sa.sh")) + F.size(F.col("sb.sh")) - common
-    ).cast("double")
+    jac = _sa_sb_jaccard()
     return (
         cand.join(sa, F.col("new_doc") == F.col("sa.doc_id"))
         .join(sb, F.col("dup_of") == F.col("sb.doc_id"))
@@ -965,17 +974,7 @@ def dedup_minhash_accuracy(spark, sf_dir):
     sh = cached_shingles(spark, sf_dir)
     sig = cached_minhash_signatures(spark, sf_dir)
     bands = minhash_band_keys_from_sigs(sig)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    cand = _band_candidates(bands)
     ma, mb = sig.alias("ma"), sig.alias("mb")
     agree = sum(
         F.when(F.col(f"ma.h_{s}{ci}") == F.col(f"mb.h_{s}{ci}"), 1).otherwise(0)
@@ -983,10 +982,7 @@ def dedup_minhash_accuracy(spark, sf_dir):
     )
     est = agree / float(len(_HASH_IDS))
     sa, sb = sh.alias("sa"), sh.alias("sb")
-    common = F.size(F.array_intersect(F.col("sa.sh"), F.col("sb.sh")))
-    exact = common.cast("double") / (
-        F.size(F.col("sa.sh")) + F.size(F.col("sb.sh")) - common
-    ).cast("double")
+    exact = _sa_sb_jaccard()
     return (
         cand.join(ma, F.col("doc_a") == F.col("ma.doc_id"))
         .join(mb, F.col("doc_b") == F.col("mb.doc_id"))
@@ -1366,19 +1362,7 @@ def dedup_shingle_containment(spark, sf_dir):
     query shares."""
     sh = cached_shingles(spark, sf_dir)
     bands = minhash_band_keys_from_sigs(cached_minhash_signatures(spark, sf_dir))
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
-    )
+    cand = _band_candidates(bands)
     sa, sb = sh.alias("sa"), sh.alias("sb")
     v = (
         cand.join(sa, F.col("doc_a") == F.col("sa.doc_id"))

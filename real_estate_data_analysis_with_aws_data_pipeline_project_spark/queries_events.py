@@ -10,7 +10,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions.scalar import hex_chunk_int_sql
+from .functions.scalar import hex_chunk_int_sql, micro6_sql, micro_units_sql
+from .operators.events import sessionize, tumbling_hour_totals
 from .operators.rank_prefix import (
     _bucket_order_stats,
     _rng_bucketed,
@@ -88,19 +89,7 @@ def events_tumbling_window(spark, sf_dir):
     """Tumbling 1-hour event-time windows per event type
     (F.window ≙ DuckDB time_bucket). The batch-checkable form of the
     streaming aggregation."""
-    return (
-        _events(spark, sf_dir)
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n",
-            "total_value",
-        )
-    )
+    return tumbling_hour_totals(_events(spark, sf_dir))
 
 
 _SLIDING_ORACLE = """
@@ -423,15 +412,11 @@ _GAPFILL_ORACLE = f"""
 """
 
 
-@register("events_gap_fill_ffill", _GAPFILL_ORACLE)
-def events_gap_fill_ffill(spark, sf_dir):
-    """Time-series gap filling + forward fill (the hypertable
-    ``time_bucket_gapfill``/``locf`` shape): per user, a dense hourly
-    grid between the first and last active hour (sequence+explode),
-    left-joined with the actual hourly aggregates, missing hours
-    filled with count 0 and the last observed average carried forward
-    via last(ignorenulls) over a per-user window — everything
-    partitions by user, no global state."""
+def _hourly_grid(spark, sf_dir):
+    """(hourly, grid) for the gap-fill queries: per capped user the
+    observed hourly (n_events, avg_value at 4 dp) aggregates, and the
+    dense (user_id, hour_idx) grid from the user's first to last
+    active hour (sequence + explode)."""
     e = (
         _events(spark, sf_dir)
         .filter(F.col("user_id") < _GAPFILL_USER_CAP)
@@ -453,8 +438,19 @@ def events_gap_fill_ffill(spark, sf_dir):
     grid = spans.select(
         "user_id", F.explode(F.sequence("h0", "h1")).alias("hour_idx")
     )
-    from pyspark.sql import Window
+    return hourly, grid
 
+
+@register("events_gap_fill_ffill", _GAPFILL_ORACLE)
+def events_gap_fill_ffill(spark, sf_dir):
+    """Time-series gap filling + forward fill (the hypertable
+    ``time_bucket_gapfill``/``locf`` shape): per user, a dense hourly
+    grid between the first and last active hour (sequence+explode),
+    left-joined with the actual hourly aggregates, missing hours
+    filled with count 0 and the last observed average carried forward
+    via last(ignorenulls) over a per-user window — everything
+    partitions by user, no global state."""
+    hourly, grid = _hourly_grid(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy("hour_idx")
@@ -646,29 +642,7 @@ def events_linear_interpolate(spark, sf_dir):
 
     Scale: everything partitions by user_id — two window passes over a
     per-user dense grid, no global ordering."""
-    e = (
-        _events(spark, sf_dir)
-        .filter(F.col("user_id") < _GAPFILL_USER_CAP)
-        .select(
-            "user_id",
-            F.floor(F.unix_micros("ts") / 3_600_000_000.0)
-            .cast("bigint")
-            .alias("hour_idx"),
-            "value",
-        )
-    )
-    hourly = e.groupBy("user_id", "hour_idx").agg(
-        F.count("*").alias("n_events"),
-        F.round(F.avg("value"), 4).alias("avg_value"),
-    )
-    spans = hourly.groupBy("user_id").agg(
-        F.min("hour_idx").alias("h0"), F.max("hour_idx").alias("h1")
-    )
-    grid = spans.select(
-        "user_id", F.explode(F.sequence("h0", "h1")).alias("hour_idx")
-    )
-    from pyspark.sql import Window
-
+    hourly, grid = _hourly_grid(spark, sf_dir)
     back = (
         Window.partitionBy("user_id")
         .orderBy("hour_idx")
@@ -1821,30 +1795,8 @@ def session_transition_counts(spark, sf_dir):
     """(from_type, to_type, n) within-session transition counts — ONE
     definition of the sessionize + lead pass, shared by the transition
     matrix and the stationary-distribution query (r10)."""
-    from pyspark.sql import Window
-
     ev = load_table(spark, sf_dir, "events")
-    uw = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    m = ev.select(
-        "user_id", "ts", "event_id", "event_type",
-        F.lag("ts").over(uw).alias("prev_ts"),
-    ).withColumn(
-        "new_s",
-        F.when(
-            F.col("prev_ts").isNull()
-            | (
-                F.unix_micros("ts") - F.unix_micros("prev_ts")
-                >= _SESSION_GAP_US
-            ),
-            1,
-        ).otherwise(0),
-    )
-    s = m.withColumn(
-        "sid",
-        F.sum("new_s").over(
-            uw.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    s = sessionize(ev, _SESSION_GAP_US, "event_type")
     sw = Window.partitionBy("user_id", "sid").orderBy("ts", "event_id")
     tr = s.select(
         F.col("event_type").alias("from_type"),
@@ -2292,14 +2244,9 @@ def fano_from_day_counts(dc):
             / F.expr("10000e0"),
             4,
         ).alias("mean_daily"),
-        F.round(
-            F.expr(
-                "CAST(floor(CAST(n * q - s * s AS DOUBLE)"
-                " / CAST(n * s AS DOUBLE) * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("fano"),
+        F.expr(micro6_sql(
+            "CAST(n * q - s * s AS DOUBLE) / CAST(n * s AS DOUBLE)"
+        )).alias("fano"),
     )
 
 
@@ -2421,22 +2368,10 @@ def _dow_report(c):
         "event_type",
         "dow",
         "n",
-        F.round(
-            F.expr(
-                "CAST(floor(CAST(n AS DOUBLE) / total"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("share"),
-        F.round(
-            F.expr(
-                "CAST(floor((7e0 * q - CAST(total AS DOUBLE) * total)"
-                " / total * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("chi2_uniform"),
+        F.expr(micro6_sql("CAST(n AS DOUBLE) / total")).alias("share"),
+        F.expr(micro6_sql(
+            "(7e0 * q - CAST(total AS DOUBLE) * total) / total"
+        )).alias("chi2_uniform"),
     )
 
 
@@ -2548,15 +2483,9 @@ def events_gini_concentration(spark, sf_dir):
         "event_type",
         F.col("n").alias("n_users"),
         F.col("s").alias("n_events"),
-        F.round(
-            F.expr(
-                "CAST(floor((2e0 * t - (CAST(n AS DOUBLE) + 1e0) * s)"
-                " / (CAST(n AS DOUBLE) * s)"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("gini"),
+        F.expr(micro6_sql(
+            "(2e0 * t - (CAST(n AS DOUBLE) + 1e0) * s) / (CAST(n AS DOUBLE) * s)"
+        )).alias("gini"),
     )
 
 
@@ -2617,6 +2546,43 @@ def dq_volume_anomaly(spark, sf_dir):
     return volume_anomaly_from_day_counts(_type_day_counts(spark, sf_dir))
 
 
+def _n_prev(rng) -> F.Column:
+    """n_prev: the BIGINT count of the non-NULL lag columns l{i}, i in
+    ``rng``."""
+    return (
+        F.expr(
+            " + ".join(f"(CASE WHEN l{i} IS NULL THEN 0 ELSE 1 END)" for i in rng)
+        )
+        .cast("bigint")
+        .alias("n_prev")
+    )
+
+
+def _prev_ratio_cols(min_prev: int, ratio: str, alert: str) -> list:
+    """The trailing-baseline report columns over (c, n_prev, prev_sum):
+    ``ratio`` = c·n_prev / prev_sum in micro-units, and the exact
+    integer ``alert`` flag (c at least double or at most half the
+    trailing mean), both only once ``min_prev`` prior days exist."""
+    enough = F.col("n_prev") >= min_prev
+    return [
+        F.when(
+            enough,
+            F.expr(micro6_sql("CAST(c * n_prev AS DOUBLE) / prev_sum")),
+        ).alias(ratio),
+        F.when(
+            enough
+            & (
+                (F.col("c") * F.col("n_prev") >= 2 * F.col("prev_sum"))
+                | (2 * F.col("c") * F.col("n_prev") <= F.col("prev_sum"))
+            ),
+            1,
+        )
+        .otherwise(0)
+        .cast("bigint")
+        .alias(alert),
+    ]
+
+
 def volume_anomaly_from_day_counts(dc):
     """Volume-anomaly report from the (event_type, day, c) day-count
     cube — ONE definition of the trailing window, the exact integer
@@ -2643,28 +2609,7 @@ def volume_anomaly_from_day_counts(dc):
         F.date_format("day", "yyyy-MM-dd").alias("day"),
         "c",
         "n_prev",
-        F.when(
-            F.col("n_prev") >= 3,
-            F.round(
-                F.expr(
-                    "CAST(floor(CAST(c * n_prev AS DOUBLE) / prev_sum"
-                    " * 1000000e0 + 0.5e0) AS BIGINT)"
-                )
-                / F.expr("1000000e0"),
-                6,
-            ),
-        ).alias("vol_ratio"),
-        F.when(
-            (F.col("n_prev") >= 3)
-            & (
-                (F.col("c") * F.col("n_prev") >= 2 * F.col("prev_sum"))
-                | (2 * F.col("c") * F.col("n_prev") <= F.col("prev_sum"))
-            ),
-            1,
-        )
-        .otherwise(0)
-        .cast("bigint")
-        .alias("is_anomaly"),
+        *_prev_ratio_cols(3, "vol_ratio", "is_anomaly"),
     )
 
 
@@ -2778,13 +2723,7 @@ def ewma_forecast_from_day_counts(dc):
         "event_type",
         "day",
         "c",
-        F.expr(
-            " + ".join(
-                f"(CASE WHEN l{i} IS NULL THEN 0 ELSE 1 END)" for i in rng
-            )
-        )
-        .cast("bigint")
-        .alias("n_prev"),
+        _n_prev(rng),
         F.expr(
             " + ".join(
                 f"(CASE WHEN l{i} IS NULL THEN 0"
@@ -2811,14 +2750,7 @@ def ewma_forecast_from_day_counts(dc):
         "n_prev",
         F.when(
             F.col("n_prev") >= _EWMA_MIN_PREV,
-            F.round(
-                F.expr(
-                    "CAST(floor(CAST(num AS DOUBLE) / den"
-                    " * 1000000e0 + 0.5e0) AS BIGINT)"
-                )
-                / F.expr("1000000e0"),
-                6,
-            ),
+            F.expr(micro6_sql("CAST(num AS DOUBLE) / den")),
         ).alias("ewma_forecast"),
         F.when(
             (F.col("n_prev") >= _EWMA_MIN_PREV)
@@ -2996,13 +2928,7 @@ def holt_forecast_from_day_counts(dc):
         "event_type",
         "day",
         "c",
-        F.expr(
-            " + ".join(
-                f"(CASE WHEN l{i} IS NULL THEN 0 ELSE 1 END)" for i in rng
-            )
-        )
-        .cast("bigint")
-        .alias("n_prev"),
+        _n_prev(rng),
         F.expr(
             "CASE WHEN "
             + " AND ".join(f"l{i} IS NOT NULL" for i in rng)
@@ -3016,14 +2942,7 @@ def holt_forecast_from_day_counts(dc):
         "n_prev",
         F.when(
             F.col("num").isNotNull(),
-            F.round(
-                F.expr(
-                    f"CAST(floor(CAST(num AS DOUBLE) / {_HOLT_SCALE}"
-                    " * 1000000e0 + 0.5e0) AS BIGINT)"
-                )
-                / F.expr("1000000e0"),
-                6,
-            ),
+            F.expr(micro6_sql(f"CAST(num AS DOUBLE) / {_HOLT_SCALE}")),
         ).alias("holt_forecast"),
         F.when(
             F.col("num").isNotNull()
@@ -3179,13 +3098,7 @@ def seasonal_anomaly_from_day_counts(dc):
         "day",
         "dow",
         "c",
-        F.expr(
-            " + ".join(
-                f"(CASE WHEN l{i} IS NULL THEN 0 ELSE 1 END)" for i in rng
-            )
-        )
-        .cast("bigint")
-        .alias("n_prev"),
+        _n_prev(rng),
         F.expr(
             " + ".join(
                 f"(CASE WHEN l{i} IS NULL THEN 0 ELSE l{i} END)"
@@ -3201,28 +3114,7 @@ def seasonal_anomaly_from_day_counts(dc):
         "dow",
         "c",
         "n_prev",
-        F.when(
-            F.col("n_prev") >= _SEAS_MIN_PREV,
-            F.round(
-                F.expr(
-                    "CAST(floor(CAST(c * n_prev AS DOUBLE) / prev_sum"
-                    " * 1000000e0 + 0.5e0) AS BIGINT)"
-                )
-                / F.expr("1000000e0"),
-                6,
-            ),
-        ).alias("dow_ratio"),
-        F.when(
-            (F.col("n_prev") >= _SEAS_MIN_PREV)
-            & (
-                (F.col("c") * F.col("n_prev") >= 2 * F.col("prev_sum"))
-                | (2 * F.col("c") * F.col("n_prev") <= F.col("prev_sum"))
-            ),
-            1,
-        )
-        .otherwise(0)
-        .cast("bigint")
-        .alias("is_alert"),
+        *_prev_ratio_cols(_SEAS_MIN_PREV, "dow_ratio", "is_alert"),
     )
 
 
@@ -3314,14 +3206,9 @@ def dq_feed_freshness(spark, sf_dir):
         (F.col("global_us") - F.col("last_us"))
         .cast("bigint")
         .alias("lag_us"),
-        F.round(
-            F.expr(
-                "CAST(floor(CAST(global_us - last_us AS DOUBLE)"
-                " / 3600000000e0 * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("lag_hours"),
+        F.expr(micro6_sql(
+            "CAST(global_us - last_us AS DOUBLE) / 3600000000e0"
+        )).alias("lag_hours"),
         F.when(
             F.col("global_us") - F.col("last_us") > _FRESH_STALE_US, 1
         )
@@ -3432,14 +3319,9 @@ def events_time_to_convert(spark, sf_dir):
     )
     p90 = F.col("rn") == F.expr("(9 * n_converted + 9) div 10")
     return j.groupBy("cohort", "n_signups", "n_converted").agg(
-        F.round(
-            F.expr(
-                "CAST(floor(CAST(n_converted AS DOUBLE) / n_signups"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            ).cast("double")
-            / F.expr("1000000e0"),
-            6,
-        ).alias("conversion_rate"),
+        F.expr(micro6_sql(
+            "CAST(n_converted AS DOUBLE) / n_signups"
+        )).alias("conversion_rate"),
         F.round(
             F.avg(F.when(mid, F.col("delta").cast("double"))), 1
         ).alias("median_delay_us"),
@@ -3586,7 +3468,7 @@ def streaming_type_entropy(spark, sf_dir):
 _MARKOV_ITERS = 12
 
 
-def _markov_ctes() -> str:
+def _markov_oracle_ctes() -> str:
     """WITH-body through v{K} — the restricted transition counts,
     the micro-quantized matrix, and the K power-iteration steps,
     shared by the stationary oracle and the entropy-rate oracle
@@ -3626,7 +3508,7 @@ def _markov_ctes() -> str:
 
 def _markov_oracle() -> str:
     return f"""
-    WITH {_markov_ctes()}
+    WITH {_markov_oracle_ctes()}
     SELECT state, m AS stationary_micro,
            round(m / 1000000e0, 6) AS stationary
     FROM v{_MARKOV_ITERS}
@@ -3664,7 +3546,7 @@ def events_markov_stationary(spark, sf_dir):
 def _markov_components(spark, sf_dir):
     """(c2, rs, v) — restricted transition counts, per-state row
     sums, and the K-step integer stationary vector; the Spark twin of
-    ``_markov_ctes()``, shared by the stationary and entropy-rate
+    ``_markov_oracle_ctes()``, shared by the stationary and entropy-rate
     queries (r11)."""
     c = session_transition_counts(spark, sf_dir)
     states = c.select(F.col("from_type").alias("state")).distinct()
@@ -3683,10 +3565,7 @@ def _markov_components(spark, sf_dir):
         .select(
             "from_type",
             "to_type",
-            F.expr(
-                "CAST(floor(CAST(n AS DOUBLE) / n_from"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            ).alias("pm"),
+            F.expr(micro_units_sql("CAST(n AS DOUBLE) / n_from")).alias("pm"),
         )
         # |types|² rows; consumed by every iteration join — checkpoint
         # so the upstream runs once, not K times
@@ -3728,7 +3607,7 @@ def _markov_components(spark, sf_dir):
 # order-proof end to end.
 
 _ENTROPY_RATE_ORACLE = f"""
-    WITH {_markov_ctes()},
+    WITH {_markov_oracle_ctes()},
     h AS (
         SELECT c2.from_type AS state,
                CAST(sum({entropy_term_micro_sql("c2.n", "rs.n_from")})
@@ -3884,22 +3763,13 @@ def dow_strength_from_day_counts(dc):
     )
     agg = g.groupBy("event_type").agg(
         F.sum(
-            F.expr(
-                "CAST(floor(CAST(s_g AS DOUBLE) * s_g / n_g"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
+            F.expr(micro_units_sql("CAST(s_g AS DOUBLE) * s_g / n_g"))
         )
         .cast("bigint")
         .alias("a")
     )
-    b = F.expr(
-        "CAST(floor(CAST(s AS DOUBLE) * s / n * 1000000e0 + 0.5e0)"
-        " AS BIGINT)"
-    )
-    sst = F.expr(
-        "CAST(floor((CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * s / n)"
-        " * 1000000e0 + 0.5e0) AS BIGINT)"
-    )
+    b = F.expr(micro_units_sql("CAST(s AS DOUBLE) * s / n"))
+    sst = F.expr(micro_units_sql("(CAST(q AS DOUBLE) - CAST(s AS DOUBLE) * s / n)"))
     j = tot.join(F.broadcast(agg), "event_type").select(
         "event_type",
         F.col("n").alias("n_days"),
@@ -3913,14 +3783,7 @@ def dow_strength_from_day_counts(dc):
         "sst_micro",
         F.when(
             F.col("sst_micro") > 0,
-            F.round(
-                F.expr(
-                    "CAST(floor(CAST(ssb_micro AS DOUBLE) / sst_micro"
-                    " * 1000000e0 + 0.5e0) AS BIGINT)"
-                )
-                / F.expr("1000000e0"),
-                6,
-            ),
+            F.expr(micro6_sql("CAST(ssb_micro AS DOUBLE) / sst_micro")),
         ).alias("eta2_dow"),
     )
 
@@ -4026,14 +3889,9 @@ def events_pareto_share(spark, sf_dir):
         F.sum(F.when(F.col("rn") <= F.col("k"), F.col("x")).otherwise(0))
         .cast("bigint")
         .alias("top_decile_events"),
-        F.round(
-            F.expr(
-                "CAST(floor(CAST(sum(CASE WHEN rn <= k THEN x ELSE 0 END)"
-                " AS DOUBLE) / total * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("top_decile_share"),
+        F.expr(micro6_sql(
+            "CAST(sum(CASE WHEN rn <= k THEN x ELSE 0 END) AS DOUBLE) / total"
+        )).alias("top_decile_share"),
     ).select(
         "event_type",
         "n_users",
@@ -4444,6 +4302,16 @@ _ABTEST_ORACLE = f"""
 """
 
 
+def _arm_sum(arm: str, value, name: str):
+    """BIGINT sum of ``value`` over the rows of variant ``arm`` (0
+    elsewhere), aliased ``name``: one experiment arm's cell column."""
+    return (
+        F.sum(F.when(F.col("variant") == arm, value).otherwise(0))
+        .cast("bigint")
+        .alias(name)
+    )
+
+
 def _abtest_counts(spark, sf_dir):
     """One-row (n_a, c_a, n_b, c_b) hash-split conversion cell counts
     — the Spark twin of _ABTEST_COUNTS_CTES, shared by the z-test
@@ -4468,18 +4336,10 @@ def _abtest_counts(spark, sf_dir):
         "converted",
     )
     return tagged.agg(
-        F.sum(F.when(F.col("variant") == "a", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_a"),
-        F.sum(F.when(F.col("variant") == "a", F.col("converted")).otherwise(0))
-        .cast("bigint")
-        .alias("c_a"),
-        F.sum(F.when(F.col("variant") == "b", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_b"),
-        F.sum(F.when(F.col("variant") == "b", F.col("converted")).otherwise(0))
-        .cast("bigint")
-        .alias("c_b"),
+        _arm_sum("a", 1, "n_a"),
+        _arm_sum("a", F.col("converted"), "c_a"),
+        _arm_sum("b", 1, "n_b"),
+        _arm_sum("b", F.col("converted"), "c_b"),
     )
 
 
@@ -4496,33 +4356,26 @@ def events_ab_conversion_ztest(spark, sf_dir):
         "z_micro",
         F.expr(
             "CASE WHEN n_a > 0 AND n_b > 0"
-            " AND c_a + c_b > 0 AND c_a + c_b < n_a + n_b THEN"
-            " CAST(floor((CAST(c_a AS DOUBLE) / n_a"
-            "             - CAST(c_b AS DOUBLE) / n_b)"
-            "            / sqrt((CAST(c_a + c_b AS DOUBLE) / (n_a + n_b))"
-            "                   * (1e0 - CAST(c_a + c_b AS DOUBLE)"
-            "                          / (n_a + n_b))"
-            "                   * (1e0 / n_a + 1e0 / n_b))"
-            "            * 1000000e0 + 0.5e0) AS BIGINT)"
-            " END"
+            " AND c_a + c_b > 0 AND c_a + c_b < n_a + n_b THEN "
+            + micro_units_sql(
+                "(CAST(c_a AS DOUBLE) / n_a - CAST(c_b AS DOUBLE) / n_b)"
+                " / sqrt((CAST(c_a + c_b AS DOUBLE) / (n_a + n_b))"
+                " * (1e0 - CAST(c_a + c_b AS DOUBLE) / (n_a + n_b))"
+                " * (1e0 / n_a + 1e0 / n_b))"
+            )
+            + " END"
         ),
     )
     return z.select(
         "n_a",
         "c_a",
         F.expr(
-            "CASE WHEN n_a > 0 THEN"
-            " round(CAST(floor(CAST(c_a AS DOUBLE) / n_a"
-            "                  * 1000000e0 + 0.5e0)"
-            "            AS BIGINT) / 1000000e0, 6) END"
+            f"CASE WHEN n_a > 0 THEN {micro6_sql('CAST(c_a AS DOUBLE) / n_a')} END"
         ).alias("rate_a"),
         "n_b",
         "c_b",
         F.expr(
-            "CASE WHEN n_b > 0 THEN"
-            " round(CAST(floor(CAST(c_b AS DOUBLE) / n_b"
-            "                  * 1000000e0 + 0.5e0)"
-            "            AS BIGINT) / 1000000e0, 6) END"
+            f"CASE WHEN n_b > 0 THEN {micro6_sql('CAST(c_b AS DOUBLE) / n_b')} END"
         ).alias("rate_b"),
         F.round(F.col("z_micro").cast("double") / F.expr("1000000e0"), 6)
         .alias("z_score"),
@@ -4592,24 +4445,17 @@ def events_power_mde(spark, sf_dir):
         "n_a",
         "n_b",
         (F.col("n_a") + F.col("n_b")).cast("bigint").alias("n_total"),
+        F.expr(micro6_sql(f"{_MDE_P}")).alias("pooled_rate"),
         F.expr(
-            f"round(CAST(floor({_MDE_P} * 1000000e0 + 0.5e0) AS BIGINT)"
-            " / 1000000e0, 6)"
-        ).alias("pooled_rate"),
-        F.expr(
-            f"CASE WHEN {_MDE_SE} > 0e0 THEN"
-            f" round(CAST(floor({_MDE_SE} * 1000000e0 + 0.5e0) AS BIGINT)"
-            " / 1000000e0, 6) END"
+            f"CASE WHEN {_MDE_SE} > 0e0 THEN {micro6_sql(_MDE_SE)} END"
         ).alias("se_design"),
         F.expr(
             f"CASE WHEN {_MDE_SE} > 0e0 THEN"
-            f" round(CAST(floor({_MDE_Z_SUM} * {_MDE_SE}"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            f" {micro6_sql(f'{_MDE_Z_SUM} * {_MDE_SE}')} END"
         ).alias("mde_abs"),
         F.expr(
             f"CASE WHEN {_MDE_SE} > 0e0 THEN"
-            f" round(CAST(floor({_MDE_Z_SUM} * {_MDE_SE} / {_MDE_P}"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            f" {micro6_sql(f'{_MDE_Z_SUM} * {_MDE_SE} / {_MDE_P}')} END"
         ).alias("mde_rel"),
     )
 
@@ -4730,13 +4576,6 @@ _CUPED_DIFF_ADJ = (
 )
 
 
-def _cuped_micro6(x: str) -> str:
-    return (
-        f"round(CAST(floor({x} * 1000000e0 + 0.5e0) AS BIGINT)"
-        " / 1000000e0, 6)"
-    )
-
-
 _CUPED_ORACLE = f"""
     WITH b AS (
         SELECT (min(epoch_us(ts)) + max(epoch_us(ts))) // 2 AS mid_us
@@ -4779,10 +4618,10 @@ _CUPED_ORACLE = f"""
         FROM tagged
     )
     SELECT n AS n_users, n_a, n_b,
-           {_cuped_micro6(_CUPED_THETA)} AS theta,
-           {_cuped_micro6(_CUPED_RHO2)} AS var_reduction,
-           {_cuped_micro6(_CUPED_DIFF_RAW)} AS diff_raw,
-           {_cuped_micro6(_CUPED_DIFF_ADJ)} AS diff_cuped
+           {micro6_sql(_CUPED_THETA)} AS theta,
+           {micro6_sql(_CUPED_RHO2)} AS var_reduction,
+           {micro6_sql(_CUPED_DIFF_RAW)} AS diff_raw,
+           {micro6_sql(_CUPED_DIFF_ADJ)} AS diff_cuped
     FROM s
 """
 
@@ -4866,10 +4705,10 @@ def events_cuped_adjustment(spark, sf_dir):
         F.col("n").alias("n_users"),
         "n_a",
         "n_b",
-        F.expr(_cuped_micro6(_CUPED_THETA)).alias("theta"),
-        F.expr(_cuped_micro6(_CUPED_RHO2)).alias("var_reduction"),
-        F.expr(_cuped_micro6(_CUPED_DIFF_RAW)).alias("diff_raw"),
-        F.expr(_cuped_micro6(_CUPED_DIFF_ADJ)).alias("diff_cuped"),
+        F.expr(micro6_sql(_CUPED_THETA)).alias("theta"),
+        F.expr(micro6_sql(_CUPED_RHO2)).alias("var_reduction"),
+        F.expr(micro6_sql(_CUPED_DIFF_RAW)).alias("diff_raw"),
+        F.expr(micro6_sql(_CUPED_DIFF_ADJ)).alias("diff_cuped"),
     )
 
 
@@ -5133,9 +4972,7 @@ _DID_SE = (
 
 def _did_rate_cols_sql() -> str:
     return ", ".join(
-        f"CASE WHEN n_{c} > 0 THEN"
-        f" round(CAST(floor({_DID_RATE[c]} * 1000000e0 + 0.5e0)"
-        f" AS BIGINT) / 1000000e0, 6) END AS rate_{c}"
+        f"CASE WHEN n_{c} > 0 THEN {micro6_sql(_DID_RATE[c])} END AS rate_{c}"
         for c in ("t_pre", "t_post", "c_pre", "c_post")
     )
 
@@ -5234,22 +5071,18 @@ def _did_cells_report(up, est_col, sig_col):
     d = v.withColumn(
         "did_micro",
         F.expr(
-            f"CASE WHEN {_DID_CELLS_OK} THEN"
-            f" CAST(floor({_DID_EST} * 1000000e0 + 0.5e0) AS BIGINT) END"
+            f"CASE WHEN {_DID_CELLS_OK} THEN {micro_units_sql(_DID_EST)} END"
         ),
     ).withColumn(
         "z_micro",
         F.expr(
             f"CASE WHEN {_DID_CELLS_OK} AND {_DID_SE} > 0e0 THEN"
-            f" CAST(floor({_DID_EST} / {_DID_SE}"
-            f" * 1000000e0 + 0.5e0) AS BIGINT) END"
+            f" {micro_units_sql(f'{_DID_EST} / {_DID_SE}')} END"
         ),
     )
     rate_cols = [
         F.expr(
-            f"CASE WHEN n_{c} > 0 THEN"
-            f" round(CAST(floor({_DID_RATE[c]} * 1000000e0 + 0.5e0)"
-            f" AS BIGINT) / 1000000e0, 6) END"
+            f"CASE WHEN n_{c} > 0 THEN {micro6_sql(_DID_RATE[c])} END"
         ).alias(f"rate_{c}")
         for c in ("t_pre", "t_post", "c_pre", "c_post")
     ]
@@ -5351,7 +5184,7 @@ def _timeout_agg_sql(mins: int) -> str:
     )
 
 
-def _timeout_row_sql(mins: int) -> str:
+def _timeout_oracle_row(mins: int) -> str:
     return f"""SELECT CAST({mins} AS BIGINT) AS timeout_minutes,
                ns_{mins} AS n_sessions, n_events,
                CAST(floor(CAST(n_events AS DOUBLE) / ns_{mins}
@@ -5375,7 +5208,7 @@ _TIMEOUT_ORACLE = f"""
                           for m in _TIMEOUT_SWEEP_MINUTES)}
         FROM g
     )
-    {" UNION ALL ".join(_timeout_row_sql(m)
+    {" UNION ALL ".join(_timeout_oracle_row(m)
                         for m in _TIMEOUT_SWEEP_MINUTES)}
 """
 
@@ -5430,13 +5263,12 @@ def events_session_timeout_sensitivity(spark, sf_dir):
             F.col(f"ns_{m}").alias("n_sessions"),
             "n_events",
             F.expr(
-                f"CAST(floor(CAST(n_events AS DOUBLE) / ns_{m}"
-                " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0"
+                micro_units_sql(f"CAST(n_events AS DOUBLE) / ns_{m}")
+                + " / 1000000e0"
             ).alias("events_per_session"),
             F.expr(
-                f"CAST(floor(CAST(ins_{m} AS DOUBLE) / ns_{m}"
-                " / 60000000e0 * 1000000e0 + 0.5e0) AS BIGINT)"
-                " / 1000000e0"
+                micro_units_sql(f"CAST(ins_{m} AS DOUBLE) / ns_{m} / 60000000e0")
+                + " / 1000000e0"
             ).alias("mean_session_minutes"),
         )
         for m in _TIMEOUT_SWEEP_MINUTES
@@ -5523,8 +5355,7 @@ def _msprt_lnl_micro_sql(na: str, ca: str, nb: str, cb: str) -> str:
         f" / (2e0 * NULLIF({v}, 0e0) * ({v} + {_MSPRT_TAU2})))"
     )
     return (
-        f"CASE WHEN {guard}"
-        f" THEN CAST(floor({lnl} * 1000000e0 + 0.5e0) AS BIGINT) END"
+        f"CASE WHEN {guard} THEN {micro_units_sql(lnl)} END"
     )
 
 
@@ -5604,15 +5435,14 @@ _MSPRT_FOLD_LNL = _msprt_lnl_micro_sql(
 )
 
 
-def _seq_day_increments(spark, sf_dir):
-    """Day-grain (na_d, ca_d, nb_d, cb_d) entry/first-purchase
-    increments — the Spark twin of _MSPRT_CELLS_CTES' u/inc/d chain,
-    shared by the mSPRT monitor and the confidence sequence.
-    Checkpointed: the relation feeds the output rows AND the fold
-    array (the events_survival_km convention)."""
+def _user_entry_days(spark, sf_dir):
+    """(variant, e_day, p_day) per user: the hash-split arm, the day
+    of the first event (entry) and of the first purchase (NULL if
+    none) — the user grain of the sequential monitors and the
+    conversion-horizon lift."""
     from .functions.scalar import split_is_a
 
-    u = (
+    return (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
@@ -5632,6 +5462,15 @@ def _seq_day_increments(spark, sf_dir):
             "p_day",
         )
     )
+
+
+def _seq_day_increments(spark, sf_dir):
+    """Day-grain (na_d, ca_d, nb_d, cb_d) entry/first-purchase
+    increments — the Spark twin of _MSPRT_CELLS_CTES' u/inc/d chain,
+    shared by the mSPRT monitor and the confidence sequence.
+    Checkpointed: the relation feeds the output rows AND the fold
+    array (the events_survival_km convention)."""
+    u = _user_entry_days(spark, sf_dir)
     inc = u.select(
         F.col("e_day").alias("day"),
         "variant",
@@ -5646,28 +5485,46 @@ def _seq_day_increments(spark, sf_dir):
         )
     )
     d = inc.groupBy("day").agg(
-        F.sum(
-            F.when(F.col("variant") == "a", F.col("is_entry")).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("na_d"),
-        F.sum(
-            F.when(F.col("variant") == "a", F.col("is_conv")).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("ca_d"),
-        F.sum(
-            F.when(F.col("variant") == "b", F.col("is_entry")).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("nb_d"),
-        F.sum(
-            F.when(F.col("variant") == "b", F.col("is_conv")).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("cb_d"),
+        _arm_sum("a", F.col("is_entry"), "na_d"),
+        _arm_sum("a", F.col("is_conv"), "ca_d"),
+        _arm_sum("b", F.col("is_entry"), "nb_d"),
+        _arm_sum("b", F.col("is_conv"), "cb_d"),
     )
     return d.localCheckpoint(eager=True)
+
+
+def _seq_cum_cells(spark, sf_dir, extra: dict) -> DataFrame:
+    """(day, n_a, c_a, n_b, c_b, ...) per look: the four cumulative
+    cells plus the ``extra`` fold fields (name → (initial SQL, step
+    SQL over the accumulator ``a`` and the day ``x``, output column))
+    from ONE F.aggregate prefix fold per output row over the sorted
+    calendar-bounded day array."""
+    d = _seq_day_increments(spark, sf_dir)
+    arr = d.agg(
+        F.sort_array(
+            F.collect_list(F.struct("day", "na_d", "ca_d", "nb_d", "cb_d"))
+        ).alias("arr")
+    )
+    init = "".join(f", '{k}', {i}" for k, (i, _, _) in extra.items())
+    step = "".join(f", '{k}', {st}" for k, (_, st, _) in extra.items())
+    cum = d.crossJoin(F.broadcast(arr)).select(
+        "day",
+        F.expr(
+            "aggregate(filter(arr, x -> x.day <= day),"
+            f" named_struct('na', 0L, 'ca', 0L, 'nb', 0L, 'cb', 0L{init}),"
+            " (a, x) -> named_struct("
+            "'na', a.na + x.na_d, 'ca', a.ca + x.ca_d,"
+            f" 'nb', a.nb + x.nb_d, 'cb', a.cb + x.cb_d{step}))"
+        ).alias("st"),
+    )
+    return cum.select(
+        "day",
+        F.col("st.na").alias("n_a"),
+        F.col("st.ca").alias("c_a"),
+        F.col("st.nb").alias("n_b"),
+        F.col("st.cb").alias("c_b"),
+        *[F.col(f"st.{k}").alias(o) for k, (_, _, o) in extra.items()],
+    )
 
 
 @register("events_msprt_always_valid", _MSPRT_ORACLE, headline=True)
@@ -5687,35 +5544,20 @@ def events_msprt_always_valid(spark, sf_dir):
     single-partition window anywhere; the DuckDB oracle uses the
     naive window formulation, so the hash match proves the fold
     reproduces it)."""
-    d = _seq_day_increments(spark, sf_dir)
-    arr = d.agg(
-        F.sort_array(
-            F.collect_list(F.struct("day", "na_d", "ca_d", "nb_d", "cb_d"))
-        ).alias("arr")
-    )
-    # ONE prefix fold per output row carrying the four cumulative
-    # cells AND the running max together (r13 review: a second fold
-    # duplicating the identical cell updates just to finish on mx
-    # doubled the days² lambda work)
-    cum = d.crossJoin(F.broadcast(arr)).select(
-        "day",
-        F.expr(
-            "aggregate(filter(arr, x -> x.day <= day),"
-            " named_struct('na', 0L, 'ca', 0L, 'nb', 0L, 'cb', 0L,"
-            "              'mx', CAST(NULL AS BIGINT)),"
-            " (a, x) -> named_struct("
-            "     'na', a.na + x.na_d, 'ca', a.ca + x.ca_d,"
-            "     'nb', a.nb + x.nb_d, 'cb', a.cb + x.cb_d,"
-            f"    'mx', greatest(a.mx, {_MSPRT_FOLD_LNL})))"
-        ).alias("st"),
-    )
-    lrel = cum.select(
-        "day",
-        F.col("st.na").alias("n_a"),
-        F.col("st.ca").alias("c_a"),
-        F.col("st.nb").alias("n_b"),
-        F.col("st.cb").alias("c_b"),
-        F.col("st.mx").alias("lnl_max"),
+    # the running max rides the same prefix fold as the four
+    # cumulative cells (r13 review: a second fold duplicating the
+    # identical cell updates just to finish on mx doubled the days²
+    # lambda work)
+    lrel = _seq_cum_cells(
+        spark,
+        sf_dir,
+        {
+            "mx": (
+                "CAST(NULL AS BIGINT)",
+                f"greatest(a.mx, {_MSPRT_FOLD_LNL})",
+                "lnl_max",
+            )
+        },
     ).withColumn(
         "lnl_micro",
         F.expr(_msprt_lnl_micro_sql("n_a", "c_a", "n_b", "c_b")),
@@ -5788,18 +5630,13 @@ def _obf_cols_sql(
     _p, v, delta, guard = _seq_stat_parts(na, ca, nb, cb)
     z_micro = (
         f"CASE WHEN {guard}"
-        f" THEN CAST(floor({delta} / sqrt(NULLIF({v}, 0e0))"
-        f" * 1000000e0 + 0.5e0) AS BIGINT) END"
+        f" THEN {micro_units_sql(f'{delta} / sqrt(NULLIF({v}, 0e0))')} END"
     )
     t = f"(CAST(({na}) + ({nb}) AS DOUBLE) / NULLIF({fn}, 0))"
-    t_micro = (
-        f"CASE WHEN ({fn}) > 0"
-        f" THEN CAST(floor({t} * 1000000e0 + 0.5e0) AS BIGINT) END"
-    )
+    t_micro = f"CASE WHEN ({fn}) > 0 THEN {micro_units_sql(t)} END"
     b_micro = (
         f"CASE WHEN ({fn}) > 0 AND ({na}) + ({nb}) > 0"
-        f" THEN CAST(floor({_OBF_ZALPHA} / sqrt({t})"
-        f" * 1000000e0 + 0.5e0) AS BIGINT) END"
+        f" THEN {micro_units_sql(f'{_OBF_ZALPHA} / sqrt({t})')} END"
     )
     return z_micro, t_micro, b_micro
 
@@ -6306,30 +6143,12 @@ def events_winsorized_lift(spark, sf_dir):
         "variant", F.least(F.col("m"), F.col("cap")).alias("w"), "cap"
     )
     s = wv.groupBy("cap").agg(
-        F.sum(F.when(F.col("variant") == "a", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_a"),
-        F.sum(F.when(F.col("variant") == "a", F.col("w")).otherwise(0))
-        .cast("bigint")
-        .alias("sw_a"),
-        F.sum(
-            F.when(F.col("variant") == "a", F.col("w") * F.col("w"))
-            .otherwise(0)
-        )
-        .cast("bigint")
-        .alias("sww_a"),
-        F.sum(F.when(F.col("variant") == "b", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_b"),
-        F.sum(F.when(F.col("variant") == "b", F.col("w")).otherwise(0))
-        .cast("bigint")
-        .alias("sw_b"),
-        F.sum(
-            F.when(F.col("variant") == "b", F.col("w") * F.col("w"))
-            .otherwise(0)
-        )
-        .cast("bigint")
-        .alias("sww_b"),
+        _arm_sum("a", 1, "n_a"),
+        _arm_sum("a", F.col("w"), "sw_a"),
+        _arm_sum("a", F.col("w") * F.col("w"), "sww_a"),
+        _arm_sum("b", 1, "n_b"),
+        _arm_sum("b", F.col("w"), "sw_b"),
+        _arm_sum("b", F.col("w") * F.col("w"), "sww_b"),
     )
     v = s.select(
         "*",
@@ -6340,26 +6159,20 @@ def events_winsorized_lift(spark, sf_dir):
         "z_micro",
         F.expr(
             f"CASE WHEN n_a > 1 AND n_b > 1 AND {_WINS_SE} > 0e0 THEN"
-            f" CAST(floor({_WINS_DIFF} / NULLIF({_WINS_SE}, 0e0)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) END"
+            f" {micro_units_sql(f'{_WINS_DIFF} / NULLIF({_WINS_SE}, 0e0)')} END"
         ),
     )
     return z.select(
         F.col("cap").alias("cap_cents"),
         "n_a",
-        F.expr(
-            "round(CAST(floor(CAST(sw_a AS DOUBLE) / NULLIF(n_a, 0)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("mean_a_cents"),
+        F.expr(micro6_sql(
+            "CAST(sw_a AS DOUBLE) / NULLIF(n_a, 0)"
+        )).alias("mean_a_cents"),
         "n_b",
-        F.expr(
-            "round(CAST(floor(CAST(sw_b AS DOUBLE) / NULLIF(n_b, 0)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("mean_b_cents"),
-        F.expr(
-            f"round(CAST(floor({_WINS_DIFF} * 1000000e0 + 0.5e0)"
-            " AS BIGINT) / 1000000e0, 6)"
-        ).alias("lift_cents"),
+        F.expr(micro6_sql(
+            "CAST(sw_b AS DOUBLE) / NULLIF(n_b, 0)"
+        )).alias("mean_b_cents"),
+        F.expr(micro6_sql(f"{_WINS_DIFF}")).alias("lift_cents"),
         F.round(F.col("z_micro") / F.expr("1000000e0"), 6).alias(
             "z_score"
         ),
@@ -6516,12 +6329,8 @@ def events_mannwhitney_u(spark, sf_dir):
     cum = _spend_rank_cells(
         spark,
         u.groupBy("m").agg(
-            F.sum(F.when(F.col("variant") == "a", 1).otherwise(0))
-            .cast("bigint")
-            .alias("na_m"),
-            F.sum(F.when(F.col("variant") == "b", 1).otherwise(0))
-            .cast("bigint")
-            .alias("nb_m"),
+            _arm_sum("a", 1, "na_m"),
+            _arm_sum("b", 1, "nb_m"),
             F.count("*").cast("bigint").alias("t"),
         ),
     )
@@ -6540,7 +6349,7 @@ def events_mannwhitney_u(spark, sf_dir):
         "z_micro",
         F.expr(
             "CASE WHEN n_a > 0 AND n_b > 0 AND mwu_var > 0e0 THEN"
-            f" CAST(floor({_MWU_Z} * 1000000e0 + 0.5e0) AS BIGINT) END"
+            f" {micro_units_sql(_MWU_Z)} END"
         ),
     )
     return z.select(
@@ -6548,10 +6357,12 @@ def events_mannwhitney_u(spark, sf_dir):
         "n_b",
         (F.col("u2_a").cast("double") / F.expr("2e0")).alias("u_a"),
         F.expr(
-            "CASE WHEN n_a > 0 AND n_b > 0 THEN"
-            " round(CAST(floor((CAST(u2_a AS DOUBLE)"
-            " / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) - 1e0)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            "CASE WHEN n_a > 0 AND n_b > 0 THEN "
+            + micro6_sql(
+                "(CAST(u2_a AS DOUBLE)"
+                " / (CAST(n_a AS DOUBLE) * CAST(n_b AS DOUBLE)) - 1e0)"
+            )
+            + " END"
         ).alias("rank_biserial"),
         F.round(F.col("z_micro") / F.expr("1000000e0"), 6).alias(
             "z_score"
@@ -6665,18 +6476,10 @@ def _strat_cells(spark, sf_dir):
         )
     )
     return u.groupBy("stratum").agg(
-        F.sum(F.when(F.col("variant") == "a", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_as"),
-        F.sum(F.when(F.col("variant") == "a", F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("c_as"),
-        F.sum(F.when(F.col("variant") == "b", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_bs"),
-        F.sum(F.when(F.col("variant") == "b", F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("c_bs"),
+        _arm_sum("a", 1, "n_as"),
+        _arm_sum("a", F.col("conv"), "c_as"),
+        _arm_sum("b", 1, "n_bs"),
+        _arm_sum("b", F.col("conv"), "c_bs"),
     )
 
 
@@ -6781,25 +6584,22 @@ def events_stratified_lift(spark, sf_dir):
         "n_a",
         "n_b",
         F.expr(
-            "CASE WHEN n_a > 0 AND n_b > 0 THEN"
-            " round(CAST(floor((CAST(c_a AS DOUBLE) / n_a"
-            " - CAST(c_b AS DOUBLE) / n_b)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            "CASE WHEN n_a > 0 AND n_b > 0 THEN "
+            + micro6_sql("(CAST(c_a AS DOUBLE) / n_a - CAST(c_b AS DOUBLE) / n_b)")
+            + " END"
         ).alias("diff_raw"),
         F.expr(
-            "CASE WHEN bad_strata = 0 THEN"
-            " round(CAST(floor(CAST(d_nano AS DOUBLE) / 1000000000e0"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            "CASE WHEN bad_strata = 0 THEN "
+            + micro6_sql("CAST(d_nano AS DOUBLE) / 1000000000e0")
+            + " END"
         ).alias("diff_stratified"),
         F.expr(
-            f"CASE WHEN bad_strata = 0 AND v_pico > 0 THEN"
-            f" round(CAST(floor({_PS_Z} * 1000000e0 + 0.5e0) AS BIGINT)"
-            " / 1000000e0, 6) END"
+            f"CASE WHEN bad_strata = 0 AND v_pico > 0 THEN {micro6_sql(_PS_Z)} END"
         ).alias("z_score"),
         F.expr(
             f"CAST(CASE WHEN bad_strata = 0 AND v_pico > 0 THEN"
-            f" CASE WHEN abs(CAST(floor({_PS_Z} * 1000000e0 + 0.5e0)"
-            " AS BIGINT)) > 1959964 THEN 1 ELSE 0 END END AS BIGINT)"
+            f" CASE WHEN abs({micro_units_sql(_PS_Z)}) > 1959964"
+            " THEN 1 ELSE 0 END END AS BIGINT)"
         ).alias("significant_95"),
     )
 
@@ -6972,8 +6772,7 @@ def _cs_col_sql(na: str, ca: str, nb: str, cb: str, what: str) -> str:
         "hi": f"({delta} + {r})",
     }[what]
     return (
-        f"CASE WHEN {guard}"
-        f" THEN CAST(floor({expr} * 1000000e0 + 0.5e0) AS BIGINT) END"
+        f"CASE WHEN {guard} THEN {micro_units_sql(expr)} END"
     )
 
 
@@ -7033,34 +6832,13 @@ def events_confidence_sequence(spark, sf_dir):
     running extrema together; per-look bounds are scalar arithmetic
     on the fold outputs. No single-partition window; the oracle's
     naive window formulation is proven equal by the hash."""
-    d = _seq_day_increments(spark, sf_dir)
-    arr = d.agg(
-        F.sort_array(
-            F.collect_list(F.struct("day", "na_d", "ca_d", "nb_d", "cb_d"))
-        ).alias("arr")
-    )
-    cum = d.crossJoin(F.broadcast(arr)).select(
-        "day",
-        F.expr(
-            "aggregate(filter(arr, x -> x.day <= day),"
-            " named_struct('na', 0L, 'ca', 0L, 'nb', 0L, 'cb', 0L,"
-            "              'lo', CAST(NULL AS BIGINT),"
-            "              'hi', CAST(NULL AS BIGINT)),"
-            " (a, x) -> named_struct("
-            "     'na', a.na + x.na_d, 'ca', a.ca + x.ca_d,"
-            "     'nb', a.nb + x.nb_d, 'cb', a.cb + x.cb_d,"
-            f"    'lo', greatest(a.lo, {_CS_FOLD_LO}),"
-            f"    'hi', least(a.hi, {_CS_FOLD_HI})))"
-        ).alias("st"),
-    )
-    lrel = cum.select(
-        "day",
-        F.col("st.na").alias("n_a"),
-        F.col("st.ca").alias("c_a"),
-        F.col("st.nb").alias("n_b"),
-        F.col("st.cb").alias("c_b"),
-        F.col("st.lo").alias("lo_run"),
-        F.col("st.hi").alias("hi_run"),
+    lrel = _seq_cum_cells(
+        spark,
+        sf_dir,
+        {
+            "lo": ("CAST(NULL AS BIGINT)", f"greatest(a.lo, {_CS_FOLD_LO})", "lo_run"),
+            "hi": ("CAST(NULL AS BIGINT)", f"least(a.hi, {_CS_FOLD_HI})", "hi_run"),
+        },
     ).select(
         "*",
         F.expr(
@@ -7122,12 +6900,10 @@ _CHI2_CRIT_MICRO = {
     5: 11070498, 6: 12591587, 7: 14067140, 8: 15507313,
 }
 
-_CHI2_TERM = (
-    "CAST(floor("
+_CHI2_TERM = micro_units_sql(
     " (CAST(o AS DOUBLE) - CAST(rt AS DOUBLE) * ct / nn)"
     " * (CAST(o AS DOUBLE) - CAST(rt AS DOUBLE) * ct / nn)"
     " / NULLIF(CAST(rt AS DOUBLE) * ct / nn, 0e0)"
-    " * 1000000e0 + 0.5e0) AS BIGINT)"
 )
 _CHI2_CRIT_CASE = "CASE df " + " ".join(
     f"WHEN {k} THEN {v}" for k, v in sorted(_CHI2_CRIT_MICRO.items())
@@ -7239,10 +7015,7 @@ def events_split_behavior_chi2(spark, sf_dir):
         .agg(
             F.sum(F.expr(_CHI2_TERM)).cast("bigint").alias("chi2_micro"),
             F.min(
-                F.expr(
-                    "CAST(floor(CAST(rt AS DOUBLE) * ct / nn"
-                    " * 1000000e0 + 0.5e0) AS BIGINT)"
-                )
+                F.expr(micro_units_sql("CAST(rt AS DOUBLE) * ct / nn"))
             )
             .cast("bigint")
             .alias("min_expected_micro"),
@@ -7442,8 +7215,7 @@ def events_ratio_metric_ztest(spark, sf_dir):
         "z_micro",
         F.expr(
             "CASE WHEN var_a IS NOT NULL AND var_b IS NOT NULL"
-            " AND var_a + var_b > 0e0 THEN"
-            f" CAST(floor({_RATIO_Z} * 1000000e0 + 0.5e0) AS BIGINT) END"
+            f" AND var_a + var_b > 0e0 THEN {micro_units_sql(_RATIO_Z)} END"
         ),
     )
     return z.select(
@@ -7451,17 +7223,13 @@ def events_ratio_metric_ztest(spark, sf_dir):
         F.col("sx_a").alias("active_days_a"),
         F.col("sy_a").alias("purchases_a"),
         F.expr(
-            f"CASE WHEN sx_a > 0 THEN"
-            f" round(CAST(floor({_RATIO_R['a']} * 1000000e0 + 0.5e0)"
-            " AS BIGINT) / 1000000e0, 6) END"
+            f"CASE WHEN sx_a > 0 THEN {micro6_sql(_RATIO_R['a'])} END"
         ).alias("rate_a"),
         "n_b",
         F.col("sx_b").alias("active_days_b"),
         F.col("sy_b").alias("purchases_b"),
         F.expr(
-            f"CASE WHEN sx_b > 0 THEN"
-            f" round(CAST(floor({_RATIO_R['b']} * 1000000e0 + 0.5e0)"
-            " AS BIGINT) / 1000000e0, 6) END"
+            f"CASE WHEN sx_b > 0 THEN {micro6_sql(_RATIO_R['b'])} END"
         ).alias("rate_b"),
         F.round(F.col("z_micro") / F.expr("1000000e0"), 6).alias(
             "z_score"
@@ -7500,9 +7268,8 @@ def events_ratio_metric_ztest(spark, sf_dir):
 # contribute V = 0 by the ELSE branch (their E term still counts —
 # the textbook convention).
 
-_LOGRANK_E1_TERM = (
-    "CAST(floor((CAST(d1 + d2 AS DOUBLE) * n1t)"
-    " / NULLIF(n1t + n2t, 0) * 1000000e0 + 0.5e0) AS BIGINT)"
+_LOGRANK_E1_TERM = micro_units_sql(
+    "(CAST(d1 + d2 AS DOUBLE) * n1t) / NULLIF(n1t + n2t, 0)"
 )
 _LOGRANK_V_TERM = (
     "CASE WHEN n1t + n2t > 1 THEN"
@@ -7682,8 +7449,7 @@ def events_logrank_test(spark, sf_dir):
         "e1_micro",
         "v_pico",
         F.expr(
-            f"CASE WHEN v_pico > 0 THEN"
-            f" CAST(floor({_LOGRANK_Z} * 1000000e0 + 0.5e0) AS BIGINT) END"
+            f"CASE WHEN v_pico > 0 THEN {micro_units_sql(_LOGRANK_Z)} END"
         ).alias("z_micro"),
     )
     return f.select(
@@ -7732,13 +7498,15 @@ def _horizon_z_sql(k: int) -> str:
     p = f"(CAST({ca} + {cb} AS DOUBLE) / NULLIF(n_a + n_b, 0))"
     return (
         f"CASE WHEN n_a > 0 AND n_b > 0 AND {ca} + {cb} > 0"
-        f" AND {ca} + {cb} < n_a + n_b THEN"
-        f" CAST(floor((CAST({ca} AS DOUBLE) / NULLIF(n_a, 0)"
-        f"             - CAST({cb} AS DOUBLE) / NULLIF(n_b, 0))"
-        f" / NULLIF(sqrt({p} * (1e0 - {p})"
-        f"          * (1e0 / NULLIF(n_a, 0) + 1e0 / NULLIF(n_b, 0))),"
-        f"          0e0)"
-        f" * 1000000e0 + 0.5e0) AS BIGINT) END"
+        f" AND {ca} + {cb} < n_a + n_b THEN "
+        + micro_units_sql(
+            f"(CAST({ca} AS DOUBLE) / NULLIF(n_a, 0)"
+            f"             - CAST({cb} AS DOUBLE) / NULLIF(n_b, 0))"
+            f" / NULLIF(sqrt({p} * (1e0 - {p})"
+            "          * (1e0 / NULLIF(n_a, 0) + 1e0 / NULLIF(n_b, 0))),"
+            "          0e0)"
+        )
+        + " END"
     )
 
 
@@ -7753,7 +7521,7 @@ def _horizon_conv_sql(k: int) -> str:
     )
 
 
-def _horizon_row_sql(k: int) -> str:
+def _horizon_oracle_row(k: int) -> str:
     return f"""SELECT CAST({k} AS BIGINT) AS horizon_days,
                n_a, ca_{k} AS c_a, n_b, cb_{k} AS c_b,
                CASE WHEN n_a > 0 AND n_b > 0 THEN
@@ -7787,7 +7555,7 @@ _HORIZON_ORACLE = f"""
                           for k in _HORIZON_DAYS)}
         FROM u
     )
-    {" UNION ALL ".join(_horizon_row_sql(k) for k in _HORIZON_DAYS)}
+    {" UNION ALL ".join(_horizon_oracle_row(k) for k in _HORIZON_DAYS)}
     ORDER BY horizon_days
 """
 
@@ -7803,35 +7571,10 @@ def events_conversion_horizon_lift(spark, sf_dir):
     cells (extra horizons cost columns, not scans — the
     timeout-sensitivity convention); the per-horizon unpivot runs on
     the single aggregate row."""
-    from .functions.scalar import split_is_a
-
-    u = (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.date_trunc("day", F.min("ts")).alias("e_day"),
-            F.date_trunc(
-                "day",
-                F.min(
-                    F.when(F.col("event_type") == "purchase", F.col("ts"))
-                ),
-            ).alias("p_day"),
-        )
-        .select(
-            F.when(split_is_a("user_id"), "a").otherwise("b").alias(
-                "variant"
-            ),
-            "e_day",
-            "p_day",
-        )
-    )
+    u = _user_entry_days(spark, sf_dir)
     cell_exprs = [
-        F.sum(F.when(F.col("variant") == "a", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_a"),
-        F.sum(F.when(F.col("variant") == "b", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_b"),
+        _arm_sum("a", 1, "n_a"),
+        _arm_sum("b", 1, "n_b"),
     ]
     for k in _HORIZON_DAYS:
         conv = F.when(
@@ -7840,12 +7583,8 @@ def events_conversion_horizon_lift(spark, sf_dir):
             1,
         ).otherwise(0)
         cell_exprs += [
-            F.sum(F.when(F.col("variant") == "a", conv).otherwise(0))
-            .cast("bigint")
-            .alias(f"ca_{k}"),
-            F.sum(F.when(F.col("variant") == "b", conv).otherwise(0))
-            .cast("bigint")
-            .alias(f"cb_{k}"),
+            _arm_sum("a", conv, f"ca_{k}"),
+            _arm_sum("b", conv, f"cb_{k}"),
         ]
     agg = u.agg(*cell_exprs)
     for k in _HORIZON_DAYS:
@@ -7859,10 +7598,11 @@ def events_conversion_horizon_lift(spark, sf_dir):
             "n_b",
             F.col(f"cb_{k}").alias("c_b"),
             F.expr(
-                f"CASE WHEN n_a > 0 AND n_b > 0 THEN"
-                f" round(CAST(floor((CAST(ca_{k} AS DOUBLE) / n_a"
-                f" - CAST(cb_{k} AS DOUBLE) / n_b)"
-                " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+                "CASE WHEN n_a > 0 AND n_b > 0 THEN "
+                + micro6_sql(
+                    f"(CAST(ca_{k} AS DOUBLE) / n_a - CAST(cb_{k} AS DOUBLE) / n_b)"
+                )
+                + " END"
             ).alias("lift"),
             F.round(F.col(f"z_{k}") / F.expr("1000000e0"), 6).alias(
                 "z_score"
@@ -7897,16 +7637,18 @@ def events_conversion_horizon_lift(spark, sf_dir):
 
 _HTE_Z = (
     "CASE WHEN n_as > 0 AND n_bs > 0 AND c_as + c_bs > 0"
-    " AND c_as + c_bs < n_as + n_bs THEN"
-    " CAST(floor((CAST(c_as AS DOUBLE) / NULLIF(n_as, 0)"
-    "             - CAST(c_bs AS DOUBLE) / NULLIF(n_bs, 0))"
-    " / NULLIF(sqrt((CAST(c_as + c_bs AS DOUBLE)"
-    "                / NULLIF(n_as + n_bs, 0))"
-    "          * (1e0 - CAST(c_as + c_bs AS DOUBLE)"
-    "                   / NULLIF(n_as + n_bs, 0))"
-    "          * (1e0 / NULLIF(n_as, 0) + 1e0 / NULLIF(n_bs, 0))),"
-    "          0e0)"
-    " * 1000000e0 + 0.5e0) AS BIGINT) END"
+    " AND c_as + c_bs < n_as + n_bs THEN "
+    + micro_units_sql(
+        "(CAST(c_as AS DOUBLE) / NULLIF(n_as, 0)"
+        "             - CAST(c_bs AS DOUBLE) / NULLIF(n_bs, 0))"
+        " / NULLIF(sqrt((CAST(c_as + c_bs AS DOUBLE)"
+        "                / NULLIF(n_as + n_bs, 0))"
+        "          * (1e0 - CAST(c_as + c_bs AS DOUBLE)"
+        "                   / NULLIF(n_as + n_bs, 0))"
+        "          * (1e0 / NULLIF(n_as, 0) + 1e0 / NULLIF(n_bs, 0))),"
+        "          0e0)"
+    )
+    + " END"
 )
 
 _HTE_ORACLE = f"""
@@ -7946,10 +7688,9 @@ def events_segment_lift_hte(spark, sf_dir):
         F.col("n_bs").alias("n_b"),
         F.col("c_bs").alias("c_b"),
         F.expr(
-            "CASE WHEN n_as > 0 AND n_bs > 0 THEN"
-            " round(CAST(floor((CAST(c_as AS DOUBLE) / n_as"
-            " - CAST(c_bs AS DOUBLE) / n_bs)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            "CASE WHEN n_as > 0 AND n_bs > 0 THEN "
+            + micro6_sql("(CAST(c_as AS DOUBLE) / n_as - CAST(c_bs AS DOUBLE) / n_bs)")
+            + " END"
         ).alias("lift"),
         F.round(F.col("z_micro") / F.expr("1000000e0"), 6).alias(
             "z_score"
@@ -7999,16 +7740,16 @@ _QINI_USERS_CTE = f"""u AS (
     )"""
 
 _QINI_QINI_SQL = (
-    "CASE WHEN n_c > 0 THEN"
-    " round(CAST(floor((CAST(c_t AS DOUBLE)"
-    " - CAST(c_c AS DOUBLE) * (CAST(n_t AS DOUBLE) / n_c))"
-    " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+    "CASE WHEN n_c > 0 THEN "
+    + micro6_sql(
+        "(CAST(c_t AS DOUBLE) - CAST(c_c AS DOUBLE) * (CAST(n_t AS DOUBLE) / n_c))"
+    )
+    + " END"
 )
 _QINI_LIFT_SQL = (
-    "CASE WHEN n_t > 0 AND n_c > 0 THEN"
-    " round(CAST(floor((CAST(c_t AS DOUBLE) / n_t"
-    " - CAST(c_c AS DOUBLE) / n_c)"
-    " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+    "CASE WHEN n_t > 0 AND n_c > 0 THEN "
+    + micro6_sql("(CAST(c_t AS DOUBLE) / n_t - CAST(c_c AS DOUBLE) / n_c)")
+    + " END"
 )
 
 _QINI_ORACLE = f"""
@@ -8278,11 +8019,10 @@ def events_volume_changepoint(spark, sf_dir):
         )
     )
     best = cand.orderBy(F.desc("cnum"), "day").limit(1)
-    bb = (
-        "CAST(floor(CAST(cnum AS DOUBLE) / n"
+    bb = micro_units_sql(
+        "CAST(cnum AS DOUBLE) / n"
         " / (sqrt((sq - CAST(tot AS DOUBLE) * tot / n)"
         " / (n - 1)) * sqrt(CAST(n AS DOUBLE)))"
-        " * 1000000e0 + 0.5e0) AS BIGINT)"
     )
     return best.select(
         # string day per the module convention: DuckDB's fetchdf turns
@@ -8290,18 +8030,9 @@ def events_volume_changepoint(spark, sf_dir):
         F.date_format("day", "yyyy-MM-dd").alias("split_day"),
         F.col("n").alias("n_days"),
         F.col("k").alias("days_before"),
-        F.expr(
-            "round(CAST(floor(CAST(s AS DOUBLE) / k"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("mean_before"),
-        F.expr(
-            "round(CAST(floor(CAST(tot - s AS DOUBLE) / (n - k)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("mean_after"),
-        F.expr(
-            "round(CAST(floor(CAST(cnum AS DOUBLE) / n"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("cusum_max"),
+        F.expr(micro6_sql("CAST(s AS DOUBLE) / k")).alias("mean_before"),
+        F.expr(micro6_sql("CAST(tot - s AS DOUBLE) / (n - k)")).alias("mean_after"),
+        F.expr(micro6_sql("CAST(cnum AS DOUBLE) / n")).alias("cusum_max"),
         # variance > 0 guard as the exact integer comparison — see the
         # oracle comment (r15 review; the Benford r14 ADVICE class)
         F.expr(
@@ -8370,7 +8101,7 @@ _BINSEG_SEGMENT_SQL = """
 # after the local split, local CUSUM max, Brownian-bridge stat with
 # the exact-integer zero-variance guard (m = segment days, T = segment
 # total, Q = segment sum of squares, k/ss = local split index/prefix)
-_BINSEG_REPORT_SQL = """
+_BINSEG_REPORT_ORACLE = """
     SELECT role, CAST(role_rank AS BIGINT) AS role_rank,
            strftime(day, '%Y-%m-%d') AS split_day,
            seg_days, days_before,
@@ -8453,7 +8184,7 @@ _BINSEG_ORACLE = f"""
                seg_days, days_before, seg_tot, seg_sq, ss, cnum
         FROM child
     )
-    {_BINSEG_REPORT_SQL.format(crit=_CHANGEPOINT_CRIT_MICRO)}
+    {_BINSEG_REPORT_ORACLE.format(crit=_CHANGEPOINT_CRIT_MICRO)}
 """
 
 
@@ -8549,11 +8280,10 @@ def binseg_report_from_daily(daily: DataFrame) -> DataFrame:
             )
         )
     )
-    bb = (
-        "CAST(floor(CAST(cnum AS DOUBLE) / seg_days"
+    bb = micro_units_sql(
+        "CAST(cnum AS DOUBLE) / seg_days"
         " / (sqrt((seg_sq - CAST(seg_tot AS DOUBLE) * seg_tot / seg_days)"
         " / (seg_days - 1)) * sqrt(CAST(seg_days AS DOUBLE)))"
-        " * 1000000e0 + 0.5e0) AS BIGINT)"
     )
     return (
         labeled.select(
@@ -8562,19 +8292,11 @@ def binseg_report_from_daily(daily: DataFrame) -> DataFrame:
             F.date_format("day", "yyyy-MM-dd").alias("split_day"),
             "seg_days",
             "days_before",
-            F.expr(
-                "round(CAST(floor(CAST(ss AS DOUBLE) / days_before"
-                " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-            ).alias("mean_before"),
-            F.expr(
-                "round(CAST(floor(CAST(seg_tot - ss AS DOUBLE)"
-                " / (seg_days - days_before)"
-                " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-            ).alias("mean_after"),
-            F.expr(
-                "round(CAST(floor(CAST(cnum AS DOUBLE) / seg_days"
-                " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-            ).alias("cusum_max"),
+            F.expr(micro6_sql("CAST(ss AS DOUBLE) / days_before")).alias("mean_before"),
+            F.expr(micro6_sql(
+                "CAST(seg_tot - ss AS DOUBLE) / (seg_days - days_before)"
+            )).alias("mean_after"),
+            F.expr(micro6_sql("CAST(cnum AS DOUBLE) / seg_days")).alias("cusum_max"),
             F.expr(
                 f"CASE WHEN seg_days * seg_sq > seg_tot * seg_tot THEN"
                 f" round({bb} / 1000000e0, 6) END"
@@ -8746,10 +8468,7 @@ def events_ratio_jackknife(spark, sf_dir):
         daily.crossJoin(F.broadcast(g))
         .where(F.col("xt") - F.col("x") > 0)
         .select(
-            F.expr(
-                "CAST(floor(CAST(yt - y AS DOUBLE) / (xt - x)"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            ).alias("t")
+            F.expr(micro_units_sql("CAST(yt - y AS DOUBLE) / (xt - x)")).alias("t")
         )
     )
     s = reps.agg(
@@ -8766,9 +8485,7 @@ def events_ratio_jackknife(spark, sf_dir):
         F.col("xt").alias("total_events"),
         F.col("yt").alias("total_purchases"),
         F.expr(
-            "CASE WHEN xt > 0 THEN"
-            " round(CAST(floor(CAST(yt AS DOUBLE) / xt"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            f"CASE WHEN xt > 0 THEN {micro6_sql('CAST(yt AS DOUBLE) / xt')} END"
         ).alias("rate"),
         F.expr(
             "CASE WHEN m >= 2 THEN"
@@ -8924,12 +8641,11 @@ def events_conformal_volume_interval(spark, sf_dir):
         )
         .cast("bigint")
         .alias("n_test"),
-        F.expr(
-            "CAST(floor(CAST(sum(CASE WHEN k <= CAST(floor(m / 2e0) AS BIGINT)"
+        F.expr(micro_units_sql(
+            "CAST(sum(CASE WHEN k <= CAST(floor(m / 2e0) AS BIGINT)"
             " THEN c END)"
             " AS DOUBLE) / max(CAST(floor(m / 2e0) AS BIGINT))"
-            " * 1000000e0 + 0.5e0) AS BIGINT)"
-        ).alias("yhat_micro"),
+        )).alias("yhat_micro"),
     )
     wscore = Window.orderBy(
         F.abs(F.col("c") * 1000000 - F.col("yhat_micro")), F.col("day")
@@ -9001,9 +8717,9 @@ def events_conformal_volume_interval(spark, sf_dir):
             " round((yhat_micro + qr) / 1000000e0, 6) END"
         ).alias("pi_hi_80"),
         F.expr(
-            "CASE WHEN qr IS NOT NULL AND n_test > 0 THEN"
-            " round(CAST(floor(CAST(n_covered AS DOUBLE) / n_test"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            "CASE WHEN qr IS NOT NULL AND n_test > 0 THEN "
+            + micro6_sql("CAST(n_covered AS DOUBLE) / n_test")
+            + " END"
         ).alias("test_coverage"),
     )
 
@@ -9042,11 +8758,10 @@ def events_conformal_volume_interval(spark, sf_dir):
 # separation; the ANOVA SSB clamp lesson applied, so ε² ∈ [0, 1]
 # by construction in BOTH engines).
 
-_KW_HTERM_SQL = (
-    "CAST(floor(3e0 * CAST(r2_g AS DOUBLE) * CAST(r2_g AS DOUBLE)"
+_KW_HTERM_SQL = micro_units_sql(
+    "3e0 * CAST(r2_g AS DOUBLE) * CAST(r2_g AS DOUBLE)"
     " / (CAST(nn AS DOUBLE) * (CAST(nn AS DOUBLE) + 1e0)"
     "    * CAST(n_g AS DOUBLE))"
-    " * 1000000e0 + 0.5e0) AS BIGINT)"
 )
 _KW_TIE_C_SQL = (
     "(1e0 - CAST(s_t AS DOUBLE)"
@@ -9311,18 +9026,10 @@ def _horizon_cells(spark, sf_dir):
         )
     )
     return u.groupBy("stratum").agg(
-        F.sum(F.when(F.col("variant") == "a", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_as"),
-        F.sum(F.when(F.col("variant") == "a", F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("c_as"),
-        F.sum(F.when(F.col("variant") == "b", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_bs"),
-        F.sum(F.when(F.col("variant") == "b", F.col("conv")).otherwise(0))
-        .cast("bigint")
-        .alias("c_bs"),
+        _arm_sum("a", 1, "n_as"),
+        _arm_sum("a", F.col("conv"), "c_as"),
+        _arm_sum("b", 1, "n_bs"),
+        _arm_sum("b", F.col("conv"), "c_bs"),
     )
 
 
@@ -9356,11 +9063,10 @@ def _horizon_cells(spark, sf_dir):
 # binned metrics and counted honestly in n_serve_unscored. Empty
 # split B (or no scored strata) → NULL metrics, one row.
 
-_CAL_BRIER_TERM = (
-    "CAST(floor((CAST(n_bs AS DOUBLE) * conf_m * conf_m / 1e12"
+_CAL_BRIER_TERM = micro_units_sql(
+    "(CAST(n_bs AS DOUBLE) * conf_m * conf_m / 1e12"
     " - 2e0 * conf_m / 1e6 * CAST(c_bs AS DOUBLE)"
     " + CAST(c_bs AS DOUBLE))"
-    " * 1000000e0 + 0.5e0) AS BIGINT)"
 )
 
 _CAL_ORACLE = f"""
@@ -9453,14 +9159,14 @@ def events_calibration_ece(spark, sf_dir):
     b = st.select(
         "*",
         F.expr(
-            "CASE WHEN n_as > 0 THEN"
-            " CAST(floor(CAST(c_as AS DOUBLE) / n_as"
-            " * 1000000e0 + 0.5e0) AS BIGINT) END"
+            "CASE WHEN n_as > 0 THEN "
+            + micro_units_sql("CAST(c_as AS DOUBLE) / n_as")
+            + " END"
         ).alias("conf_m"),
         F.expr(
-            "CASE WHEN n_bs > 0 THEN"
-            " CAST(floor(CAST(c_bs AS DOUBLE) / n_bs"
-            " * 1000000e0 + 0.5e0) AS BIGINT) END"
+            "CASE WHEN n_bs > 0 THEN "
+            + micro_units_sql("CAST(c_bs AS DOUBLE) / n_bs")
+            + " END"
         ).alias("acc_m"),
     )
     s = b.agg(
@@ -9524,9 +9230,9 @@ def events_calibration_ece(spark, sf_dir):
     f = s.withColumn(
         "base_m",
         F.expr(
-            "CASE WHEN n_serve > 0 THEN"
-            " CAST(floor(CAST(c_serve AS DOUBLE) / n_serve"
-            " * 1000000e0 + 0.5e0) AS BIGINT) END"
+            "CASE WHEN n_serve > 0 THEN "
+            + micro_units_sql("CAST(c_serve AS DOUBLE) / n_serve")
+            + " END"
         ),
     )
     g = f.select(
@@ -9542,9 +9248,9 @@ def events_calibration_ece(spark, sf_dir):
             " AS BIGINT) END"
         ).alias("brier_m"),
         F.expr(
-            "CASE WHEN base_m IS NOT NULL THEN"
-            " CAST(floor(base_m / 1e6 * (1e0 - base_m / 1e6)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) END"
+            "CASE WHEN base_m IS NOT NULL THEN "
+            + micro_units_sql("base_m / 1e6 * (1e0 - base_m / 1e6)")
+            + " END"
         ).alias("bbase_m"),
     )
     return g.select(
@@ -9558,9 +9264,9 @@ def events_calibration_ece(spark, sf_dir):
             "brier_base"
         ),
         F.expr(
-            "CASE WHEN bbase_m > 0 AND brier_m IS NOT NULL THEN"
-            " round(CAST(floor((1e0 - CAST(brier_m AS DOUBLE) / bbase_m)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            "CASE WHEN bbase_m > 0 AND brier_m IS NOT NULL THEN "
+            + micro6_sql("(1e0 - CAST(brier_m AS DOUBLE) / bbase_m)")
+            + " END"
         ).alias("brier_skill"),
     )
 
@@ -9605,10 +9311,13 @@ _STOUFFER_VB = (
 _STOUFFER_Z = (
     f"CASE WHEN n_a > 1 AND n_b > 1"
     f" AND {_STOUFFER_VA} + {_STOUFFER_VB} > 0e0 THEN"
-    f" CAST(floor((CAST(sw_a AS DOUBLE) / n_a"
-    f"             - CAST(sw_b AS DOUBLE) / n_b)"
-    f" / sqrt({_STOUFFER_VA} + {_STOUFFER_VB})"
-    " * 1000000e0 + 0.5e0) AS BIGINT) END"
+    " "
+    + micro_units_sql(
+        "(CAST(sw_a AS DOUBLE) / n_a"
+        "             - CAST(sw_b AS DOUBLE) / n_b)"
+        f" / sqrt({_STOUFFER_VA} + {_STOUFFER_VB})"
+    )
+    + " END"
 )
 
 _STOUFFER_ORACLE = f"""
@@ -9727,30 +9436,12 @@ def events_stouffer_meta(spark, sf_dir):
         )
     )
     st = u.groupBy("stratum").agg(
-        F.sum(F.when(F.col("variant") == "a", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_a"),
-        F.sum(F.when(F.col("variant") == "a", F.col("w")).otherwise(0))
-        .cast("bigint")
-        .alias("sw_a"),
-        F.sum(
-            F.when(F.col("variant") == "a", F.col("w") * F.col("w"))
-            .otherwise(0)
-        )
-        .cast("bigint")
-        .alias("sww_a"),
-        F.sum(F.when(F.col("variant") == "b", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_b"),
-        F.sum(F.when(F.col("variant") == "b", F.col("w")).otherwise(0))
-        .cast("bigint")
-        .alias("sw_b"),
-        F.sum(
-            F.when(F.col("variant") == "b", F.col("w") * F.col("w"))
-            .otherwise(0)
-        )
-        .cast("bigint")
-        .alias("sww_b"),
+        _arm_sum("a", 1, "n_a"),
+        _arm_sum("a", F.col("w"), "sw_a"),
+        _arm_sum("a", F.col("w") * F.col("w"), "sww_a"),
+        _arm_sum("b", 1, "n_b"),
+        _arm_sum("b", F.col("w"), "sw_b"),
+        _arm_sum("b", F.col("w") * F.col("w"), "sww_b"),
     )
     z = st.select(
         "*",
@@ -9908,14 +9599,8 @@ def events_isotonic_calibration(spark, sf_dir):
         "stratum",
         "n_bs",
         "c_bs",
-        F.expr(
-            "CAST(floor(CAST(c_as AS DOUBLE) / n_as"
-            " * 1000000e0 + 0.5e0) AS BIGINT)"
-        ).alias("conf_m"),
-        F.expr(
-            "CAST(floor(CAST(c_bs AS DOUBLE) / n_bs"
-            " * 1000000e0 + 0.5e0) AS BIGINT)"
-        ).alias("acc_m"),
+        F.expr(micro_units_sql("CAST(c_as AS DOUBLE) / n_as")).alias("conf_m"),
+        F.expr(micro_units_sql("CAST(c_bs AS DOUBLE) / n_bs")).alias("acc_m"),
     )
     wo = Window.orderBy("conf_m", "stratum")
     o = b.withColumn("i", F.row_number().over(wo).cast("bigint"))
@@ -9932,11 +9617,9 @@ def events_isotonic_calibration(spark, sf_dir):
     iv = j.join(k, F.col("j.i") <= F.col("k.i")).select(
         F.col("j.i").alias("jj"),
         F.col("k.i").alias("kk"),
-        F.expr(
-            "CAST(floor(CAST(k.cp - j.cp + j.c_bs AS DOUBLE)"
-            " / (k.np - j.np + j.n_bs)"
-            " * 1000000e0 + 0.5e0) AS BIGINT)"
-        ).alias("avg_m"),
+        F.expr(micro_units_sql(
+            "CAST(k.cp - j.cp + j.c_bs AS DOUBLE) / (k.np - j.np + j.n_bs)"
+        )).alias("avg_m"),
     )
     inner_min = (
         o.select(F.col("i").alias("ii"))

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from .functions.scalar import micro6_sql, micro_units_sql
 from .operators import text as X
 from .registry import register
 from .session import local_frame
@@ -462,6 +463,38 @@ _EXACT_MEDIAN_ORACLE = """
 """
 
 
+def _order_cents(spark, sf_dir, *cols):
+    """(o_orderpriority, cents, ``cols``) over orders: the total price
+    as exact integer cents, the unit of every per-priority order
+    statistic."""
+    return load_table(spark, sf_dir, "orders").select(
+        "o_orderpriority",
+        F.round(F.col("o_totalprice") * 100, 0)
+        .cast("bigint")
+        .alias("cents"),
+        *cols,
+    )
+
+
+def _ranked_order_cents(spark, sf_dir):
+    """(o_orderpriority, cents, rn, n): each order's 1-based rank in
+    its priority under the (cents, o_orderkey) total order, and the
+    priority's order count — the per-group sort of the exact order
+    statistics."""
+    from pyspark.sql import Window
+
+    o = _order_cents(spark, sf_dir, "o_orderkey")
+    w = Window.partitionBy("o_orderpriority").orderBy("cents", "o_orderkey")
+    return o.select(
+        "o_orderpriority",
+        "cents",
+        F.row_number().over(w).alias("rn"),
+        F.count("*")
+        .over(Window.partitionBy("o_orderpriority"))
+        .alias("n"),
+    )
+
+
 @register("agg_exact_group_median", _EXACT_MEDIAN_ORACLE)
 def agg_exact_group_median(spark, sf_dir):
     """EXACT per-group median (not percentile_approx): rank each
@@ -478,24 +511,7 @@ def agg_exact_group_median(spark, sf_dir):
     filter lives on <= 2 rows per group. percentile_approx /
     sketch_kll_quantile_rollup are the sketch tier when exactness can
     be traded for one pass."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100, 0)
-        .cast("bigint")
-        .alias("cents"),
-        "o_orderkey",
-    )
-    w = Window.partitionBy("o_orderpriority").orderBy("cents", "o_orderkey")
-    ranked = o.select(
-        "o_orderpriority",
-        "cents",
-        F.row_number().over(w).alias("rn"),
-        F.count("*")
-        .over(Window.partitionBy("o_orderpriority"))
-        .alias("n"),
-    )
+    ranked = _ranked_order_cents(spark, sf_dir)
     mid = ranked.where(
         (F.col("rn") == F.expr("(n + 1) div 2"))
         | (F.col("rn") == F.expr("(n + 2) div 2"))
@@ -610,24 +626,7 @@ def agg_exact_group_percentiles(spark, sf_dir):
     after the two-rank filter lives on <= 2 rows per group.
     sketch_kll_quantile_rollup is the one-pass sketch tier for when
     exactness can be traded."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100, 0)
-        .cast("bigint")
-        .alias("cents"),
-        "o_orderkey",
-    )
-    w = Window.partitionBy("o_orderpriority").orderBy("cents", "o_orderkey")
-    ranked = o.select(
-        "o_orderpriority",
-        "cents",
-        F.row_number().over(w).alias("rn"),
-        F.count("*")
-        .over(Window.partitionBy("o_orderpriority"))
-        .alias("n"),
-    )
+    ranked = _ranked_order_cents(spark, sf_dir)
     is25 = F.col("rn") == F.expr("(n + 3) div 4")
     is75 = F.col("rn") == F.expr("(3 * n + 3) div 4")
     p = (
@@ -726,12 +725,7 @@ def agg_histogram_group_percentiles(spark, sf_dir):
     covers unbounded domains where fixed buckets can't."""
     from pyspark.sql import Window
 
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100, 0)
-        .cast("bigint")
-        .alias("cents"),
-    )
+    o = _order_cents(spark, sf_dir)
     b = o.groupBy(
         "o_orderpriority",
         F.expr(f"cents div {_HIST_BUCKET_CENTS}").alias("b"),
@@ -912,24 +906,7 @@ def agg_exact_group_trimmed_mean(spark, sf_dir):
 
     Scale: the same per-group-sort trade as the exact median; the
     trim filter and sum fold map-side after the rank."""
-    from pyspark.sql import Window
-
-    o = load_table(spark, sf_dir, "orders").select(
-        "o_orderpriority",
-        F.round(F.col("o_totalprice") * 100, 0)
-        .cast("bigint")
-        .alias("cents"),
-        "o_orderkey",
-    )
-    w = Window.partitionBy("o_orderpriority").orderBy("cents", "o_orderkey")
-    r = o.select(
-        "o_orderpriority",
-        "cents",
-        F.row_number().over(w).alias("rn"),
-        F.count("*")
-        .over(Window.partitionBy("o_orderpriority"))
-        .alias("n"),
-    )
+    r = _ranked_order_cents(spark, sf_dir)
     kept = (F.col("rn") > F.expr("n div 10")) & (
         F.col("rn") <= F.expr("n - n div 10")
     )
@@ -971,16 +948,6 @@ def agg_exact_group_trimmed_mean(spark, sf_dir):
 # quantized — the only transcendental-free path to exact cross-engine
 # higher moments.
 
-def _micro6(x: str) -> str:
-    """floor(x·1e6 + 0.5) BIGINT micro-units, printed at 6 dp — the
-    cross-engine quantization rule (ROADMAP r9 #11b) as a shared SQL
-    fragment valid in both Spark and DuckDB."""
-    return (
-        f"round(CAST(floor(({x}) * 1000000e0 + 0.5e0) AS BIGINT)"
-        " / 1000000e0, 6)"
-    )
-
-
 _DN = "CAST(n AS DOUBLE)"
 _DS1 = "CAST(s1 AS DOUBLE)"
 _DS2 = "CAST(s2 AS DOUBLE)"
@@ -996,11 +963,11 @@ _M4 = (
     f" + 6e0*{_DN}*{_DS1}*{_DS1}*{_DS2} - 3e0*{_DS1}*{_DS1}*{_DS1}*{_DS1})"
     f" / ({_DN}*{_DN}*{_DN}*{_DN}))"
 )
-_SKEW = _micro6(
-    f"{_M3} / NULLIF(sqrt({_VAR_POP})*sqrt({_VAR_POP})*sqrt({_VAR_POP}), 0e0)"
+_SKEW = micro6_sql(
+    f"({_M3} / NULLIF(sqrt({_VAR_POP})*sqrt({_VAR_POP})*sqrt({_VAR_POP}), 0e0))"
 )
-_KURT = _micro6(f"{_M4} / NULLIF({_VAR_POP}*{_VAR_POP}, 0e0) - 3e0")
-_MEAN6 = _micro6(f"{_DS1} / {_DN}")
+_KURT = micro6_sql(f"({_M4} / NULLIF({_VAR_POP}*{_VAR_POP}, 0e0) - 3e0)")
+_MEAN6 = micro6_sql(f"({_DS1} / {_DN})")
 
 _MOMENTS_ORACLE = f"""
     WITH m AS (
@@ -1077,10 +1044,10 @@ _DY = "CAST(sy AS DOUBLE)"
 _DXY = "CAST(sxy AS DOUBLE)"
 _DX2 = "CAST(sx2 AS DOUBLE)"
 _DY2 = "CAST(sy2 AS DOUBLE)"
-_CORR = _micro6(
-    f"({_DN}*{_DXY} - {_DX}*{_DY})"
+_CORR = micro6_sql(
+    f"(({_DN}*{_DXY} - {_DX}*{_DY})"
     f" / NULLIF(sqrt({_DN}*{_DX2} - {_DX}*{_DX})"
-    f" * sqrt({_DN}*{_DY2} - {_DY}*{_DY}), 0e0)"
+    f" * sqrt({_DN}*{_DY2} - {_DY}*{_DY}), 0e0))"
 )
 
 _GROUP_CORR_ORACLE = f"""
@@ -1336,9 +1303,7 @@ def _theil_assemble(tot, tt, tb, names):
             (F.col("t_c") - F.col("tb_c")) / F.expr("1000000e0"), 6
         ).alias(within_col),
         F.expr(
-            "CASE WHEN t_c > 0 THEN"
-            " round(CAST(floor(CAST(tb_c AS DOUBLE) / t_c"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            f"CASE WHEN t_c > 0 THEN {micro6_sql('CAST(tb_c AS DOUBLE) / t_c')} END"
         ).alias("between_share"),
     )
 
@@ -1361,21 +1326,14 @@ def agg_theil_decomposition(spark, sf_dir):
     cust, nat, tot = _theil_base(spark, sf_dir)
     tt = cust.crossJoin(F.broadcast(tot)).agg(
         F.sum(
-            F.expr(
-                f"CAST(floor({_THEIL_R_CUST} * ln({_THEIL_R_CUST})"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
+            F.expr(micro_units_sql(f"{_THEIL_R_CUST} * ln({_THEIL_R_CUST})"))
         )
         .cast("bigint")
         .alias("t_sum")
     )
     tb = nat.crossJoin(F.broadcast(tot)).agg(
         F.sum(
-            F.expr(
-                f"CAST(floor((CAST(s_g AS DOUBLE) / s)"
-                f" * ln({_THEIL_R_NAT})"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
+            F.expr(micro_units_sql(f"(CAST(s_g AS DOUBLE) / s) * ln({_THEIL_R_NAT})"))
         )
         .cast("bigint")
         .alias("tb_micro")
@@ -1457,21 +1415,14 @@ def agg_theil_l_decomposition(spark, sf_dir):
     cust, nat, tot = _theil_base(spark, sf_dir)
     tt = cust.crossJoin(F.broadcast(tot)).agg(
         F.sum(
-            F.expr(
-                f"CAST(floor(ln({_MLD_R_CUST})"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
+            F.expr(micro_units_sql(f"ln({_MLD_R_CUST})"))
         )
         .cast("bigint")
         .alias("t_sum")
     )
     tb = nat.crossJoin(F.broadcast(tot)).agg(
         F.sum(
-            F.expr(
-                f"CAST(floor((CAST(n_g AS DOUBLE) / n)"
-                f" * ln({_MLD_R_NAT})"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
+            F.expr(micro_units_sql(f"(CAST(n_g AS DOUBLE) / n) * ln({_MLD_R_NAT})"))
         )
         .cast("bigint")
         .alias("tb_micro")
@@ -1547,10 +1498,7 @@ def agg_atkinson_index(spark, sf_dir):
     cust, _nat, tot = _theil_base(spark, sf_dir)
     tt = cust.crossJoin(F.broadcast(tot)).agg(
         F.sum(
-            F.expr(
-                f"CAST(floor(ln({_MLD_R_CUST})"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
+            F.expr(micro_units_sql(f"ln({_MLD_R_CUST})"))
         )
         .cast("bigint")
         .alias("t_sum")
@@ -1567,10 +1515,9 @@ def agg_atkinson_index(spark, sf_dir):
         F.col("n").alias("n_customers"),
         F.col("s").alias("total_spend_cents"),
         F.round(F.col("l_micro") / F.expr("1000000e0"), 6).alias("mld"),
-        F.expr(
-            "round(CAST(floor((1e0 - exp(-(l_micro / 1000000e0)))"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("atkinson_1"),
+        F.expr(micro6_sql("(1e0 - exp(-(l_micro / 1000000e0)))")).alias(
+            "atkinson_1"
+        ),
         F.expr("CAST((2 * s + n) DIV (2 * n) AS BIGINT)").alias(
             "mean_spend_cents"
         ),
@@ -1698,9 +1645,7 @@ def agg_hoover_index(spark, sf_dir):
             "hoover_between"
         ),
         F.expr(
-            "CASE WHEN h_c > 0 THEN"
-            " round(CAST(floor(CAST(hb_c AS DOUBLE) / h_c"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            f"CASE WHEN h_c > 0 THEN {micro6_sql('CAST(hb_c AS DOUBLE) / h_c')} END"
         ).alias("between_share"),
     )
 
@@ -1771,10 +1716,7 @@ def _cust_spend_prefix(spark, cust, fracs):
     )
 
 
-_SHARE6 = (
-    "round(CAST(floor(CAST({num} AS DOUBLE) / NULLIF({den}, 0)"
-    " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-)
+_SHARE6 = micro6_sql("CAST({num} AS DOUBLE) / NULLIF({den}, 0)")
 
 _LORENZ_ORACLE = f"""
     WITH {_THEIL_BASE_CTES},
@@ -2148,6 +2090,36 @@ _BASKET_RULES_ORACLE = f"""
 """
 
 
+def _basket_supports(spark, sf_dir):
+    """(baskets, nb, supp, pairs) of the brand association rules: the
+    session-checkpointed per-order distinct-brand sets, the basket
+    count n (one row per distinct okey = count(DISTINCT okey)), the
+    per-brand support s (exploding the distinct brand set re-yields
+    exactly the distinct (okey, brand) pairs), and the per-(b1 < b2)
+    pair support sp."""
+    baskets = _brand_baskets(spark, sf_dir)
+    nb = baskets.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    supp = (
+        baskets.select(F.explode("bs").alias("brand"))
+        .groupBy("brand")
+        .agg(F.count("*").cast("bigint").alias("s"))
+    )
+    pairs = (
+        baskets.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(bs, (x, i) ->"
+                    " transform(slice(bs, i + 2, size(bs)),"
+                    " y -> struct(x AS b1, y AS b2))))"
+                )
+            ).alias("pr")
+        )
+        .groupBy(F.col("pr.b1").alias("b1"), F.col("pr.b2").alias("b2"))
+        .agg(F.count("*").cast("bigint").alias("sp"))
+    )
+    return baskets, nb, supp, pairs
+
+
 @register("basket_brand_rules", _BASKET_RULES_ORACLE, headline=True)
 def basket_brand_rules(spark, sf_dir):
     """Top-20 brand→brand association rules by lift over order
@@ -2172,30 +2144,7 @@ def basket_brand_rules(spark, sf_dir):
     reads the flat checkpointed relation; the anti-pruning
     size(bs) >= 0 guard (ADVICE r16: version-fragile) is gone — a
     materialized relation cannot be pruned."""
-    baskets = _brand_baskets(spark, sf_dir)
-    # one row per distinct okey — identical to count(DISTINCT okey)
-    # on the distinct (okey, brand) relation
-    nb = baskets.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    # bs is the distinct brand set of the order, so exploding it yields
-    # exactly the distinct (okey, brand) relation ob again
-    supp = (
-        baskets.select(F.explode("bs").alias("brand"))
-        .groupBy("brand")
-        .agg(F.count("*").cast("bigint").alias("s"))
-    )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(bs, (x, i) ->"
-                    " transform(slice(bs, i + 2, size(bs)),"
-                    " y -> struct(x AS b1, y AS b2))))"
-                )
-            ).alias("pr")
-        )
-        .groupBy(F.col("pr.b1").alias("b1"), F.col("pr.b2").alias("b2"))
-        .agg(F.count("*").cast("bigint").alias("sp"))
-    )
+    _, nb, supp, pairs = _basket_supports(spark, sf_dir)
     rules = pairs.select(
         F.col("b1").alias("antecedent"),
         F.col("b2").alias("consequent"),
@@ -2235,15 +2184,12 @@ def basket_brand_rules(spark, sf_dir):
             "support_a",
             "support_b",
             F.col("n").alias("n_baskets"),
-            F.expr(
-                "CAST(floor(CAST(sp AS DOUBLE) / support_a"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            ).alias("conf_micro"),
-            F.expr(
-                "CAST(floor(CAST(sp AS DOUBLE) * n"
-                " / (CAST(support_a AS DOUBLE) * support_b)"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            ).alias("lift_micro"),
+            F.expr(micro_units_sql(
+                "CAST(sp AS DOUBLE) / support_a"
+            )).alias("conf_micro"),
+            F.expr(micro_units_sql(
+                "CAST(sp AS DOUBLE) * n / (CAST(support_a AS DOUBLE) * support_b)"
+            )).alias("lift_micro"),
         )
     )
     return (
@@ -2360,30 +2306,7 @@ def basket_brand_rules3(spark, sf_dir):
     relation), so the pair-support and consequent-support joins both
     broadcast; top-20 is TakeOrderedAndProject on the exact BIGINT
     lift key."""
-    baskets = _brand_baskets(spark, sf_dir)
-    # nb and supp derive FROM the session-checkpointed basket relation
-    # (r17, VERDICT r16 #3 — see _brand_baskets): one row per distinct
-    # okey = count(DISTINCT okey); exploding the distinct brand set
-    # re-yields exactly the distinct (okey, brand) pairs.
-    nb = baskets.agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    supp = (
-        baskets.select(F.explode("bs").alias("brand"))
-        .groupBy("brand")
-        .agg(F.count("*").cast("bigint").alias("s"))
-    )
-    pairs = (
-        baskets.select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(bs, (x, i) ->"
-                    " transform(slice(bs, i + 2, size(bs)),"
-                    " y -> struct(x AS b1, y AS b2))))"
-                )
-            ).alias("pr")
-        )
-        .groupBy(F.col("pr.b1").alias("b1"), F.col("pr.b2").alias("b2"))
-        .agg(F.count("*").cast("bigint").alias("sp"))
-    )
+    baskets, nb, supp, pairs = _basket_supports(spark, sf_dir)
     # x at 0-based index i, y at 0-based index j WITHIN x's tail slice
     # (global index i+1+j), z from the tail after y (1-based start
     # i+j+3) — each sorted triple emitted exactly once per basket.
@@ -2453,15 +2376,12 @@ def basket_brand_rules3(spark, sf_dir):
             "support_ante",
             "support_cons",
             F.col("n").alias("n_baskets"),
-            F.expr(
-                "CAST(floor(CAST(st AS DOUBLE) / support_ante"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            ).alias("conf_micro"),
-            F.expr(
-                "CAST(floor(CAST(st AS DOUBLE) * n"
-                " / (CAST(support_ante AS DOUBLE) * support_cons)"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            ).alias("lift_micro"),
+            F.expr(micro_units_sql(
+                "CAST(st AS DOUBLE) / support_ante"
+            )).alias("conf_micro"),
+            F.expr(micro_units_sql(
+                "CAST(st AS DOUBLE) * n / (CAST(support_ante AS DOUBLE) * support_cons)"
+            )).alias("lift_micro"),
         )
     )
     return (

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from .functions.scalar import hex_chunk_int_sql
+from .functions.scalar import hex_chunk_int_sql, micro6_sql, micro_units_sql
 from .registry import register
 from .sources.catalog import load_table
 
@@ -939,15 +939,9 @@ def pii_t_closeness(spark, sf_dir):
         "c_mktsegment",
         "c_nationkey",
         "n",
-        F.round(
-            F.expr(
-                "CAST(floor(CAST(part + n * (n_total - presentg) AS DOUBLE)"
-                " / (2e0 * n * n_total)"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("tv_distance"),
+        F.expr(micro6_sql(
+            "CAST(part + n * (n_total - presentg) AS DOUBLE) / (2e0 * n * n_total)"
+        )).alias("tv_distance"),
         (
             F.lit(_TCLOSE_T_DEN) * numer
             > F.lit(2 * _TCLOSE_T_NUM) * F.col("n") * F.col("n_total")
@@ -1040,10 +1034,7 @@ def pii_dp_noisy_counts(spark, sf_dir):
         "c_mktsegment",
         "n_true",
         F.when(F.col("uu") >= 0.5, 1).otherwise(-1).alias("sgn"),
-        F.expr(
-            "CAST(floor(ln(1e0 - 2e0 * abs(uu - 0.5e0))"
-            " * 1000000e0 + 0.5e0) AS BIGINT)"
-        ).alias("lam_micro"),
+        F.expr(micro_units_sql("ln(1e0 - 2e0 * abs(uu - 0.5e0))")).alias("lam_micro"),
     )
     return nz.select(
         "c_mktsegment",

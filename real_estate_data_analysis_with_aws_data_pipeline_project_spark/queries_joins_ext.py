@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators.asof import asof_join, range_join_bucketed
+from .operators.events import sessionize
 from .registry import register
 from .sources.catalog import load_table
 
@@ -206,31 +207,9 @@ def join_interval_overlap(spark, sf_dir):
     Scale: sessionization is one user_id shuffle; join fan-in per
     bucket is (active sessions that hour)², the intrinsic overlap-join
     cost, with AQE splitting any hot hour."""
-    ev = load_table(spark, sf_dir, "events")
-    from pyspark.sql import Window
-
     from .operators.asof import interval_overlap_join
 
-    uw = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    m = ev.select(
-        "user_id", "ts", "event_id", F.lag("ts").over(uw).alias("prev_ts")
-    ).withColumn(
-        "new_s",
-        F.when(
-            F.col("prev_ts").isNull()
-            | (
-                F.unix_micros("ts") - F.unix_micros("prev_ts")
-                >= _OVL_GAP_US
-            ),
-            1,
-        ).otherwise(0),
-    )
-    s = m.withColumn(
-        "sid",
-        F.sum("new_s").over(
-            uw.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        ),
-    )
+    s = sessionize(load_table(spark, sf_dir, "events"), _OVL_GAP_US)
     # r17 (guide §5): the session relation feeds BOTH sides of the
     # overlap self-join; the r16 shape still ran the sessionize
     # subtree (events shuffle + two windows + aggregate) twice per

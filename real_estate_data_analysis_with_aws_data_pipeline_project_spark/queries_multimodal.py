@@ -121,6 +121,30 @@ def multimodal_features_audit(spark, sf_dir):
     )
 
 
+def _container_audit(container):
+    """(doc_id, media_format, n_samples, container_bytes, mean_byte,
+    std_byte, hist_bin6): the decoded container's byte statistics from
+    the shared feature extractor beside its measured binary length.
+    ``container`` feeds both join sides, so callers checkpoint it."""
+    feats = extract_features(container)
+    sizes = container.select(
+        "doc_id", F.length("payload").cast("bigint").alias("container_bytes")
+    )
+    f = F.col("features")
+    return (
+        feats.join(sizes, "doc_id")
+        .select(
+            "doc_id",
+            "media_format",
+            F.col("n_bytes").cast("bigint").alias("n_samples"),
+            "container_bytes",
+            F.round(F.element_at(f, 17), 4).alias("mean_byte"),
+            F.round(F.element_at(f, 18), 4).alias("std_byte"),
+            F.round(F.element_at(f, 7), 4).alias("hist_bin6"),
+        )
+    )
+
+
 @register(
     "multimodal_wav_audit",
     """
@@ -168,23 +192,7 @@ def multimodal_wav_audit(spark, sf_dir):
     # mapInPandas runs twice (r14 review; the _seq_day_increments
     # convention for reused relations)
     wav = encode_wav_payloads(docs).localCheckpoint(eager=True)
-    feats = extract_features(wav)
-    sizes = wav.select(
-        "doc_id", F.length("payload").cast("bigint").alias("container_bytes")
-    )
-    f = F.col("features")
-    return (
-        feats.join(sizes, "doc_id")
-        .select(
-            "doc_id",
-            "media_format",
-            F.col("n_bytes").cast("bigint").alias("n_samples"),
-            "container_bytes",
-            F.round(F.element_at(f, 17), 4).alias("mean_byte"),
-            F.round(F.element_at(f, 18), 4).alias("std_byte"),
-            F.round(F.element_at(f, 7), 4).alias("hist_bin6"),
-        )
-    )
+    return _container_audit(wav)
 
 
 @register(
@@ -239,23 +247,7 @@ def multimodal_mp4_audit(spark, sf_dir):
     # (features and measured sizes) — the multimodal_wav_audit
     # convention for reused mapInPandas relations
     mp4 = encode_mp4_payloads(docs).localCheckpoint(eager=True)
-    feats = extract_features(mp4)
-    sizes = mp4.select(
-        "doc_id", F.length("payload").cast("bigint").alias("container_bytes")
-    )
-    f = F.col("features")
-    return (
-        feats.join(sizes, "doc_id")
-        .select(
-            "doc_id",
-            "media_format",
-            F.col("n_bytes").cast("bigint").alias("n_samples"),
-            "container_bytes",
-            F.round(F.element_at(f, 17), 4).alias("mean_byte"),
-            F.round(F.element_at(f, 18), 4).alias("std_byte"),
-            F.round(F.element_at(f, 7), 4).alias("hist_bin6"),
-        )
-    )
+    return _container_audit(mp4)
 
 
 # r5: these three streaming jobs were rows-only since r1, but their

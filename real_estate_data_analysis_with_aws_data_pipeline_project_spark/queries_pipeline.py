@@ -9,7 +9,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from .functions.scalar import hex_chunk_int_sql
+from .functions.scalar import hex_chunk_int_sql, micro6_sql, micro_units_sql
 from .registry import register
 from .session import local_frame
 from .sources.catalog import load_table
@@ -565,6 +565,37 @@ _ER_ORACLE = f"""
 """
 
 
+def _er_parts(spark, sf_dir):
+    """(pk, first_tok, block_tok, brand, ptype): the entity-resolution
+    view of part, the first and last name tokens beside the blocking
+    attributes."""
+    return load_table(spark, sf_dir, "part").select(
+        F.col("p_partkey").alias("pk"),
+        F.substring_index("p_name", " ", 1).alias("first_tok"),
+        F.substring_index("p_name", " ", -1).alias("block_tok"),
+        F.col("p_brand").alias("brand"),
+        F.col("p_type").alias("ptype"),
+    )
+
+
+def _er_blocked_pairs(r):
+    """(u, v) matched pairs u < v of ``r`` (an ``_er_parts`` relation):
+    same (block_tok, brand, ptype) block and first-token Levenshtein
+    distance at most _ER_LEV_MAX — pairwise work only inside blocks."""
+    a, b = r.alias("a"), r.alias("b")
+    return a.join(
+        b,
+        (F.col("a.block_tok") == F.col("b.block_tok"))
+        & (F.col("a.brand") == F.col("b.brand"))
+        & (F.col("a.ptype") == F.col("b.ptype"))
+        & (F.col("a.pk") < F.col("b.pk"))
+        & (
+            F.levenshtein(F.col("a.first_tok"), F.col("b.first_tok"))
+            <= _ER_LEV_MAX
+        ),
+    ).select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
+
+
 @register("er_blocked_parts", _ER_ORACLE)
 def er_blocked_parts(spark, sf_dir):
     """Blocked entity resolution over the parts catalog: records that
@@ -585,25 +616,8 @@ def er_blocked_parts(spark, sf_dir):
     entity_id."""
     from .queries_quality import min_label_components
 
-    r = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("pk"),
-        F.substring_index("p_name", " ", 1).alias("first_tok"),
-        F.substring_index("p_name", " ", -1).alias("block_tok"),
-        F.col("p_brand").alias("brand"),
-        F.col("p_type").alias("ptype"),
-    )
-    a, b = r.alias("a"), r.alias("b")
-    m = a.join(
-        b,
-        (F.col("a.block_tok") == F.col("b.block_tok"))
-        & (F.col("a.brand") == F.col("b.brand"))
-        & (F.col("a.ptype") == F.col("b.ptype"))
-        & (F.col("a.pk") < F.col("b.pk"))
-        & (
-            F.levenshtein(F.col("a.first_tok"), F.col("b.first_tok"))
-            <= _ER_LEV_MAX
-        ),
-    ).select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
+    r = _er_parts(spark, sf_dir)
+    m = _er_blocked_pairs(r)
     comp = min_label_components(m)
     assigned = r.join(
         comp.select(F.col("u").alias("pk"), "lbl"), "pk", "left"
@@ -703,13 +717,7 @@ def er_blocking_quality(spark, sf_dir):
     means, so sampling estimates them unbiasedly; see section
     comment). Scalars cross-join as broadcasts. Pair counts exact
     int64; ratios micro-quantized (section comment)."""
-    r = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("pk"),
-        F.substring_index("p_name", " ", 1).alias("first_tok"),
-        F.substring_index("p_name", " ", -1).alias("block_tok"),
-        F.col("p_brand").alias("brand"),
-        F.col("p_type").alias("ptype"),
-    )
+    r = _er_parts(spark, sf_dir)
     blocks = r.groupBy("block_tok", "brand", "ptype").agg(
         F.count("*").cast("bigint").alias("sz")
     )
@@ -760,16 +768,18 @@ def er_blocking_quality(spark, sf_dir):
             F.when(
                 F.col("true_pairs") > 0,
                 F.expr(
-                    "CAST(floor(CAST(kept_pairs AS DOUBLE) / true_pairs"
-                    " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0"
+                    micro_units_sql("CAST(kept_pairs AS DOUBLE) / true_pairs")
+                    + " / 1000000e0"
                 ),
             ).alias("pair_completeness"),
             F.when(
                 F.col("n_records") > 1,
                 F.expr(
-                    "CAST(floor((1e0 - CAST(cand_pairs AS DOUBLE)"
-                    " / ((n_records * (n_records - 1)) div 2))"
-                    " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0"
+                    micro_units_sql(
+                        "(1e0 - CAST(cand_pairs AS DOUBLE)"
+                        " / ((n_records * (n_records - 1)) div 2))"
+                    )
+                    + " / 1000000e0"
                 ),
             ).alias("reduction_ratio"),
         )
@@ -857,27 +867,10 @@ def er_incremental_parts(spark, sf_dir):
     outside blocks, no recompute of existing clusters."""
     from .queries_quality import min_label_components
 
-    r = load_table(spark, sf_dir, "part").select(
-        F.col("p_partkey").alias("pk"),
-        F.substring_index("p_name", " ", 1).alias("first_tok"),
-        F.substring_index("p_name", " ", -1).alias("block_tok"),
-        F.col("p_brand").alias("brand"),
-        F.col("p_type").alias("ptype"),
-    )
+    r = _er_parts(spark, sf_dir)
     is_batch = (F.col("pk") % _ER_BATCH_MOD) == _ER_BATCH_REM
     ex, batch = r.where(~is_batch), r.where(is_batch)
-    a, b = ex.alias("a"), ex.alias("b")
-    m = a.join(
-        b,
-        (F.col("a.block_tok") == F.col("b.block_tok"))
-        & (F.col("a.brand") == F.col("b.brand"))
-        & (F.col("a.ptype") == F.col("b.ptype"))
-        & (F.col("a.pk") < F.col("b.pk"))
-        & (
-            F.levenshtein(F.col("a.first_tok"), F.col("b.first_tok"))
-            <= _ER_LEV_MAX
-        ),
-    ).select(F.col("a.pk").alias("u"), F.col("b.pk").alias("v"))
+    m = _er_blocked_pairs(ex)
     comp = min_label_components(m)
     store = ex.join(
         comp.select(F.col("u").alias("pk"), "lbl"), "pk", "left"
@@ -1539,16 +1532,15 @@ def dq_column_profile(spark, sf_dir):
         "n_nulls",
         "n_distinct",
         F.expr(
-            "CASE WHEN n_rows > 0 THEN"
-            " round(CAST(floor(CAST(n_distinct AS DOUBLE) / n_rows"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            "CASE WHEN n_rows > 0 THEN "
+            + micro6_sql("CAST(n_distinct AS DOUBLE) / n_rows")
+            + " END"
         ).alias("uniqueness"),
         "mode_count",
         F.expr(
-            "CASE WHEN n_rows - n_nulls > 0 THEN"
-            " round(CAST(floor(CAST(mode_count AS DOUBLE)"
-            " / (n_rows - n_nulls)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            "CASE WHEN n_rows - n_nulls > 0 THEN "
+            + micro6_sql("CAST(mode_count AS DOUBLE) / (n_rows - n_nulls)")
+            + " END"
         ).alias("mode_share"),
         F.expr(
             "CAST(CASE WHEN n_distinct = n_rows AND n_nulls = 0"

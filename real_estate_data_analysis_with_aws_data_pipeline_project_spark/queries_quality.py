@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from .operators import text as X
 from .queries_dedup import MINHASH_PAIRS_ORACLE, SHINGLES_SQL, cached_shingles
+from .functions.scalar import micro_units_sql
 from .registry import register
 from .session import local_frame
 from .sources.catalog import load_table
@@ -232,18 +233,15 @@ _PII_ORACLE = f"""
 """
 
 
-@register("pii_detect_redact", _PII_ORACLE)
-def pii_detect_redact(spark, sf_dir):
-    """PII scrubbing: regex detection counts (email, phone) and the
-    redacted text (fingerprinted for compact comparison). Pure per-row
-    regexp expressions — map-only at any scale. Detection patterns are
-    deliberately simple/public (RFC-ish email shape, 555 phone stub);
-    production swaps in a vetted pattern pack, same plumbing."""
+def _pii_injected_text() -> F.Column:
+    """The documents' text with synthetic PII appended to every 7th
+    doc_id (an email and a 555 phone stub derived from doc_id) — the
+    detection and tokenization queries' shared input."""
     phone = F.concat(
         F.lit("555-"),
         F.lpad(((F.col("doc_id") * 7) % 10000).cast("string"), 4, "0"),
     )
-    pii_text = F.when(
+    return F.when(
         F.col("doc_id") % 7 == 0,
         F.concat(
             F.col("text"),
@@ -253,6 +251,16 @@ def pii_detect_redact(spark, sf_dir):
             phone,
         ),
     ).otherwise(F.col("text"))
+
+
+@register("pii_detect_redact", _PII_ORACLE)
+def pii_detect_redact(spark, sf_dir):
+    """PII scrubbing: regex detection counts (email, phone) and the
+    redacted text (fingerprinted for compact comparison). Pure per-row
+    regexp expressions — map-only at any scale. Detection patterns are
+    deliberately simple/public (RFC-ish email shape, 555 phone stub);
+    production swaps in a vetted pattern pack, same plumbing."""
+    pii_text = _pii_injected_text()
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", pii_text.alias("pii_text")
     )
@@ -920,6 +928,23 @@ def psi_from_cube(day_cnt: DataFrame) -> DataFrame:
     )
 
 
+def _psi_day_cube(spark, sf_dir):
+    """(event_type, day, bucket, c): the per-day value-bucket count
+    cube of events, the complete sufficient statistic of the drift
+    queries."""
+    ev = load_table(spark, sf_dir, "events")
+    e = ev.select(
+        "event_type",
+        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias(
+            "day"
+        ),
+        psi_bucket_col().alias("bucket"),
+    )
+    return e.groupBy("event_type", "day", "bucket").agg(
+        F.count("*").cast("bigint").alias("c")
+    )
+
+
 def psi_bucket_col():
     """The fixed-width value bucket shared by the batch pass and the
     streaming tier's source projection."""
@@ -948,22 +973,10 @@ def quality_psi_drift(spark, sf_dir):
     and reference grain), then joins on the tiny
     (type × day × bucket) grid — at 100 TB the reference histogram is
     a broadcast row-set and days are processed independently."""
-    ev = load_table(spark, sf_dir, "events")
-    e = ev.select(
-        "event_type",
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias(
-            "day"
-        ),
-        psi_bucket_col().alias("bucket"),
-    )
     # ONE pass to the sufficient-statistic cube (r9 refactor: day
     # totals and the pooled reference are sums over it — see
-    # psi_from_cube, shared with the streaming tier); values identical
-    # to the former four-aggregation form because every derived count
-    # is the same exact integer.
-    day_cnt = e.groupBy("event_type", "day", "bucket").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
+    # psi_from_cube, shared with the streaming tier)
+    day_cnt = _psi_day_cube(spark, sf_dir)
     # Materialize the cube: psi_from_cube consumes it in three plan
     # branches (day totals, reference histogram, verify join) and
     # Catalyst would otherwise rescan events once per branch. The cube
@@ -1271,20 +1284,7 @@ def pii_tokenize_preserving(spark, sf_dir):
     Scale: pure per-row regexp + hash expressions — map-only,
     whole-stage-codegen'd, zero shuffle; the token mapping needs no
     lookup table because the token IS a hash of the value."""
-    phone_inj = F.concat(
-        F.lit("555-"),
-        F.lpad(((F.col("doc_id") * 7) % 10000).cast("string"), 4, "0"),
-    )
-    pii_text = F.when(
-        F.col("doc_id") % 7 == 0,
-        F.concat(
-            F.col("text"),
-            F.lit(" contact user"),
-            F.col("doc_id").cast("string"),
-            F.lit("@example.com or "),
-            phone_inj,
-        ),
-    ).otherwise(F.col("text"))
+    pii_text = _pii_injected_text()
     m = load_table(spark, sf_dir, "documents").select(
         "doc_id",
         pii_text.alias("pii_text"),
@@ -1671,17 +1671,7 @@ def quality_js_divergence(spark, sf_dir):
     arithmetic on the tiny grid; the term sum is exact BIGINT
     micro-nats (see module comment), so the result is independent of
     partitioning and sum order."""
-    ev = load_table(spark, sf_dir, "events")
-    e = ev.select(
-        "event_type",
-        F.date_format(F.date_trunc("day", F.col("ts")), "yyyy-MM-dd").alias(
-            "day"
-        ),
-        psi_bucket_col().alias("bucket"),
-    )
-    day_cnt = e.groupBy("event_type", "day", "bucket").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
+    day_cnt = _psi_day_cube(spark, sf_dir)
     # jsd_from_cube consumes the cube in three plan branches (totals +
     # the two half histograms); checkpoint the metadata-scale cube so
     # events are scanned once (the PSI precedent).
@@ -1982,10 +1972,9 @@ def quality_perplexity_drift(spark, sf_dir):
     q = m.select(
         "is_train",
         "n_docs",
-        F.expr(
-            "CAST(floor(CAST(s_e4 AS DOUBLE) / n_docs / 10000e0"
-            " * 1000000e0 + 0.5e0) AS BIGINT)"
-        ).alias("mean_micro"),
+        F.expr(micro_units_sql(
+            "CAST(s_e4 AS DOUBLE) / n_docs / 10000e0"
+        )).alias("mean_micro"),
     )
     t = q.where(F.col("is_train")).select(
         F.col("n_docs").alias("n_train_docs"),
@@ -2048,20 +2037,16 @@ def _benford_term_micro(obs: str, n: str, p: str) -> str:
     ONE builder for both engines (exp = n·p in double, term =
     (obs − exp)²/exp)."""
     exp = f"(CAST({n} AS DOUBLE) * ({p}))"
-    return (
-        f"CAST(floor((CAST({obs} AS DOUBLE) - {exp})"
+    return micro_units_sql(
+        f"(CAST({obs} AS DOUBLE) - {exp})"
         f" * (CAST({obs} AS DOUBLE) - {exp}) / {exp}"
-        f" * 1000000e0 + 0.5e0) AS BIGINT)"
     )
 
 
 def _benford_mad_term_micro(obs: str, n: str, p: str) -> str:
     """Micro-quantized |obs/n − p| share-deviation term (Nigrini MAD
     numerator) — same one-builder contract."""
-    return (
-        f"CAST(floor(abs(CAST({obs} AS DOUBLE) / ({n}) - ({p}))"
-        f" * 1000000e0 + 0.5e0) AS BIGINT)"
-    )
+    return micro_units_sql(f"abs(CAST({obs} AS DOUBLE) / ({n}) - ({p}))")
 
 
 _BENFORD_CASE_P = (

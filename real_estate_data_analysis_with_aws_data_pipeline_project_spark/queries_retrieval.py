@@ -33,6 +33,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .functions.scalar import micro6_sql, micro_units_sql
 from .operators import similarity as S
 from .operators.session_cache import session_cached
 from .operators import text as X
@@ -1130,11 +1131,7 @@ def graph_local_clustering(spark, sf_dir):
         )
         .withColumn(
             "cc_micro",
-            F.expr(
-                "CAST(floor(2e0 * n_triangles"
-                " / (degree * (degree - 1))"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            ),
+            F.expr(micro_units_sql("2e0 * n_triangles / (degree * (degree - 1))")),
         )
     )
     return (
@@ -1185,10 +1182,9 @@ _QL_TOP_K = 20
 def _ql_term_sql(i: int) -> str:
     # BIGINT micro-nats: floor/mul/add are exactly-rounded IEEE ops,
     # identical in both engines (unlike round() at a half boundary).
-    return (
-        f"CAST(floor(ln((tf{i} + {_QL_MU} * ((cf{i} + 1e0)"
+    return micro_units_sql(
+        f"ln((tf{i} + {_QL_MU} * ((cf{i} + 1e0)"
         f" / (coll_len + {_QL_V}))) / (dl + {_QL_MU}))"
-        f" * 1000000e0 + 0.5e0) AS BIGINT)"
     )
 
 
@@ -1434,10 +1430,7 @@ _NDCG_K = 10
 
 
 def _gain_micro_sql(rel: str, rnk: str) -> str:
-    return (
-        f"CAST(floor((power(2e0, {rel}) - 1e0) / log2({rnk} + 1e0)"
-        " * 1000000e0 + 0.5e0) AS BIGINT)"
-    )
+    return micro_units_sql(f"(power(2e0, {rel}) - 1e0) / log2({rnk} + 1e0)")
 
 
 _NDCG_ORACLE = f"""
@@ -1568,14 +1561,9 @@ def retrieval_ndcg_eval(spark, sf_dir):
         "retriever",
         "dcg_micro",
         "idcg_micro",
-        F.round(
-            F.expr(
-                "CAST(floor(CAST(dcg_micro AS DOUBLE)"
-                " / NULLIF(idcg_micro, 0) * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("ndcg_at_10"),
+        F.expr(micro6_sql(
+            "CAST(dcg_micro AS DOUBLE) / NULLIF(idcg_micro, 0)"
+        )).alias("ndcg_at_10"),
     )
 
 
@@ -1635,6 +1623,35 @@ _TAU_ORACLE = f"""
 """
 
 
+def _ranked_top(scored: DataFrame, score: str, k: int, rank: str) -> DataFrame:
+    """(doc_id, ``rank``): the ``k`` best documents by descending
+    ``score``, ties by doc_id, ranked 1..k (a TakeOrderedAndProject
+    plus a rank window over at most k rows)."""
+    return (
+        scored.orderBy(F.desc(score), "doc_id")
+        .limit(k)
+        .select(
+            "doc_id",
+            F.row_number()
+            .over(Window.orderBy(F.desc(score), "doc_id"))
+            .cast("bigint")
+            .alias(rank),
+        )
+    )
+
+
+def _with_degrees(p: DataFrame, sd: DataFrame) -> DataFrame:
+    """The (s1, s2) pair relation ``p`` with both endpoints' degrees
+    (deg1, deg2) joined from the degree table ``sd`` (supp, d)."""
+    return p.join(
+        sd.select(F.col("supp").alias("s1"), F.col("d").alias("deg1")),
+        "s1",
+    ).join(
+        sd.select(F.col("supp").alias("s2"), F.col("d").alias("deg2")),
+        "s2",
+    )
+
+
 @register("retrieval_rank_correlation", _TAU_ORACLE)
 def retrieval_rank_correlation(spark, sf_dir):
     """Kendall tau-a rank correlation between the two retrievers'
@@ -1654,28 +1671,8 @@ def retrieval_rank_correlation(spark, sf_dir):
     with retrieval_ndcg_eval (one corpus tokenization serves both
     evaluators; r9 review)."""
     scored = cached_dual_scored(spark, sf_dir)
-    bmtop = (
-        scored.orderBy(F.desc("bm25"), "doc_id")
-        .limit(_TAU_K)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.desc("bm25"), "doc_id"))
-            .cast("bigint")
-            .alias("r_bm"),
-        )
-    )
-    qltop = (
-        scored.orderBy(F.desc("qlm"), "doc_id")
-        .limit(_TAU_K)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.desc("qlm"), "doc_id"))
-            .cast("bigint")
-            .alias("r_ql"),
-        )
-    )
+    bmtop = _ranked_top(scored, "bm25", _TAU_K, "r_bm")
+    qltop = _ranked_top(scored, "qlm", _TAU_K, "r_ql")
     # common is <= k rows and is consumed by a SELF-JOIN plus the
     # count — checkpoint the metadata-scale relation so the two
     # retriever top-k subplans (and their rank windows) execute once
@@ -1708,15 +1705,10 @@ def retrieval_rank_correlation(spark, sf_dir):
         "n_common",
         "concordant",
         "discordant",
-        F.round(
-            F.expr(
-                "CAST(floor(CAST(concordant - discordant AS DOUBLE)"
-                " / NULLIF(n_common * (n_common - 1) / 2, 0)"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("kendall_tau"),
+        F.expr(micro6_sql(
+            "CAST(concordant - discordant AS DOUBLE)"
+            " / NULLIF(n_common * (n_common - 1) / 2, 0)"
+        )).alias("kendall_tau"),
     )
 
 
@@ -1820,28 +1812,8 @@ def retrieval_rbo_overlap(spark, sf_dir):
     one corpus tokenization serves all three evaluators); everything
     after runs on ≤ k rows."""
     scored = cached_dual_scored(spark, sf_dir)
-    bmtop = (
-        scored.orderBy(F.desc("bm25"), "doc_id")
-        .limit(_RBO_K)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.desc("bm25"), "doc_id"))
-            .cast("bigint")
-            .alias("r_bm"),
-        )
-    )
-    qltop = (
-        scored.orderBy(F.desc("qlm"), "doc_id")
-        .limit(_RBO_K)
-        .select(
-            "doc_id",
-            F.row_number()
-            .over(Window.orderBy(F.desc("qlm"), "doc_id"))
-            .cast("bigint")
-            .alias("r_ql"),
-        )
-    )
+    bmtop = _ranked_top(scored, "bm25", _RBO_K, "r_bm")
+    qltop = _ranked_top(scored, "qlm", _RBO_K, "r_ql")
     common = bmtop.join(qltop, "doc_id").select(
         F.greatest("r_bm", "r_ql").cast("bigint").alias("m")
     )
@@ -1855,10 +1827,9 @@ def retrieval_rbo_overlap(spark, sf_dir):
         F.lit(_RBO_K).cast("bigint").alias("depth_k"),
         F.lit(float(_RBO_P)).alias("persistence_p"),
         "n_common",
-        F.expr(
-            f"round(CAST(floor(CAST(n_common AS DOUBLE) / {_RBO_K}"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("overlap_at_k"),
+        F.expr(micro6_sql(
+            f"CAST(n_common AS DOUBLE) / {_RBO_K}"
+        )).alias("overlap_at_k"),
         F.expr(
             "round(CAST(floor(rbo_pico / 1000000e0 + 0.5e0) AS BIGINT)"
             " / 1000000e0, 6)"
@@ -2025,15 +1996,7 @@ def retrieval_mrr_eval(spark, sf_dir):
             F.lit(0e0),
         ).alias("mrr_at_10"),
         F.coalesce(
-            F.round(
-                F.expr(
-                    "CAST(floor(CAST(hits_at_k AS DOUBLE)"
-                    " / NULLIF(n_relevant, 0)"
-                    " * 1000000e0 + 0.5e0) AS BIGINT)"
-                )
-                / F.expr("1000000e0"),
-                6,
-            ),
+            F.expr(micro6_sql("CAST(hits_at_k AS DOUBLE) / NULLIF(n_relevant, 0)")),
             F.lit(0e0),
         ).alias("recall_at_10"),
     )
@@ -2101,21 +2064,12 @@ def graph_jaccard_similarity(spark, sf_dir):
     p = _cosupp_pair_cells(spark, sf_dir)
     sd = _cosupp_degrees(spark, sf_dir)
     j = (
-        p.join(
-            sd.select(F.col("supp").alias("s1"), F.col("d").alias("deg1")),
-            "s1",
-        )
-        .join(
-            sd.select(F.col("supp").alias("s2"), F.col("d").alias("deg2")),
-            "s2",
-        )
+        _with_degrees(p, sd)
         .withColumn(
             "jac_micro",
-            F.expr(
-                "CAST(floor(CAST(shared_customers AS DOUBLE)"
-                " / (deg1 + deg2 - shared_customers)"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            ),
+            F.expr(micro_units_sql(
+                "CAST(shared_customers AS DOUBLE) / (deg1 + deg2 - shared_customers)"
+            )),
         )
     )
     return (
@@ -2324,14 +2278,7 @@ def graph_preferential_attachment(spark, sf_dir):
     )
     sd = _cosupp_degrees(spark, sf_dir)
     j = (
-        p.join(
-            sd.select(F.col("supp").alias("s1"), F.col("d").alias("deg1")),
-            "s1",
-        )
-        .join(
-            sd.select(F.col("supp").alias("s2"), F.col("d").alias("deg2")),
-            "s2",
-        )
+        _with_degrees(p, sd)
         .withColumn("pa_score", F.col("deg1") * F.col("deg2"))
     )
     return (
@@ -2364,11 +2311,12 @@ def graph_preferential_attachment(spark, sf_dir):
 _ASSORT_R_SQL = (
     "CASE WHEN (2e0 * e_cnt * CAST(s2 AS DOUBLE)"
     " - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE)) <> 0e0 THEN"
-    " round(CAST(floor((2e0 * e_cnt * (2e0 * CAST(sxy AS DOUBLE))"
-    " - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))"
-    " / (2e0 * e_cnt * CAST(s2 AS DOUBLE)"
-    " - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))"
-    " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+    " " + micro6_sql(
+        "(2e0 * e_cnt * (2e0 * CAST(sxy AS DOUBLE))"
+        " - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))"
+        " / (2e0 * e_cnt * CAST(s2 AS DOUBLE)"
+        " - CAST(s1 AS DOUBLE) * CAST(s1 AS DOUBLE))"
+    ) + " END"
 )
 
 _ASSORT_ORACLE = f"""
@@ -2767,8 +2715,7 @@ def graph_degree_distribution(spark, sf_dir):
         "bucket_edges",
         "max_degree",
         F.expr(
-            "CAST(floor(CAST(bucket_edges AS DOUBLE) / n_edges"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0"
+            micro_units_sql("CAST(bucket_edges AS DOUBLE) / n_edges") + " / 1000000e0"
         ).alias("edge_share"),
         (
             F.expr("CAST(shiftleft(1L, log2_bucket) AS BIGINT)")
@@ -2930,10 +2877,9 @@ def retrieval_contamination_eval(spark, sf_dir):
         "retriever",
         "doc_id",
         F.expr(
-            "CASE WHEN n_shingles > 0 THEN"
-            " CAST(floor(CAST(coalesce(n_overlap, 0) AS DOUBLE)"
-            " / n_shingles * 1000000e0 + 0.5e0) AS BIGINT)"
-            " ELSE CAST(0 AS BIGINT) END"
+            "CASE WHEN n_shingles > 0 THEN "
+            + micro_units_sql("CAST(coalesce(n_overlap, 0) AS DOUBLE) / n_shingles")
+            + " ELSE CAST(0 AS BIGINT) END"
         ).alias("rate_micro"),
     )
     cnt = topk.groupBy("retriever").agg(

@@ -11,7 +11,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions.scalar import entropy_term_micro_sql
+from .functions.scalar import entropy_term_micro_sql, micro6_sql, micro_units_sql
 from .operators import similarity as S
 from .operators._argmax_udf import (
     collect_model,
@@ -175,6 +175,47 @@ def _vecs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
 
 
+def _top_k(scored: DataFrame, score: str) -> DataFrame:
+    """Each query's ``_TOP_K`` rows of ``scored`` (query_id,
+    neighbor_id, ``score``) by descending score, ties by neighbor_id."""
+    w = Window.partitionBy("query_id").orderBy(F.desc(score), F.asc("neighbor_id"))
+    return (
+        scored.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= _TOP_K)
+        .drop("rn")
+    )
+
+
+def _cosine_rerank(pairs: DataFrame, v: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim): the candidate ``pairs`` scored
+    by exact cosine (6 dp) over ``v`` (vec_id, embedding, nrm), the
+    query side broadcast."""
+    q = v.select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("q_emb"),
+        F.col("nrm").alias("q_nrm"),
+    )
+    c = v.select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("embedding").alias("n_emb"),
+        F.col("nrm").alias("n_nrm"),
+    )
+    return (
+        pairs.join(F.broadcast(q), "query_id")
+        .join(c, "neighbor_id")
+        .select(
+            "query_id",
+            "neighbor_id",
+            F.round(
+                S.cosine(
+                    F.col("q_emb"), F.col("n_emb"), F.col("q_nrm"), F.col("n_nrm")
+                ),
+                6,
+            ).alias("cos_sim"),
+        )
+    )
+
+
 _BRUTE_ORACLE = f"""
     WITH v AS (
         SELECT vec_id, embedding, {S.norm_sql('embedding')} AS nrm
@@ -224,14 +265,7 @@ def similarity_topk_bruteforce(spark, sf_dir):
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .drop("rn")
-    )
+    return _top_k(scored, "cos_sim")
 
 
 # --- int8 scalar quantization (SQ) top-k -----------------------------------
@@ -323,14 +357,7 @@ def similarity_sq_int8_topk(spark, sf_dir):
             ).alias("cos_sq"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sq"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .drop("rn")
-    )
+    return _top_k(scored, "cos_sq")
 
 
 def _lsh_cand_branch_sql(t: int) -> str:
@@ -438,38 +465,7 @@ def similarity_ann_lsh(spark, sf_dir):
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
         .distinct()  # OR-combine: a pair found by 2 tables scores once
     )
-    q = v.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    c = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("nrm").alias("n_nrm"),
-    )
-    scored = (
-        cand.join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                S.cosine(
-                    F.col("q_emb"), F.col("n_emb"), F.col("q_nrm"), F.col("n_nrm")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .drop("rn")
-    )
+    return _top_k(_cosine_rerank(cand, v), "cos_sim")
 
 
 # --- ANN recall audit (round 11, second batch) ------------------------------
@@ -561,22 +557,10 @@ def similarity_ann_recall_audit(spark, sf_dir):
     return hits.crossJoin(F.broadcast(tot)).select(
         "query_id",
         "n_hits",
-        F.round(
-            F.expr(
-                f"CAST(floor(CAST(n_hits AS DOUBLE) / {_TOP_K}"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("recall_at_k"),
-        F.round(
-            F.expr(
-                f"CAST(floor(CAST(sum_hits AS DOUBLE) / (nq * {_TOP_K})"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("mean_recall"),
+        F.expr(micro6_sql(f"CAST(n_hits AS DOUBLE) / {_TOP_K}")).alias("recall_at_k"),
+        F.expr(micro6_sql(
+            f"CAST(sum_hits AS DOUBLE) / (nq * {_TOP_K})"
+        )).alias("mean_recall"),
     )
 
 
@@ -1007,40 +991,13 @@ def similarity_ivf_topk(spark, sf_dir):
         .filter(F.col("rnk") <= nprobe)
         .select(F.col("vec_id").alias("query_id"), "cid")
     )
-    q = v.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    c = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("nrm").alias("n_nrm"),
-    )
-    scored = (
+    scored = _cosine_rerank(
         probes.join(
             assign.withColumnRenamed("vec_id", "neighbor_id"), "cid"
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(q), "query_id")
-        .join(c, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                S.cosine(
-                    F.col("q_emb"), F.col("n_emb"), F.col("q_nrm"), F.col("n_nrm")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
+        ).filter(F.col("neighbor_id") != F.col("query_id")),
+        v,
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .drop("rn")
-    )
+    return _top_k(scored, "cos_sim")
 
 
 # --- Product-Quantization (PQ) ANN -----------------------------------------
@@ -1309,38 +1266,7 @@ def similarity_pq_topk(spark, sf_dir):
     )
     # exact re-rank of the compressed-domain shortlist: ADC touches only
     # 8-byte codes; raw vectors are read for shortlist rows alone
-    qv = v.select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        F.col("nrm").alias("q_nrm"),
-    )
-    cv = v.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("nrm").alias("n_nrm"),
-    )
-    reranked = (
-        shortlist.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                S.cosine(
-                    F.col("q_emb"), F.col("n_emb"), F.col("q_nrm"), F.col("n_nrm")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        reranked.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .drop("rn")
-    )
+    return _top_k(_cosine_rerank(shortlist, v), "cos_sim")
 
 
 # --- mutual k-NN graph (round 2) --------------------------------------------
@@ -2297,9 +2223,7 @@ def embedding_effective_dim(spark, sf_dir):
         .select(
             "n_vectors",
             F.expr(
-                "CASE WHEN dim_i = dim_j THEN"
-                " CAST(floor(cov_d * 1000000e0 + 0.5e0) AS BIGINT)"
-                " ELSE 0 END"
+                f"CASE WHEN dim_i = dim_j THEN {micro_units_sql('cov_d')} ELSE 0 END"
             ).alias("tr_micro"),
             F.expr(
                 "(CASE WHEN dim_i = dim_j THEN 1 ELSE 2 END)"
@@ -2319,14 +2243,12 @@ def embedding_effective_dim(spark, sf_dir):
         F.expr("round(tr / 1000000e0, 6)").alias("trace_var"),
         F.expr("round(fr / 1000000000000e0, 6)").alias("frob_norm_sq"),
         F.expr(
-            "CASE WHEN fr > 0 THEN"
-            " round(CAST(floor(CAST(tr AS DOUBLE) * tr / fr"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            f"CASE WHEN fr > 0 THEN {micro6_sql('CAST(tr AS DOUBLE) * tr / fr')} END"
         ).alias("effective_dim"),
         F.expr(
-            "CASE WHEN fr > 0 THEN"
-            f" round(CAST(floor(CAST(tr AS DOUBLE) * tr / fr / {_EMB_DIM}"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6) END"
+            "CASE WHEN fr > 0 THEN "
+            + micro6_sql(f"CAST(tr AS DOUBLE) * tr / fr / {_EMB_DIM}")
+            + " END"
         ).alias("effective_dim_ratio"),
     )
 
@@ -3214,18 +3136,14 @@ def embedding_cluster_purity(spark, sf_dir):
         F.col("n").alias("n_vectors"),
         "k_clusters",
         "n_labels",
-        F.expr(
-            "round(CAST(floor(CAST(maj_sum AS DOUBLE) / n"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("purity"),
+        F.expr(micro6_sql("CAST(maj_sum AS DOUBLE) / n")).alias("purity"),
         F.expr(
             "round(greatest(hc + hl - hcl, 0) / 1000000e0, 6)"
         ).alias("mutual_info_bits"),
         F.expr(
-            "CASE WHEN hc + hl > 0 THEN"
-            " round(CAST(floor(2e0 * greatest(hc + hl - hcl, 0)"
-            " / (hc + hl) * 1000000e0 + 0.5e0) AS BIGINT)"
-            " / 1000000e0, 6) END"
+            "CASE WHEN hc + hl > 0 THEN "
+            + micro6_sql("2e0 * greatest(hc + hl - hcl, 0) / (hc + hl)")
+            + " END"
         ).alias("nmi"),
     )
 
@@ -3950,9 +3868,7 @@ def embedding_jl_projection_audit(spark, sf_dir):
     ).select(
         "vec_id",
         "i",
-        F.expr(
-            "CAST(floor(x * 1000000e0 + 0.5e0) AS BIGINT)"
-        ).alias("e"),
+        F.expr(micro_units_sql("x")).alias("e"),
     )
     # bounded components feed projections AND exact distances
     pq = pq.localCheckpoint(eager=True)
@@ -4008,9 +3924,9 @@ def embedding_jl_projection_audit(spark, sf_dir):
         "dd",
         "pp",
         F.expr(
-            "CASE WHEN dd > 0 THEN"
-            f" CAST(floor(CAST(pp AS DOUBLE) / ({_JL_K}e0 * dd)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) END"
+            "CASE WHEN dd > 0 THEN "
+            + micro_units_sql(f"CAST(pp AS DOUBLE) / ({_JL_K}e0 * dd)")
+            + " END"
         ).alias("ratio_m"),
     )
     return r.agg(
@@ -4033,10 +3949,9 @@ def embedding_jl_projection_audit(spark, sf_dir):
         F.round(F.max("ratio_m") / F.expr("1000000e0"), 6).alias(
             "max_distortion"
         ),
-        F.expr(
-            "round(CAST(floor(CAST(coalesce(sum(CASE WHEN ratio_m"
+        F.expr(micro6_sql(
+            "CAST(coalesce(sum(CASE WHEN ratio_m"
             " BETWEEN 750000 AND 1250000 THEN 1 ELSE 0 END), 0)"
             " AS DOUBLE) / NULLIF(count(ratio_m), 0)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("frac_within_25pct"),
+        )).alias("frac_within_25pct"),
     )

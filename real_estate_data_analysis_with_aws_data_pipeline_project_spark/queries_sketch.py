@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from .operators import text as X
+from .functions.scalar import micro6_sql
 from .registry import register
 from .session import local_frame
 from .sources.catalog import load_table
@@ -1426,12 +1427,9 @@ def sketch_ams_f2(spark, sf_dir):
             "f2_exact",
             "ams_f2_mean",
             "ams_f2_median",
-            F.expr(
-                "round(CAST(floor(abs(CAST(ams_f2_mean AS DOUBLE)"
-                " - f2_exact)"
-                " / f2_exact * 1000000e0 + 0.5e0) AS BIGINT)"
-                " / 1000000e0, 6)"
-            ).alias("rel_error"),
+            F.expr(micro6_sql(
+                "abs(CAST(ams_f2_mean AS DOUBLE) - f2_exact) / f2_exact"
+            )).alias("rel_error"),
             F.expr(
                 "CAST(CASE WHEN abs(CAST(ams_f2_mean AS DOUBLE) - f2_exact)"
                 f" / f2_exact <= {_AMS_3SIGMA}"

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from .operators import text as X
 from .queries_dedup import SHINGLES_SQL, cached_shingles
-from .functions.scalar import entropy_term_micro_sql
+from .functions.scalar import entropy_term_micro_sql, micro6_sql, micro_units_sql
 from .registry import register
 from .sources.catalog import load_table
 
@@ -670,16 +670,11 @@ def text_readability_score(spark, sf_dir):
         "words",
         "sentences",
         "vowel_runs",
-        F.round(
-            F.expr(
-                "CAST(floor((206.835e0"
-                " - 1.015e0 * (CAST(words AS DOUBLE) / sentences)"
-                " - 84.6e0 * (CAST(vowel_runs AS DOUBLE) / words))"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("flesch_ease"),
+        F.expr(micro6_sql(
+            "(206.835e0"
+            " - 1.015e0 * (CAST(words AS DOUBLE) / sentences)"
+            " - 84.6e0 * (CAST(vowel_runs AS DOUBLE) / words))"
+        )).alias("flesch_ease"),
     )
 
 
@@ -721,6 +716,19 @@ _UNIGRAM_ENTROPY_ORACLE = f"""
 """
 
 
+def _source_token_counts(spark, sf_dir):
+    """(source, tok, n): occurrences of each non-empty token per
+    source, one map-side-combined aggregate at the vocabulary grain."""
+    w = load_table(spark, sf_dir, "documents").select(
+        "source", F.explode(X.tokens()).alias("tok")
+    )
+    return (
+        w.where(F.col("tok") != "")
+        .groupBy("source", "tok")
+        .agg(F.count("*").cast("bigint").alias("n"))
+    )
+
+
 @register("text_unigram_entropy", _UNIGRAM_ENTROPY_ORACLE)
 def text_unigram_entropy(spark, sf_dir):
     """Per-source unigram entropy + type-token ratio — see the section
@@ -730,14 +738,7 @@ def text_unigram_entropy(spark, sf_dir):
     vocabulary-grain), per-source totals broadcast back onto the
     vocabulary relation, integer term sum. Never a per-document state;
     the vocabulary relation is the natural shuffle grain."""
-    w = load_table(spark, sf_dir, "documents").select(
-        "source", F.explode(X.tokens()).alias("tok")
-    )
-    c = (
-        w.where(F.col("tok") != "")
-        .groupBy("source", "tok")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
+    c = _source_token_counts(spark, sf_dir)
     t = c.groupBy("source").agg(
         F.sum("n").cast("bigint").alias("tot"),
         F.count("*").cast("bigint").alias("vocab"),
@@ -752,14 +753,7 @@ def text_unigram_entropy(spark, sf_dir):
             F.round(
                 F.sum("tm").cast("bigint") / F.expr("1000000e0"), 6
             ).alias("entropy_bits"),
-            F.round(
-                F.expr(
-                    "CAST(floor(CAST(vocab AS DOUBLE) / tot"
-                    " * 1000000e0 + 0.5e0) AS BIGINT)"
-                ).cast("double")
-                / F.expr("1000000e0"),
-                6,
-            ).alias("type_token_ratio"),
+            F.expr(micro6_sql("CAST(vocab AS DOUBLE) / tot")).alias("type_token_ratio"),
         )
         .select(
             "source",
@@ -828,14 +822,7 @@ def text_token_hhi(spark, sf_dir):
     vocabulary-grain) and one source-grain rollup of four exact
     integer aggregates — no window, no broadcast-back join (unlike
     entropy, no per-term normalization exists)."""
-    w = load_table(spark, sf_dir, "documents").select(
-        "source", F.explode(X.tokens()).alias("tok")
-    )
-    c = (
-        w.where(F.col("tok") != "")
-        .groupBy("source", "tok")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
+    c = _source_token_counts(spark, sf_dir)
     t = c.groupBy("source").agg(
         F.sum("n").cast("bigint").alias("tot"),
         F.count("*").cast("bigint").alias("vocab"),
@@ -846,20 +833,13 @@ def text_token_hhi(spark, sf_dir):
         "source",
         F.col("tot").alias("n_tokens"),
         "vocab",
-        F.expr(
-            "round(CAST(floor(CAST(sq AS DOUBLE)"
-            " / (CAST(tot AS DOUBLE) * CAST(tot AS DOUBLE))"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("hhi"),
-        F.expr(
-            "round(CAST(floor(CAST(tot AS DOUBLE) * CAST(tot AS DOUBLE)"
-            " / CAST(sq AS DOUBLE)"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("effective_types"),
-        F.expr(
-            "round(CAST(floor(CAST(top1 AS DOUBLE) / tot"
-            " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-        ).alias("top1_share"),
+        F.expr(micro6_sql(
+            "CAST(sq AS DOUBLE) / (CAST(tot AS DOUBLE) * CAST(tot AS DOUBLE))"
+        )).alias("hhi"),
+        F.expr(micro6_sql(
+            "CAST(tot AS DOUBLE) * CAST(tot AS DOUBLE) / CAST(sq AS DOUBLE)"
+        )).alias("effective_types"),
+        F.expr(micro6_sql("CAST(top1 AS DOUBLE) / tot")).alias("top1_share"),
     ).orderBy("source")
 
 
@@ -1123,14 +1103,12 @@ def text_gopher_repetition(spark, sf_dir):
             "n_tokens",
             "vocab",
             "n_bigrams",
-            F.expr(
-                "CAST(floor(CAST(n_tokens - vocab AS DOUBLE) / n_tokens"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            ).alias("dup_micro"),
-            F.expr(
-                "CAST(floor(CAST(top_pair AS DOUBLE) / n_bigrams"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            ).alias("top2_micro"),
+            F.expr(micro_units_sql(
+                "CAST(n_tokens - vocab AS DOUBLE) / n_tokens"
+            )).alias("dup_micro"),
+            F.expr(micro_units_sql(
+                "CAST(top_pair AS DOUBLE) / n_bigrams"
+            )).alias("top2_micro"),
         )
     )
     return m.select(
@@ -1199,14 +1177,7 @@ def text_good_turing_unseen(spark, sf_dir):
     Scale: ONE (source, token) map-side-combined aggregate then a
     source-grain rollup of four exact integer sums — the
     text_token_hhi plan shape, no window, no join."""
-    w = load_table(spark, sf_dir, "documents").select(
-        "source", F.explode(X.tokens()).alias("tok")
-    )
-    c = (
-        w.where(F.col("tok") != "")
-        .groupBy("source", "tok")
-        .agg(F.count("*").cast("bigint").alias("n"))
-    )
+    c = _source_token_counts(spark, sf_dir)
     t = c.groupBy("source").agg(
         F.sum("n").cast("bigint").alias("tot"),
         F.count("*").cast("bigint").alias("vocab"),
@@ -1223,14 +1194,9 @@ def text_good_turing_unseen(spark, sf_dir):
         "vocab",
         F.col("n1").alias("hapax"),
         F.col("n2").alias("dis_legomena"),
+        F.expr(micro6_sql("CAST(n1 AS DOUBLE) / tot")).alias("gt_unseen_mass"),
         F.expr(
-            "round(CAST(floor(CAST(n1 AS DOUBLE) / tot * 1000000e0 + 0.5e0)"
-            " AS BIGINT) / 1000000e0, 6)"
-        ).alias("gt_unseen_mass"),
-        F.expr(
-            "CASE WHEN n1 > 0 THEN"
-            " round(CAST(floor(2e0 * n2 / n1 * 1000000e0 + 0.5e0)"
-            " AS BIGINT) / 1000000e0, 6) END"
+            f"CASE WHEN n1 > 0 THEN {micro6_sql('2e0 * n2 / n1')} END"
         ).alias("gt_singleton_rstar"),
     ).orderBy("source")
 
@@ -1511,21 +1477,13 @@ def text_term_burstiness(spark, sf_dir):
             "df",
             "df2",
             F.col("n").alias("n_docs"),
-            F.expr(
-                "round(CAST(floor("
+            F.expr(micro6_sql(
                 "((CAST(cf2 AS DOUBLE) - CAST(cf AS DOUBLE) * cf / n)"
                 " / (n - 1))"
                 " / (CAST(cf AS DOUBLE) / n)"
-                " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-            ).alias("vmr"),
-            F.expr(
-                "round(CAST(floor(CAST(df2 AS DOUBLE) / df"
-                " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-            ).alias("adaptation"),
-            F.expr(
-                "round(CAST(floor(CAST(cf AS DOUBLE) / df"
-                " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0, 6)"
-            ).alias("burst_mean"),
+            )).alias("vmr"),
+            F.expr(micro6_sql("CAST(df2 AS DOUBLE) / df")).alias("adaptation"),
+            F.expr(micro6_sql("CAST(cf AS DOUBLE) / df")).alias("burst_mean"),
         )
     )
 
@@ -1680,10 +1638,7 @@ def text_rake_keywords(spark, sf_dir):
     )
     wscore = word.select(
         "token",
-        F.expr(
-            "CAST(floor(CAST(degree AS DOUBLE) / freq"
-            " * 1000000e0 + 0.5e0) AS BIGINT)"
-        ).alias("s_micro"),
+        F.expr(micro_units_sql("CAST(degree AS DOUBLE) / freq")).alias("s_micro"),
     )
     pocc = (
         cand.join(F.broadcast(wscore), "token")

@@ -8,8 +8,12 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from .functions.scalar import hex_chunk_int_sql
-from .functions.scalar import entropy_term_micro_sql
+from .functions.scalar import (
+    entropy_term_micro_sql,
+    hex_chunk_int_sql,
+    micro6_sql,
+    micro_units_sql,
+)
 from .registry import register
 from .session import local_frame
 from .sources.catalog import load_table
@@ -923,10 +927,60 @@ _CHI2_LABEL_SQL = (
     " THEN 1 ELSE 0 END"
 )
 
-_CHI2_TERM_SQL = (
-    "CAST(floor((CAST(d AS DOUBLE) * CAST(d AS DOUBLE))"
-    " / den * 1000000e0 + 0.5e0) AS BIGINT)"
+_CHI2_TERM_SQL = micro_units_sql(
+    "(CAST(d AS DOUBLE) * CAST(d AS DOUBLE)) / den"
 )
+
+def _label_cells(spark, sf_dir):
+    """(cells, rt, status_cells, lab) of the priority-label screens:
+    the (feature, value, label, o) contingency counts over the
+    status/year/month unpivot of orders, the row marginal rt(f,v),
+    the 'status' slice, and the label marginal ct read off that slice
+    (every order contributes exactly one status row, a NULL status
+    included).
+
+    The marginals are second-level aggregates over the cell relation,
+    which is eagerly localCheckpointed per invocation: AQE exchange
+    reuse never fired for the shared cell exchange (14-17 executed
+    orders scans, each consumer re-running the 3-scan unpivot), so one
+    3-scan unpivot job feeds every marginal branch."""
+    orders = load_table(spark, sf_dir, "orders")
+    label = F.expr(_CHI2_LABEL_SQL).alias("label")
+    base = (
+        orders.select(
+            F.lit("status").alias("feature"),
+            F.col("o_orderstatus").alias("value"),
+            label,
+        )
+        .unionAll(
+            orders.select(
+                F.lit("year").alias("feature"),
+                F.year("o_orderdate").cast("string").alias("value"),
+                label,
+            )
+        )
+        .unionAll(
+            orders.select(
+                F.lit("month").alias("feature"),
+                F.month("o_orderdate").cast("string").alias("value"),
+                label,
+            )
+        )
+    )
+    cells = (
+        base.groupBy("feature", "value", "label")
+        .agg(F.count("*").cast("bigint").alias("o"))
+        .localCheckpoint(eager=True)
+    )
+    rt = cells.groupBy("feature", "value").agg(
+        F.sum("o").cast("bigint").alias("rt")
+    )
+    status_cells = cells.filter(F.col("feature") == "status")
+    lab = status_cells.groupBy("label").agg(
+        F.sum("o").cast("bigint").alias("ct")
+    )
+    return cells, rt, status_cells, lab
+
 
 _CHI2_ORACLE = f"""
     WITH base AS (
@@ -995,51 +1049,7 @@ def features_chi2_selection(spark, sf_dir):
     derived aggregates of it; the term grid lives at feature-value
     scale and the final sum is exact BIGINT micro-units (see module
     comment). No window, no per-row Python."""
-    orders = load_table(spark, sf_dir, "orders")
-    label = F.expr(_CHI2_LABEL_SQL).alias("label")
-    base = (
-        orders.select(
-            F.lit("status").alias("feature"),
-            F.col("o_orderstatus").alias("value"),
-            label,
-        )
-        .unionAll(
-            orders.select(
-                F.lit("year").alias("feature"),
-                F.year("o_orderdate").cast("string").alias("value"),
-                label,
-            )
-        )
-        .unionAll(
-            orders.select(
-                F.lit("month").alias("feature"),
-                F.month("o_orderdate").cast("string").alias("value"),
-                label,
-            )
-        )
-    )
-    # r16 made marginals second-level aggregates OVER the cell relation
-    # — rt(f,v) = Σ_label o; the label marginal and row total read the
-    # 'status' slice, to which every order contributes exactly one row
-    # (a NULL status still lands in a cell) — counting on AQE exchange
-    # reuse for the shared cell exchange. r17 (VERDICT r16 #3): the
-    # final adaptive plan shows reuse never fired (17 executed orders
-    # scans — each consumer re-ran the 3-scan unpivot), so the
-    # cardinality-bounded cell relation (≤ feature·value·label rows) is
-    # eagerly localCheckpointed per invocation: ONE 3-scan unpivot job,
-    # every marginal branch reads the materialized cells (guide §5).
-    cells = (
-        base.groupBy("feature", "value", "label")
-        .agg(F.count("*").cast("bigint").alias("o"))
-        .localCheckpoint(eager=True)
-    )
-    rt = cells.groupBy("feature", "value").agg(
-        F.sum("o").cast("bigint").alias("rt")
-    )
-    status_cells = cells.filter(F.col("feature") == "status")
-    lab = status_cells.groupBy("label").agg(
-        F.sum("o").cast("bigint").alias("ct")
-    )
+    cells, rt, status_cells, lab = _label_cells(spark, sf_dir)
     tot = status_cells.agg(F.sum("o").cast("bigint").alias("n")).crossJoin(
         lab.agg(F.count("*").cast("bigint").alias("n_labels"))
     )
@@ -1102,12 +1112,20 @@ def features_chi2_selection(spark, sf_dir):
 # int64 micro sums, quantized micro, guarded NULL when H(Y) = 0
 # (single-class label).
 
-_MI_TERM_SQL = (
+# The oracle keeps its original spelling of the term (the reference
+# text never changes); the Spark side builds the same tree from the
+# micro-unit owner.
+_MI_TERM_ORACLE = (
     "CAST(floor((CAST(o AS DOUBLE) / n)"
     " * (CAST(floor(log2((CAST(o AS DOUBLE) * n)"
     "                    / (CAST(rt AS DOUBLE) * ct))"
     "               * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0)"
     " * 1000000e0 + 0.5e0) AS BIGINT)"
+)
+_MI_TERM_SQL = micro_units_sql(
+    "(CAST(o AS DOUBLE) / n) * ("
+    + micro_units_sql("log2((CAST(o AS DOUBLE) * n) / (CAST(rt AS DOUBLE) * ct))")
+    + " / 1000000e0)"
 )
 
 _MI_ORACLE = f"""
@@ -1137,7 +1155,7 @@ _MI_ORACLE = f"""
     ),
     tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM orders),
     terms AS (
-        SELECT c.feature, {_MI_TERM_SQL} AS tm
+        SELECT c.feature, {_MI_TERM_ORACLE} AS tm
         FROM cells c
         JOIN rt USING (feature, value)
         JOIN lab USING (label)
@@ -1180,44 +1198,7 @@ def features_mutual_information(spark, sf_dir):
     entropy, and the row total are tiny derived aggregates broadcast
     onto the cell relation; the MI sum is exact BIGINT micro addition
     (see section comment). No window, no per-row Python."""
-    orders = load_table(spark, sf_dir, "orders")
-    label = F.expr(_CHI2_LABEL_SQL).alias("label")
-    base = (
-        orders.select(
-            F.lit("status").alias("feature"),
-            F.col("o_orderstatus").alias("value"),
-            label,
-        )
-        .unionAll(
-            orders.select(
-                F.lit("year").alias("feature"),
-                F.year("o_orderdate").cast("string").alias("value"),
-                label,
-            )
-        )
-        .unionAll(
-            orders.select(
-                F.lit("month").alias("feature"),
-                F.month("o_orderdate").cast("string").alias("value"),
-                label,
-            )
-        )
-    )
-    # same marginal-from-cells restructure as features_chi2_selection
-    # above; r17 checkpoints the cell relation for the same reason
-    # (AQE exchange reuse never fired — 14 executed orders scans).
-    cells = (
-        base.groupBy("feature", "value", "label")
-        .agg(F.count("*").cast("bigint").alias("o"))
-        .localCheckpoint(eager=True)
-    )
-    rt = cells.groupBy("feature", "value").agg(
-        F.sum("o").cast("bigint").alias("rt")
-    )
-    status_cells = cells.filter(F.col("feature") == "status")
-    lab = status_cells.groupBy("label").agg(
-        F.sum("o").cast("bigint").alias("ct")
-    )
+    cells, rt, status_cells, lab = _label_cells(spark, sf_dir)
     tot = status_cells.agg(F.sum("o").cast("bigint").alias("n"))
     hy = lab.crossJoin(F.broadcast(tot)).agg(
         F.sum(F.expr(entropy_term_micro_sql("ct", "n")))
@@ -1244,11 +1225,9 @@ def features_mutual_information(spark, sf_dir):
             (
                 F.when(
                     F.max("h_micro") > 0,
-                    F.expr(
-                        "CAST(floor(CAST(sum(tm) AS DOUBLE)"
-                        " / CAST(max(h_micro) AS DOUBLE)"
-                        " * 1000000e0 + 0.5e0) AS BIGINT)"
-                    ),
+                    F.expr(micro_units_sql(
+                        "CAST(sum(tm) AS DOUBLE) / CAST(max(h_micro) AS DOUBLE)"
+                    )),
                 )
                 / F.expr("1000000e0")
             ).alias("uncertainty_coef"),
@@ -1384,16 +1363,12 @@ def features_anova_f(spark, sf_dir):
         F.when(
             (F.col("k") > 1) & (F.col("n") > F.col("k")) & (F.col("ssw") > 0),
             F.expr(
-                "CAST(floor((ssb / (k - 1)) / (ssw / (n - k))"
-                " * 1000000e0 + 0.5e0) AS BIGINT) / 1000000e0"
+                micro_units_sql("(ssb / (k - 1)) / (ssw / (n - k))") + " / 1000000e0"
             ),
         ).alias("f_stat"),
         F.when(
             F.col("ssb") + F.col("ssw") > 0,
-            F.expr(
-                "CAST(floor(ssb / (ssb + ssw) * 1000000e0 + 0.5e0)"
-                " AS BIGINT) / 1000000e0"
-            ),
+            F.expr(micro_units_sql("ssb / (ssb + ssw)") + " / 1000000e0"),
         ).alias("eta_squared"),
     )
 
@@ -1477,8 +1452,7 @@ def _pca_corr_micro_sql(i: int, j: int) -> str:
     vi, vj = _pca_cov_sql(i, i), _pca_cov_sql(j, j)
     return (
         f"CASE WHEN {vi} * {vj} > 0 THEN"
-        f" CAST(floor({_pca_cov_sql(i, j)} / sqrt({vi} * {vj})"
-        " * 1000000e0 + 0.5e0) AS BIGINT) ELSE 0 END"
+        f" {micro_units_sql(f'{_pca_cov_sql(i, j)} / sqrt({vi} * {vj})')} ELSE 0 END"
     )
 
 
@@ -1774,22 +1748,10 @@ def features_scaling_params(spark, sf_dir):
         "n",
         "min_cents",
         "max_cents",
-        F.round(
-            F.expr(
-                "CAST(floor(CAST(s AS DOUBLE) / n / 100e0"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("mean_bal"),
-        F.round(
-            F.expr(
-                "CAST(floor(sqrt((CAST(n AS DOUBLE) * q"
-                " - CAST(s AS DOUBLE) * s)"
-                " / (CAST(n AS DOUBLE) * n)) / 100e0"
-                " * 1000000e0 + 0.5e0) AS BIGINT)"
-            )
-            / F.expr("1000000e0"),
-            6,
-        ).alias("std_bal"),
+        F.expr(micro6_sql("CAST(s AS DOUBLE) / n / 100e0")).alias("mean_bal"),
+        F.expr(micro6_sql(
+            "sqrt((CAST(n AS DOUBLE) * q"
+            " - CAST(s AS DOUBLE) * s)"
+            " / (CAST(n AS DOUBLE) * n)) / 100e0"
+        )).alias("std_bal"),
     )

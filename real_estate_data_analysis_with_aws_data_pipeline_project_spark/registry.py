@@ -6,8 +6,11 @@ DataFrame`` and ``oracle`` is equivalent ANSI SQL for the DuckDB oracle
 
 Oracle-hash compatibility conventions:
 - every computed column aliased identically in Spark and SQL;
-- aggregate doubles rounded (2-4 dp) on both sides so sum-order FP
-  drift cannot flip the value hash;
+- computed doubles quantized on both sides so sum-order FP drift
+  cannot flip the value hash: ratios and statistics go through the
+  micro-unit owner ``functions.scalar.micro_units_sql`` /
+  ``micro6_sql`` (``floor(x·1e6 + 0.5)`` BIGINT micro-units, printed
+  at 6 dp), plain sums and means are rounded (2-4 dp);
 - timestamps emitted as formatted strings;
 - integer sums cast to bigint on both sides (DuckDB promotes to
   HUGEINT).

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..operators.events import tumbling_hour_totals
 from ..sources.catalog import normalize_events_ts, table_path, table_schema
 
 # Session gap, defined ONCE (ADVICE r5): the streaming job builds the
@@ -103,19 +104,8 @@ def _run_to_memory(result: DataFrame, name: str, output_mode: str) -> DataFrame:
 def streaming_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermarked tumbling-window counts (1 h windows, 10 min
     watermark) — the streaming twin of events_tumbling_window."""
-    agg = (
-        _events_stream(spark, sf_dir)
-        .withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("total_value"))
-        .select(
-            F.date_format(F.col("w.start"), "yyyy-MM-dd HH:mm:ss").alias(
-                "window_start"
-            ),
-            "event_type",
-            "n",
-            "total_value",
-        )
+    agg = tumbling_hour_totals(
+        _events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
     )
     return _run_to_memory(agg, "stream_tumbling", "complete")
 

@@ -15,6 +15,7 @@ pinned here with its landing round; landing round = max round on disk
 when the rotation was planned, plus one.
 """
 
+import json
 import pathlib
 import sys
 
@@ -35,495 +36,27 @@ from next_window import green_before, green_rounds as green_by_round  # noqa: E4
 
 
 # Every rotation ever shipped, keyed by its LANDING round (the round
-# whose driver run first exercised it). Kept cumulatively so history
-# stays validated; the newest entry is the live rotation.
-ROTATIONS: dict[int, list[str]] = {
-    4: [
-        "retrieval_bm25_topk",
-        "retrieval_build_inverted_index",
-        "retrieval_hybrid_rrf",
-        "graph_pagerank_orders",
-        "dedup_semantic_clusters",
-        "sketch_quantile_envelope",
-        "text_bpe_top_merges",
-        "streaming_click_purchase_join",
-        "training_data_prep_pipeline",
-        "text_tfidf_top_terms",
-        "tpch_q7_volume_shipping",
-        "tpch_q9_product_profit",
-        "tpch_q17_small_quantity",
-        "tpch_q20_part_promotion",
-        "tpch_q21_waiting_supplier",
-        "dedup_simhash_pairs",
-        "similarity_knn_graph",
-        "events_retention_cohorts",
-        "events_anomaly_zscore",
-        "source_orc_roundtrip",
-        "source_schema_evolution",
-        "join_range_bucketed",
-        "subquery_scalar_correlated",
-        "w8_distribution_functions",
-        "sketch_hll_union",
-        "quality_char_entropy",
-        "pii_k_anonymity_audit",
-        "corpus_curation_funnel",
-        "text_pmi_top_pairs",
-        "dedup_boilerplate_shingles",
-    ],
-    5: [
-        "sql_pipe_syntax_rollup",
-        "f_try_functions",
-        "variant_shred_props",
-        "similarity_sq_int8_topk",
-        "join_asof_next_event",
-        "sketch_theta_set_ops",
-        "sketch_kll_quantile_rollup",
-        "events_hll_hourly_rollup",
-        "source_python_datasource",
-        "streaming_user_activity_tws",
-        "tpch_q4_order_priority",
-        "tpch_q8_market_share",
-        "tpch_q11_important_spend",
-        "tpch_q13_order_distribution",
-        "tpch_q15_top_supplier",
-        "tpch_q16_supplier_count",
-        "tpch_q22_sales_opportunity",
-        "text_fingerprint",
-        "text_token_count_regex",
-        "text_rolling_fingerprint",
-        "dedup_exact_summary",
-        "dedup_ngram_jaccard",
-        "dedup_drop_duplicates",
-        "dedup_repeated_substrings",
-        "embedding_label_centroids",
-        "events_tumbling_window",
-        "events_sliding_window",
-        "events_sessionization_lag",
-        "events_gap_fill_ffill",
-        "rollup_merge_partials",
-    ],
-    6: [
-        "events_time_weighted_avg",
-        "events_dod_growth",
-        "events_funnel_conversion",
-        "events_linear_interpolate",
-        "corpus_weighted_doc_sample",
-        "corpus_embedding_decontaminate",
-        "sketch_bitmap_exact_distinct",
-        "dq_referential_orphans",
-        "streaming_tumbling_counts",
-        "streaming_session_window",
-        "streaming_stateful_user_stats",
-        "udaf_group_rank",
-        "pipeline_single_pass_metrics",
-        "source_binaryfile_ingest",
-        "skew_salted_join",
-        "json_schema_on_read",
-        "explode_top_tokens",
-        "agg_percentiles",
-        "subquery_exists_agg",
-        "set_union_by_name",
-        "set_intersect_except_all",
-        "f_date_functions_2",
-        "sample_fraction_envelope",
-        "f_array_functions",
-        "f_regexp_extract",
-        "dedup_levenshtein_pairs",
-        "w7_range_frame_rolling_sum",
-        "w9_first_last_value",
-        "na_fill_drop",
-        "corpus_mixing_plan",
-    ],
-    7: [
-        "dedup_incremental_minhash",
-        "dedup_minhash_accuracy",
-        "embedding_dim_variance",
-        "embedding_matryoshka_recall",
-        "events_late_arrival_audit",
-        "events_ohlc_bars",
-        "events_rate_limit_audit",
-        "multimodal_features_audit",
-        "streaming_ohlc_bars",
-        "multimodal_frame_audit",
-        "quality_zipf_slope",
-        "text_ngram_novelty",
-        "features_point_in_time",
-        "features_rolling_zscore",
-        "corpus_global_shuffle",
-        "corpus_length_log2_histogram",
-        "corpus_temperature_resample",
-        "corpus_interleave_sources",
-        "sketch_bloom_prefilter",
-        "quality_repetition_score",
-        "quality_bigram_lm_ppl",
-        "quality_langid_confusion",
-        "corpus_length_histogram",
-        "quality_ttr_lexical_diversity",
-        "j4_full_outer_join",
-        "j5_null_safe_join",
-        "f_map_struct_functions",
-        "agg_unpivot_stack",
-        "dedup_latest_per_key",
-        "f_zorder_interleave",
-    ],
-    8: [
-        "dedup_span_remediate",
-        "dedup_token_savings",
-        "dedup_semantic_keep_manifest",
-        "embedding_covariance_whitening",
-        "events_anomaly_contribution",
-        "streaming_rate_limit_windows",
-        "streaming_window_quantiles",
-        "er_blocked_parts",
-        "er_incremental_parts",
-        "dq_schema_drift",
-        "corpus_stratified_cell_quota",
-        "corpus_curriculum_order",
-        "corpus_session_pack_shards",
-        "corpus_mixing_waterfill",
-        "corpus_epoch_schedule",
-        "sketch_join_cardinality",
-        "sketch_kmv_distinct",
-        "quality_psi_drift",
-        "quality_train_serve_skew",
-        "dedup_incremental_components",
-        "pii_tokenize_preserving",
-        "cdc_scd2_intervals",
-        "cdc_merge_upsert",
-        "mv_incremental_refresh",
-        "retrieval_rerank_token_f1",
-        "graph_cosupplier_projection",
-        "skew_shuffle_profile",
-        "streaming_kmv_distinct",
-        "join_interval_overlap",
-        "text_vocab_coverage",
-    ],
-    9: [
-        "embedding_covariance_whitening",
-        "dedup_cross_source_matrix",
-        "embedding_source_centroid_drift",
-        "events_mad_outliers",
-        "events_cusum_changepoint",
-        "streaming_cusum_changepoint",
-        "events_trend_slope",
-        "events_longest_streak",
-        "events_transition_matrix",
-        "dq_referential_integrity",
-        "dq_key_uniqueness",
-        "text_token_pmi",
-        "features_target_encoding_loo",
-        "features_equidepth_bins",
-        "features_rfm_segments",
-        "features_time_decay_mean",
-        "features_global_equidepth_bins",
-        "dq_benford_firstdigit",
-        "quality_ks_drift",
-        "pii_l_diversity_audit",
-        "graph_triangle_count",
-        "dedup_span_remediate",
-        "dedup_token_savings",
-        "dedup_semantic_keep_manifest",
-        "events_anomaly_contribution",
-        "streaming_rate_limit_windows",
-        "streaming_window_quantiles",
-        "er_blocked_parts",
-        "er_incremental_parts",
-        "dq_schema_drift",
-    ],
-    10: [
-        # frozen retroactively at the r12 pin, in CORRECTNESS_r10.json
-        # window order (this key was `list(_ROTATION)` — the live
-        # alias silently rebound to the next round's rotation whenever
-        # api.py changed, erasing the landed round from the validated
-        # history; r12 review. Every landed rotation is now a literal
-        # and the live one is added as a literal AT THE PIN.)
-        "dedup_shingle_containment",
-        "retrieval_mmr_rerank",
-        "events_autocorrelation",
-        "events_session_paths",
-        "events_interarrival_stats",
-        "events_burstiness_fano",
-        "events_dow_seasonality",
-        "streaming_dow_seasonality",
-        "dq_completeness_matrix",
-        "source_partitioned_roundtrip",
-        "skew_join_key_profile",
-        "agg_exact_group_median",
-        "agg_exact_group_mode",
-        "agg_exact_group_percentiles",
-        "agg_exact_weighted_median",
-        "agg_exact_group_trimmed_mean",
-        "features_woe_iv",
-        "features_feature_hashing",
-        "features_chi2_selection",
-        "streaming_psi_drift",
-        "quality_js_divergence",
-        "streaming_jsd_drift",
-        "dq_order_reconciliation",
-        "retrieval_query_likelihood",
-        "graph_triangle_orientation_stats",
-        "retrieval_ndcg_eval",
-        "retrieval_rank_correlation",
-        "embedding_covariance_whitening",
-        "dedup_cross_source_matrix",
-        "embedding_source_centroid_drift",
-    ],
-    11: [
-        "streaming_autocorrelation",
-        "streaming_fano_burstiness",
-        "events_gini_concentration",
-        "dq_volume_anomaly",
-        "streaming_volume_anomaly",
-        "events_time_to_convert",
-        "events_type_entropy_daily",
-        "streaming_type_entropy",
-        "events_markov_stationary",
-        "events_dow_strength",
-        "streaming_dow_strength",
-        "events_pareto_share",
-        "join_asof_tolerance",
-        "agg_histogram_group_percentiles",
-        "agg_exact_group_moments",
-        "agg_group_correlation",
-        "text_readability_score",
-        "text_unigram_entropy",
-        "features_scaling_params",
-        "sketch_hll_intersection",
-        "corpus_dedup_yield_report",
-        "quality_perplexity_drift",
-        "pii_t_closeness",
-        "retrieval_mrr_eval",
-        "graph_jaccard_similarity",
-        "retrieval_prf_expansion",
-        "dedup_shingle_containment",
-        "retrieval_mmr_rerank",
-        "events_autocorrelation",
-        "events_session_paths",
-    ],
-    12: [
-        "join_lateral_topk_per_key",
-        "similarity_ann_recall_audit",
-        "embedding_kmeans_lloyd",
-        "embedding_cluster_quality",
-        "streaming_dod_growth",
-        "streaming_trend_slope",
-        "events_ewma_volume_forecast",
-        "streaming_ewma_volume_forecast",
-        "events_holt_volume_forecast",
-        "streaming_holt_volume_forecast",
-        "events_seasonal_volume_anomaly",
-        "streaming_seasonal_volume_anomaly",
-        "dq_feed_freshness",
-        "events_markov_entropy_rate",
-        "events_cohort_ltv",
-        "events_survival_km",
-        "events_ab_conversion_ztest",
-        "events_session_timeout_sensitivity",
-        "er_blocking_quality",
-        "join_dynamic_partition_pruning",
-        "features_mutual_information",
-        "features_anova_f",
-        "features_pca_quality_axis",
-        "pii_dp_noisy_counts",
-        "retrieval_rm3_interpolated",
-        "graph_degree_distribution",
-        "streaming_autocorrelation",
-        "streaming_fano_burstiness",
-        "events_gini_concentration",
-        "dq_volume_anomaly",
-    ],
-    # Round 13 seats the full 10-query never-green front (the r12
-    # post-pin experimentation/Theil/link-prediction/lateral batch)
-    # and fills the 20 free slots with refresh picks — STALEST-green
-    # first (VERDICT r12 #4): the r01/r02 cohort (windows, set ops,
-    # agg surface, TPC-H members) that last saw a driver window in
-    # rounds 1–2.
-    13: [
-        "join_lateral_recent_avg",
-        "events_power_mde",
-        "events_srm_check",
-        "events_cuped_adjustment",
-        "events_bootstrap_rate_ci",
-        "events_did_estimator",
-        "agg_theil_decomposition",
-        "agg_theil_l_decomposition",
-        "graph_adamic_adar",
-        "graph_resource_allocation",
-        "j3_inner_join_multi",
-        "w2_stratified_sample",
-        "w3_rank_dense_rank",
-        "w4_lag_lead",
-        "w5_running_sum_frame",
-        "w6_topk_per_group",
-        "set_intersect",
-        "set_except",
-        "agg_count_distinct",
-        "agg_approx_count_distinct",
-        "agg_cube",
-        "agg_rollup",
-        "agg_pivot",
-        "sql_surface_revenue_by_nation",
-        "tpch_q6_forecast_revenue",
-        "tpch_q5_local_supplier_volume",
-        "tpch_q3_shipping_priority",
-        "heavy_shuffle_part_spend",
-        "tpch_q2_min_cost_supplier",
-        "tpch_q10_returned_items",
-    ],
-    # Round 14 seats the full 14-query never-green front (the r13
-    # post-pin sequential-testing/QTE/MWU/stratified/HTE batch plus
-    # Atkinson and preferential attachment) and fills the 16 free
-    # slots with refresh picks — STALEST-green first: the remaining
-    # r01/r02 cohort (the last four TPC-H long-tail members, the
-    # P/A/F core-operator rows, and the text first-wave).
-    14: [
-        "events_msprt_always_valid",
-        "events_quantile_treatment_effect",
-        "events_winsorized_lift",
-        "events_mannwhitney_u",
-        "events_stratified_lift",
-        "events_did_placebo_pretrends",
-        "events_confidence_sequence",
-        "events_split_behavior_chi2",
-        "events_ratio_metric_ztest",
-        "events_logrank_test",
-        "events_conversion_horizon_lift",
-        "events_segment_lift_hte",
-        "agg_atkinson_index",
-        "graph_preferential_attachment",
-        "tpch_q12_shipmode_priority",
-        "tpch_q14_promo_revenue",
-        "tpch_q18_large_volume_customers",
-        "tpch_q19_disjunctive_predicates",
-        "p2_filter_notnull",
-        "p3_semi_join",
-        "p7_distinct",
-        "j2_anti_join",
-        "a1_global_count",
-        "a4_null_skipping_avg",
-        "a5_ratio_of_sums",
-        "f1_cast_string_numeric",
-        "f2_f3_arithmetic_round",
-        "f6_f7_sentinel_null_safe",
-        "text_quality_score",
-        "text_token_count",
-    ],
-    # Round 15 seats the full 15-query never-green front (the r14
-    # post-pin batch: inequality curves, sequential OBF/SRM/Qini,
-    # Benford batch+streaming gates, WAV demux audit, cosine range
-    # search, assortativity, token HHI, bigram entropy, seeded-sample
-    # invariants) and fills the 15 free slots with refresh picks —
-    # STALEST-green first: the remaining r01/r02-green cohort. A green
-    # r15 run closes full driver coverage of the oracle-backed
-    # registry (VERDICT r14 #1).
-    15: [
-        "w2_seeded_sample_invariants",
-        "similarity_range_search",
-        "events_obrien_fleming_boundary",
-        "events_srm_daily_trace",
-        "events_qini_uplift_deciles",
-        "multimodal_wav_audit",
-        "agg_hoover_index",
-        "agg_lorenz_deciles",
-        "agg_palma_ratio",
-        "agg_concentration_curve",
-        "text_token_hhi",
-        "text_bigram_entropy_rate",
-        "dq_benford_chi2_gate",
-        "streaming_benford_gate",
-        "graph_degree_assortativity",
-        "dedup_simhash",
-        "similarity_topk_bruteforce",
-        "dedup_cluster_components",
-        "p4_project_alias",
-        "p6_match_rate",
-        "tpch_q1_pricing_summary",
-        "agg_grouping_sets",
-        "f_date_functions",
-        "similarity_ann_lsh",
-        "dedup_embedding_cosine",
-        "similarity_pq_topk",
-        "events_hypertable_rollup",
-        "events_funnel_analysis",
-        "udf_rowwise_safe_int",
-        "udtf_token_windows",
-    ],
-    # Round 16 seats the full 10-query never-green front (the r15
-    # post-pin batch: effective-dim, cluster purity, volume
-    # changepoint, MP4 demux audit, basket rules, Gopher repetition,
-    # Good-Turing unseen mass, source JSD drift, local clustering,
-    # RBO overlap — VERDICT r15 #1) and fills the 20 free slots with
-    # refresh picks — STALEST-green first: the remaining r02/r03-green
-    # cohort that has not held a driver slot since.
-    16: [
-        "embedding_effective_dim",
-        "embedding_cluster_purity",
-        "events_volume_changepoint",
-        "multimodal_mp4_audit",
-        "basket_brand_rules",
-        "text_gopher_repetition",
-        "text_good_turing_unseen",
-        "quality_source_jsd",
-        "graph_local_clustering",
-        "retrieval_rbo_overlap",
-        "udf_cogroup_spend_ratio",
-        "source_json_roundtrip",
-        "rest_census_ingest",
-        "dq_expectation_suite",
-        "cdc_snapshot_diff",
-        "skew_salted_agg",
-        "json_extract_props",
-        "scd2_merge_emulation",
-        "corpus_split_train_val_test",
-        "corpus_pack_token_shards",
-        "corpus_decontamination",
-        "corpus_chunk_documents",
-        "corpus_mixing_sample",
-        "sketch_count_min_tokens",
-        "sketch_misra_gries_heavy_hitters",
-        "pii_detect_redact",
-        "f_higher_order_arrays",
-        "sql_recursive_cte_date_spine",
-        "dedup_simhash_pairs",
-        "similarity_knn_graph",
-    ],
-    # Round 17 seats the 25-query never-green front — exactly the r16
-    # post-pin additions (the interrupted-build batch; VERDICT r16
-    # #10) — and fills the 5 free slots with refresh picks, STALEST-
-    # green first (all green in round 4, never re-seated since).
-    17: [
-        "embedding_anisotropy",
-        "similarity_graph_expand_topk",
-        "embedding_jl_projection_audit",
-        "events_volume_binseg",
-        "streaming_volume_binseg",
-        "events_ratio_jackknife",
-        "events_conformal_volume_interval",
-        "events_kruskal_wallis",
-        "events_calibration_ece",
-        "events_stouffer_meta",
-        "events_isotonic_calibration",
-        "dq_column_profile",
-        "basket_brand_rules3",
-        "features_price_elasticity",
-        "features_ipf_raking",
-        "text_term_burstiness",
-        "text_rake_keywords",
-        "text_textrank_keywords",
-        "text_heaps_law",
-        "corpus_ht_token_estimate",
-        "corpus_dsir_importance",
-        "sketch_ams_f2",
-        "retrieval_contamination_eval",
-        "retrieval_map_eval",
-        "graph_kcore",
-        "dedup_semantic_clusters",
-        "events_retention_cohorts",
-        "events_anomaly_zscore",
-        "streaming_click_purchase_join",
-        "join_range_bucketed",
-    ],
-}
+# whose driver run first exercised it), read back from that round's
+# CORRECTNESS file: the driver records its window in order, 20
+# anchors then the 30 rotation slots, and the rotation scheme began
+# in round 4. The live rotation (api._ROTATION) is the newest entry:
+# it lands in the round after the newest CORRECTNESS file unless that
+# file already recorded it.
+ROTATION_SLOTS = slice(len(_WINDOW_ANCHORS), len(_WINDOW_ANCHORS) + 30)
+
+
+def _landed_rotations() -> dict[int, list[str]]:
+    out = {}
+    for path in sorted(REPO.glob("CORRECTNESS_r*.json")):
+        rnd = int(path.stem.removeprefix("CORRECTNESS_r"))
+        if rnd >= 4:
+            out[rnd] = list(json.loads(path.read_text()))[ROTATION_SLOTS]
+    return out
+
+
+ROTATIONS: dict[int, list[str]] = _landed_rotations()
+if ROTATIONS[max(ROTATIONS)] != list(_ROTATION):
+    ROTATIONS[max(ROTATIONS) + 1] = list(_ROTATION)
 
 # Endgame refresh picks (VERDICT r5 #2): when the never-green pool
 # underflows the 30 rotation slots, tools/next_window.py fills the

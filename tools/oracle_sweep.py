@@ -11,6 +11,11 @@ sweep. Run it at sf0.1 after adding queries:
 Optional second arg restricts the sweep: ``window`` sweeps only the
 driver's 50-query CORRECTNESS window (rotation pre-flight at sf0.01),
 or a comma-separated list of query names.
+
+The session takes ``get_spark``'s defaults (``local[N]`` on the host's
+cores, ``SPARK_GRAFT_CPUS`` to override). Each query's outcome (ok,
+MISMATCH, rows-only or SPARK ERROR) prints as soon as it is known, so
+a stopped sweep still shows what it reached.
 """
 
 from __future__ import annotations
@@ -36,7 +41,7 @@ from real_estate_data_analysis_with_aws_data_pipeline_project_spark.sources.cata
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    spark = get_spark(app_name="oracle-sweep", master="local[16]", shuffle_partitions=16)
+    spark = get_spark(app_name="oracle-sweep")
     queries, oracles = entry.queries(), entry.oracle_sql()
     if len(sys.argv) > 2:
         if sys.argv[2] == "window":
@@ -57,9 +62,14 @@ def main() -> None:
             sdf = fn(spark, sf_dir).toPandas()
         except Exception as ex:  # noqa: BLE001
             bad.append((name, f"spark error: {ex!r}"[:200]))
+            print(f"{name}: SPARK ERROR ({time.time() - t0:.1f}s)", flush=True)
             continue
         if name not in oracles:
             n_rows_only += 1
+            print(
+                f"{name}: rows-only, {len(sdf)} rows ({time.time() - t0:.1f}s)",
+                flush=True,
+            )
             continue
         odf = con.execute(oracles[name]).fetchdf()
         # same normalization as tests/oracle.py (ADVICE r2): raw str()
@@ -70,10 +80,11 @@ def main() -> None:
         o_vals = _norm_rows(list(odf.columns), odf.itertuples(index=False, name=None))
         if s_cols == o_cols and s_vals == o_vals:
             n_ok += 1
+            outcome = "ok"
         else:
             bad.append((name, "mismatch"))
-        print(f"{name}: {'ok' if (name, 'mismatch') not in bad else 'MISMATCH'} "
-              f"({time.time() - t0:.1f}s)", flush=True)
+            outcome = "MISMATCH"
+        print(f"{name}: {outcome} ({time.time() - t0:.1f}s)", flush=True)
     print(f"\n{n_ok} oracle-green, {n_rows_only} rows-only, {len(bad)} bad at {sf_dir}")
     for name, why in bad:
         print(f"  BAD {name}: {why}")
